@@ -65,6 +65,19 @@ def test_delete_by_keys_prunes_buckets(spark, table):
     assert "k7" not in ids and len(ids) == 99
 
 
+def test_keys_not_covering_bucket_by_raise_value_error(spark, table):
+    """Caller-supplied keys must include bucket_by (rows with equal keys
+    must share a bucket); the check is a ValueError, so it survives
+    `python -O`, and nothing is committed."""
+    version = table.current_version()
+    src = spark.createDataFrame([("k3", 3)], "id string, v int")
+    with pytest.raises(ValueError, match="merge keys .* must cover bucket_by"):
+        table.merge(src, keys=["v"])
+    with pytest.raises(ValueError, match="delete keys .* must cover bucket_by"):
+        table.delete_by_keys(src, keys=["v"])
+    assert table.current_version() == version
+
+
 def test_predicate_delete_full_rewrite_correct(spark, table):
     table.delete(F.col("v") >= 50)
     got = {r.v for r in table.read().collect()}

@@ -47,17 +47,8 @@ def test_presample_equals_exact(skewed):
     assert a == b
 
 
-def test_presample_undershoot_raises_not_biases(skewed):
-    """A deliberately thin overshoot margin must raise, never silently
-    return fewer/biased rows."""
-    with pytest.raises(ValueError, match="undershoot"):
-        splits.cap_per_group(
-            skewed, "source", n=150, presample=True, overshoot_sigmas=-11.0
-        ).collect()
-
-
 def test_plan_presample_equals_exact_and_runs_no_construct_jobs(spark, skewed):
-    """r16: presample='plan' (thresholds broadcast-joined from the counts
+    """presample=True (thresholds broadcast-joined from the counts
     aggregate, bias guard an in-plan one-row raise_error) must keep the
     exact path's rows AND ranks, and must not run any Spark job while
     BUILDING the frame — the property that lets the registry serve the
@@ -68,7 +59,7 @@ def test_plan_presample_equals_exact_and_runs_no_construct_jobs(spark, skewed):
     }
     tracker = spark.sparkContext.statusTracker()
     before = tracker.getJobIdsForGroup(None) or []
-    planned = splits.cap_per_group(skewed, "source", n=5, presample="plan")
+    planned = splits.cap_per_group(skewed, "source", n=5, presample=True)
     after = tracker.getJobIdsForGroup(None) or []
     assert len(after) == len(before), "plan presample must not run construct jobs"
     got = {(r["doc_id"], r["cap_rank"]) for r in planned.collect()}
@@ -76,11 +67,11 @@ def test_plan_presample_equals_exact_and_runs_no_construct_jobs(spark, skewed):
 
 
 def test_plan_presample_undershoot_raises_at_action_not_biases(skewed):
-    """The plan-mode guard keeps the never-silently-bias contract: a
+    """The in-plan guard keeps the never-silently-bias contract: a
     deliberately thin overshoot margin fails the ACTION (raise_error in
     the broadcast guard row), never returns fewer/biased rows."""
     df = splits.cap_per_group(
-        skewed, "source", n=150, presample="plan", overshoot_sigmas=-11.0
+        skewed, "source", n=150, presample=True, overshoot_sigmas=-11.0
     )  # construction itself must not raise (pure plan)
     with pytest.raises(Exception, match="undershoot"):
         df.collect()
@@ -91,7 +82,7 @@ def test_plan_presample_handles_null_group(spark):
     df = spark.createDataFrame(rows, "doc_id long, source string")
     a = sorted(
         (r["doc_id"], r["cap_rank"])
-        for r in splits.cap_per_group(df, "source", n=5, presample="plan").collect()
+        for r in splits.cap_per_group(df, "source", n=5, presample=True).collect()
     )
     b = sorted(
         (r["doc_id"], r["cap_rank"])
@@ -100,9 +91,25 @@ def test_plan_presample_handles_null_group(spark):
     assert a == b and len(a) == 10
 
 
+def test_presample_margin_keeping_no_rows_raises_at_construction(skewed):
+    """n + overshoot_sigmas * sqrt(n) + 10 <= 0 would make every
+    threshold empty; AQE may then prune the empty side before the
+    in-plan guard runs and return an empty frame, so construction
+    rejects it."""
+    with pytest.raises(ValueError, match="keeps no rows"):
+        splits.cap_per_group(
+            skewed.filter(F.col("source") == "big"),
+            "source",
+            n=5,
+            presample=True,
+            overshoot_sigmas=-10.0,
+        )
+
+
 def test_presample_rejects_unknown_mode(skewed):
-    with pytest.raises(ValueError, match="presample"):
-        splits.cap_per_group(skewed, "source", n=5, presample="yes")
+    for mode in ("yes", "plan"):
+        with pytest.raises(ValueError, match="presample"):
+            splits.cap_per_group(skewed, "source", n=5, presample=mode)
 
 
 def test_cap_is_stable_under_repartition(skewed):

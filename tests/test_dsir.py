@@ -1,10 +1,9 @@
 """DSIR importance resampling (operators/dsir.py, arXiv:2302.03169).
 
-Pins: fit math against a from-scratch python oracle on a tiny corpus,
-inline-vs-join serving parity, empty/NULL-text weight-0 contract, the
-zero-shuffle plan of inline serving, Gumbel-top-k selection against a
-python oracle, and the registered DuckDB twin on degenerate rows the sf
-fixture lacks.
+Pins: fit math against a from-scratch python oracle on a tiny corpus
+(per-doc weights and the per-bucket lambda table), the empty/NULL-text
+weight-0 contract, Gumbel-top-k selection against a python oracle, and
+the registered DuckDB twin on degenerate rows the sf fixture lacks.
 """
 
 from __future__ import annotations
@@ -48,13 +47,14 @@ def _bucket(g: str) -> int:
     return int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % B
 
 
-def _py_weights() -> dict[int, float]:
+def _py_lambda(raw_texts, target_texts) -> dict[int, int]:
+    """{bucket: lambda_micro} for every bucket observed on either side."""
     raw_counts: dict[int, int] = {}
     tgt_counts: dict[int, int] = {}
-    for _, t in RAW:
+    for t in raw_texts:
         for g in _grams(t):
             raw_counts[_bucket(g)] = raw_counts.get(_bucket(g), 0) + 1
-    for t in TARGET:
+    for t in target_texts:
         for g in _grams(t):
             tgt_counts[_bucket(g)] = tgt_counts.get(_bucket(g), 0) + 1
     t_raw, t_tgt = sum(raw_counts.values()), sum(tgt_counts.values())
@@ -64,6 +64,11 @@ def _py_weights() -> dict[int, float]:
             (raw_counts.get(b, 0) + ALPHA) / (t_raw + ALPHA * B)
         )
         lam[b] = int(round(round(v, 6) * 1_000_000))
+    return lam
+
+
+def _py_weights() -> dict[int, float]:
+    lam = _py_lambda([t for _, t in RAW], TARGET)
     out = {}
     for i, t in RAW:
         out[i] = sum(lam.get(_bucket(g), 0) for g in _grams(t)) / 1_000_000
@@ -84,15 +89,6 @@ def test_weights_match_python_oracle(frames):
     assert got == _py_weights()
 
 
-def test_inline_and_join_serving_agree(frames):
-    raw, tgt = frames
-    a = dsir.importance_weights(raw, tgt, num_buckets=B, serve="inline")
-    b = dsir.importance_weights(raw, tgt, num_buckets=B, serve="join")
-    assert {r["doc_id"]: r["logw"] for r in a.collect()} == {
-        r["doc_id"]: r["logw"] for r in b.collect()
-    }
-
-
 def test_gramless_docs_get_zero(frames):
     raw, tgt = frames
     w = dsir.importance_weights(raw, tgt, num_buckets=B)
@@ -107,13 +103,6 @@ def test_target_like_docs_score_higher(frames):
     raw, tgt = frames
     got = {r["doc_id"]: r["logw"] for r in dsir.importance_weights(raw, tgt, num_buckets=B).collect()}
     assert min(got[0], got[2]) > max(got[1], got[3])
-
-
-def test_inline_serving_plan_has_no_exchange(frames):
-    raw, tgt = frames
-    w = dsir.importance_weights(raw, tgt, num_buckets=B, serve="inline")
-    plan = w._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 def test_gumbel_resample_matches_python_oracle(frames):
@@ -193,23 +182,31 @@ def test_flagged_fit_equals_two_frame_fit(spark, frames):
 
 
 def test_plan_fit_lambda_table_bit_equals_dict_fit(spark, frames):
-    """r16: the in-plan flagged fit (fit_lambda_flagged_plan — no collect
-    at construction, the fit executes inside the serve's job) must emit
-    the SAME (bucket, lam_micro) table, value for value, as the dict fit
-    it replaced — the micro units are what both the per-doc sums and the
-    DuckDB twin are built on, so per-bucket equality here is the whole
-    cross-implementation contract. Also pins that constructing the plan
-    runs ZERO Spark jobs (the property that makes dsir memoizable)."""
-    raw, _ = frames
-    flag = F.col("doc_id").isin(0, 2, 6)
-    want = dsir.fit_lambda_flagged(raw, flag, num_buckets=B, alpha=ALPHA)
+    """fit_lambda (a lazy plan — no collect at construction, the fit
+    executes inside the serve's job) must emit the SAME (bucket,
+    lam_micro) table, value for value, as the python oracle's {bucket:
+    lambda_micro} dict, for both a separate target frame and a flagged
+    in-corpus subset. The micro units are what both the per-doc sums and
+    the DuckDB twin are built on, so per-bucket equality here is the
+    whole cross-implementation contract. Also pins that constructing the
+    plan runs ZERO Spark jobs (the property that makes dsir memoizable)."""
+    raw, tgt = frames
+    texts = dict(RAW)
+    cases = [
+        ({"target": tgt}, _py_lambda(texts.values(), TARGET)),
+        (
+            {"target_flag": F.col("doc_id").isin(0, 2, 6)},
+            _py_lambda(texts.values(), [texts[i] for i in (0, 2, 6)]),
+        ),
+    ]
     tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None) or []
-    plan = dsir.fit_lambda_flagged_plan(raw, flag, num_buckets=B, alpha=ALPHA)
-    after = tracker.getJobIdsForGroup(None) or []
-    assert len(after) == len(before), "plan fit must not run jobs while building"
-    got = {int(r["bucket"]): int(r["lam_micro"]) for r in plan.collect()}
-    assert got == want
+    for kwargs, want in cases:
+        before = tracker.getJobIdsForGroup(None) or []
+        plan = dsir.fit_lambda(raw, num_buckets=B, alpha=ALPHA, **kwargs)
+        after = tracker.getJobIdsForGroup(None) or []
+        assert len(after) == len(before), "plan fit must not run jobs while building"
+        got = {int(r["bucket"]): int(r["lam_micro"]) for r in plan.collect()}
+        assert got == want, sorted(kwargs)
 
 
 def test_target_and_flag_are_exclusive(frames):

@@ -6,8 +6,7 @@ immutable lazy plan, so results are never cached. That is only sound
 when construction itself runs no Spark jobs: a query that fits, probes,
 or writes while constructing must be excluded (_EAGER_CONSTRUCT) so
 every invocation re-runs that work. These tests make the classification
-a suite failure instead of a silent drift (tools/construct_jobs.py is
-the measurement twin).
+a suite failure instead of a silent drift.
 """
 
 from __future__ import annotations

@@ -80,23 +80,3 @@ def test_stage_tags_are_mutually_independent(docs):
         for j in range(i + 1, 4):
             agree = sum(1 for a, b in zip(cols[i], cols[j]) if a == b)
             assert agree == 0, (i, j, agree)
-
-
-def test_presample_cap_handles_null_group(spark):
-    # round-7 ADVICE (low): presample built a map literal with a NULL key
-    # and crashed on any corpus with a NULL source
-    rows = [(i, None if i % 3 == 0 else "a", "t") for i in range(90)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = splits.cap_per_group(
-        df, "source", n=5, id_col="doc_id", seed=42, presample=True
-    )
-    got = {
-        r["source"]: r["c"]
-        for r in out.groupBy("source").agg(F.count("*").alias("c")).collect()
-    }
-    assert got == {None: 5, "a": 5}
-    # and the NULL group's kept set equals the exact path's
-    exact = splits.cap_per_group(df, "source", n=5, id_col="doc_id", seed=42)
-    assert sorted(r["doc_id"] for r in out.collect()) == sorted(
-        r["doc_id"] for r in exact.collect()
-    )

@@ -66,11 +66,13 @@ def test_corpus_reader_feeds_dedup(spark, tmp_path):
 
 
 def test_exploded_shingles_matches_hof_form(spark):
-    """exploded_shingles (posexplode + lead window, the fast codegen form)
-    must emit the exact (id, ng) multiset of explode(shingles(...)) across
-    the edge cases its filter encodes: normal docs, a doc of exactly n
-    words, shorter-than-n docs, single-word, empty text, whitespace-only,
-    and NULL text."""
+    """exploded_shingles (per-row get() + concat_ws assembly, the fast
+    codegen form) must emit exactly the rows of posexplode(shingles(...)),
+    the documented oracle definition — (id, _pos, ng) with with_pos=True,
+    the same (id, ng) multiset without — across the edge cases its
+    padding encodes: normal docs, a doc of exactly n words,
+    shorter-than-n docs, single-word, empty text, whitespace-only, NULL
+    text, repeated words and mixed tab/newline separators."""
     from pyspark.sql import functions as F
 
     from vector_search_ai_assistant_mongodbvcore_spark.functions.text import (
@@ -87,50 +89,18 @@ def test_exploded_shingles_matches_hof_form(spark):
         (6, "   "),
         (7, None),
         (8, "a a a a a a"),  # repeated words -> duplicate shingles kept
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    for n in (2, 5):
-        hof = (
-            df.select("doc_id", F.explode(shingles("text", n)).alias("ng"))
-            .groupBy("doc_id", "ng").count()
-        )
-        fast = exploded_shingles(df, "text", "doc_id", n).groupBy("doc_id", "ng").count()
-        sym_diff = hof.exceptAll(fast).unionByName(fast.exceptAll(hof)).collect()
-        assert sym_diff == [], f"n={n}: {sym_diff}"
-
-
-def test_exploded_shingles_rowwise_matches_windowed(spark):
-    """The r15 row-wise shingle assembler (get()+concat_ws per position,
-    no word-stream Exchange) must emit the exact (id, _pos, ng) ROW SET
-    of the r11 lead-window form on every edge: short/exact-n docs,
-    single word, empty, whitespace-only, NULL text, repeated words."""
-    from vector_search_ai_assistant_mongodbvcore_spark.functions.text import (
-        exploded_shingles,
-        exploded_shingles_windowed,
-    )
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "exactly five words right here"),
-        (3, "one two three"),
-        (4, "single"),
-        (5, ""),
-        (6, "   "),
-        (7, None),
-        (8, "a a a a a a"),
         (9, "Tabs\tand\nnewlines  mix"),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     for n in (2, 5, 8):
-        a = sorted(
-            exploded_shingles(df, "text", "doc_id", n, with_pos=True).collect()
+        hof = df.select(
+            "doc_id", F.posexplode(shingles("text", n)).alias("_pos", "ng")
         )
-        b = sorted(
-            exploded_shingles_windowed(
-                df, "text", "doc_id", n, with_pos=True
-            ).collect()
-        )
-        assert a == b, f"n={n}"
+        fast = exploded_shingles(df, "text", "doc_id", n, with_pos=True)
+        assert sorted(fast.collect()) == sorted(hof.collect()), f"n={n}"
+        assert sorted(exploded_shingles(df, "text", "doc_id", n).collect()) == sorted(
+            hof.select("doc_id", "ng").collect()
+        ), f"n={n}"
 
 
 def test_stopword_and_wordlen_codegen_forms_match_hof(spark):

@@ -62,11 +62,10 @@ def main() -> None:
         "exact_dedup", "bm25_score", "bm25_index_build", "bm25_index_search",
         "chunking", "minhash_band_pairs", "ngram_jaccard", "decontam",
         "pack_sequences", "dsir_weights", "vocab_top", "domain_audit",
-        "cap_per_source", "cap_per_source_plan", "remove_spans",
+        "cap_per_source", "remove_spans",
         "mask_contam", "bpe_encode",
         "component_dedup", "export_bylang", "export_bylang_serial",
         "kmv_distinct", "dq_contract", "top_frequent",
-        "dsir_weights_flagged",
     }
     _EV_OPS = {"asof_attribution"}
     _VEC_OPS = {
@@ -155,16 +154,6 @@ def main() -> None:
         "cap_per_source": lambda d: cap_per_group(
             d, "source", n=100, presample=True
         ).write.format("noop").mode("overwrite").save(),
-        # r16 in-plan presample (thresholds + bias guard inside the plan)
-        "cap_per_source_plan": lambda d: cap_per_group(
-            d, "source", n=100, presample="plan"
-        ).write.format("noop").mode("overwrite").save(),
-        # r16 in-plan flagged fit (fit subtree executes inside the serve
-        # job) — the shape the dsir_importance_weights gate query runs
-        "dsir_weights_flagged": lambda d: importance_weights(
-            d, num_buckets=10_000,
-            target_flag=F.col("source").isin("src0", "src1", "src2"),
-        ).select("doc_id", "logw").write.format("noop").mode("overwrite").save(),
         # replication multiplies every n-gram's occurrence count Nx — the
         # worst case for the per-ngram min aggregate AND the per-doc
         # covered-position rollup (every copy's spans are duplicated)

@@ -246,49 +246,6 @@ def shingles(col: Column | str, n: int = 5) -> Column:
     )
 
 
-def exploded_shingles_windowed(df, text_col: str, id_col: str, n: int = 5, with_pos: bool = False):
-    """(id_col, ng) rows of word n-gram shingles — semantically identical to
-    `explode(shingles(text_col, n))` but ~4x faster at corpus scale: the
-    words are posexploded ONCE and each shingle is assembled from n-1
-    lead() window columns plus concat_ws — plain codegen-able expressions
-    instead of an interpreted transform(slice+array_join) per position.
-    The window's (id) hash-partitioning is exactly what the downstream
-    minhash/inverted-index aggregation needs, so the shuffle is not extra.
-
-    Edge parity with shingles(), asserted in tests: a doc of <= n words
-    yields its full text as ONE shingle (lead() past the end is NULL and
-    concat_ws skips NULLs; only pos 0 survives the filter); empty or
-    whitespace-only text yields the single empty shingle "" (the empty
-    word array is replaced by [""] before the explode); NULL text yields
-    no rows in both forms (explode of NULL)."""
-    from pyspark.sql import Window
-
-    w = words(F.lower(F.col(text_col)))
-    padded = F.when(F.size(w) == 0, F.array(F.lit(""))).otherwise(w)
-    pw = df.select(F.col(id_col), F.posexplode(padded).alias("_pos", "_w"))
-    ordered = Window.partitionBy(id_col).orderBy("_pos")
-    whole = Window.partitionBy(id_col)
-    parts = [F.col("_w")] + [F.lead("_w", i).over(ordered) for i in range(1, n)]
-    out = (
-        pw.select(
-            F.col(id_col),
-            F.col("_pos"),
-            F.concat_ws(" ", *parts).alias("ng"),
-            F.count(F.lit(1)).over(whole).alias("_k"),
-        )
-        .filter(
-            (F.col("_pos") <= F.col("_k") - n)
-            | ((F.col("_k") <= n) & (F.col("_pos") == 0))
-        )
-    )
-    if with_pos:
-        return out.select(id_col, "_pos", "ng")
-    return out.select(id_col, "ng")
-
-
-_SHINGLE_ROWWISE = True  # r15 A/B switch; see exploded_shingles
-
-
 def exploded_shingles(
     df,
     text_col: str,
@@ -314,27 +271,17 @@ def exploded_shingles(
     edge (<= n words -> the whole text as ONE shingle) for free; empty /
     whitespace-only text yields the single "" shingle via the [""]
     padding; NULL text yields no rows (the array is NULL under the
-    explode). Bit-parity with the r11 windowed form is pinned in tests.
+    explode). Row parity with posexplode(shingles(text, n)) is pinned in
+    tests.
 
-    Why not the lead()-window form (exploded_shingles_windowed, kept for
-    reference/A-B): the window costs an Exchange + Sort of the ENTIRE
-    exploded word stream before a single shingle exists. That exchange is
-    pure overhead for every consumer that does NOT aggregate by id —
-    ngram_jaccard_pairs and remove_duplicated_spans immediately
-    re-shuffle by ng — and for minhash it defeats map-side partial
-    aggregation: with per-row generation each document's shingles stay in
-    one scan partition, so the min() partials collapse to ONE row per doc
-    BEFORE the exchange, and the groupBy ships |docs| rows instead of the
-    word stream. The old HOF chain this module's r11 comment measured 4x
-    slow built a sliced array + array_join per position; the get() form
-    allocates nothing per position. Measured at sf0.1 (r15):
-    minhash/ngram/spans all faster, plan one Exchange shorter each.
+    Per-row generation needs no Exchange: each document's shingles stay
+    in its scan partition, so consumers that re-shuffle by ng pay one
+    exchange, and minhash's min() partials collapse to one row per doc
+    before its groupBy. The get() form allocates nothing per position,
+    unlike shingles()' slice + array_join.
     """
     if distinct_per_doc and with_pos:
         raise ValueError("distinct_per_doc collapses positions; drop with_pos")
-    if not _SHINGLE_ROWWISE:
-        assert not distinct_per_doc  # A/B switch predates the r16 option
-        return exploded_shingles_windowed(df, text_col, id_col, n, with_pos)
     w = words(F.lower(F.col(text_col)))
     padded = F.when(F.size(w) == 0, F.array(F.lit(""))).otherwise(w)
     gets = ", ".join(f"get(_pw, i + {j})" for j in range(n))

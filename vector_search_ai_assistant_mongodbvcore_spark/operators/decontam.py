@@ -11,10 +11,9 @@ Scale design — the asymmetry IS the plan:
   * The benchmark side is tiny (eval suites are MBs; the corpus is 100 TB),
     so its distinct n-gram set is collected into a BROADCAST hash join —
     the corpus side streams through map-side, no shuffle for the probe.
-  * The corpus side reuses exploded_shingles() (codegen lead()-window
-    assembly). Its window shuffle on id is the ONLY wide exchange, and the
-    per-doc hit aggregation groups on the same id key, so Catalyst plans
-    zero additional Exchange for the count.
+  * The corpus side reuses exploded_shingles() (per-row assembly, no
+    exchange), so the per-doc hit aggregation's shuffle on id is the
+    ONLY wide exchange.
   * Both `hits` (distinct overlapping n-grams) and `n_ngrams` (distinct
     n-grams in the doc) come out of ONE aggregation pass — the match flag
     is a column from the broadcast LEFT join, not a second scan.

@@ -276,11 +276,11 @@ def _minhash_agg(
     with a mutable buffer (string mins force SortAggregate — per-partition
     sorts of the exploded shingles).
 
-    Plan shape: exploded_shingles (posexplode words + lead() window — the
-    codegen-able form; the array-building HOF chain was 4x slower) ->
-    codegen'd md5 projection -> groupBy(id) with min() aggregates. The
-    window already hash-partitions on id, so the aggregation reuses that
-    exchange and the min() combine collapses each doc to one row in place."""
+    Plan shape: exploded_shingles (per-row shingle assembly, no
+    exchange) -> codegen'd md5 projection -> groupBy(id) with min()
+    aggregates. Each doc's shingles stay in one scan partition, so the
+    map-side min() partials collapse each doc to one row before the
+    groupBy's single exchange."""
     toks = exploded_shingles(df, text_col, id_col, shingle_size)
     # F.expr strings: one sqlParser round-trip per column instead of ~8
     # py4j calls each — identical expression trees, measured ~0.4 s less

@@ -21,11 +21,11 @@ the operator follows the published recipe:
 Scale shape (the part that must survive 100 TB):
   * the per-bucket count tables are bounded by `num_buckets` rows no
     matter the corpus size — map-side-combined hash aggregates.
-  * fit() therefore ends with a lambda table small enough to collect;
-    serving broadcast-joins it against the exploded grams (codegen, one
-    map-side-combinable keyed shuffle) or — serve='inline' — inlines it
-    as a dense literal array for a strictly zero-shuffle scoring plan;
-    see importance_weights for the measured tradeoff.
+  * fit_lambda() is ONE bounded aggregate over the raw corpus and the
+    target together, and stays a lazy plan: nothing is collected to the
+    driver. Serving broadcast-joins the lambda table against the exploded
+    grams (codegen, one map-side-combinable keyed shuffle), so the fit
+    executes inside the serving job.
   * Gumbel top-k is `TakeOrderedAndProject` — no global sort.
 
 Determinism (so the DuckDB oracle hash-matches): gram hashing is
@@ -46,8 +46,6 @@ __all__ = [
     "gram_array",
     "hashed_gram_buckets",
     "fit_lambda",
-    "fit_lambda_flagged",
-    "fit_lambda_flagged_plan",
     "importance_weights",
     "gumbel_resample",
 ]
@@ -108,135 +106,59 @@ def hashed_gram_buckets(
 
 def fit_lambda(
     df: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    num_buckets: int = 10_000,
-    alpha: float = 1.0,
-) -> dict[int, int]:
-    """Fit the two bucket LMs and return {bucket: lambda_micro} — the
-    rounded log-likelihood-ratio per bucket in 1e-6 units, for buckets
-    observed on either side (unseen buckets never occur in any doc).
-
-    Both count tables are bounded by `num_buckets` rows; collecting the
-    joined result is a driver transfer of <= num_buckets (bucket, long)
-    pairs regardless of corpus size.
-    """
-    def _spread(frame: DataFrame) -> DataFrame:
-        # The fit hashes every gram of its input; if the source arrives in
-        # fewer partitions than cores (single parquet file), fan the
-        # projected text out first — the shuffle moves only the text
-        # column and the md5 work is what dominates. At cluster scale the
-        # input is already wide and this is a no-op.
-        p = frame.sparkSession.sparkContext.defaultParallelism
-        return frame.repartition(p) if frame.rdd.getNumPartitions() < p else frame
-
-    raw_counts = (
-        hashed_gram_buckets(_spread(df.select(F.lit(0).alias("_i"), text_col)), "_i", text_col, num_buckets)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c_raw"))
-    )
-    tgt_counts = (
-        hashed_gram_buckets(_spread(target.select(F.lit(0).alias("_i"), text_col)), "_i", text_col, num_buckets)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c_tgt"))
-    )
-    joined = raw_counts.join(tgt_counts, "bucket", "outer").select(
-        "bucket",
-        F.coalesce("c_raw", F.lit(0)).alias("c_raw"),
-        F.coalesce("c_tgt", F.lit(0)).alias("c_tgt"),
-    )
-    rows = joined.collect()
-    t_raw = sum(r["c_raw"] for r in rows)
-    t_tgt = sum(r["c_tgt"] for r in rows)
-    denom_raw = float(t_raw) + alpha * num_buckets
-    denom_tgt = float(t_tgt) + alpha * num_buckets
-
-    import math
-
-    out: dict[int, int] = {}
-    for r in rows:
-        lam = math.log((r["c_tgt"] + alpha) / denom_tgt) - math.log(
-            (r["c_raw"] + alpha) / denom_raw
-        )
-        out[int(r["bucket"])] = int(round(round(lam, _LAM_DECIMALS) * _MICRO))
-    return out
-
-
-def fit_lambda_flagged(
-    df: DataFrame,
-    is_target: Column,
-    text_col: str = "text",
-    num_buckets: int = 10_000,
-    alpha: float = 1.0,
-) -> dict[int, int]:
-    """fit_lambda for the in-corpus-target case (target = the rows where
-    `is_target` is true) in ONE corpus pass instead of two: each gram row
-    carries the flag, and a single bounded aggregate yields both the raw
-    count (all rows) and the target count (flagged rows) per bucket.
-    Identical lambda to fit_lambda(df, df.filter(is_target)) —
-    parity-tested."""
-    src = df.select(is_target.cast("int").alias("_t"), text_col)
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < p:
-        src = src.repartition(p)  # same local fan-out as fit_lambda._spread
-    staged = src.select(
-        "_t", _doc_words(text_col).alias("_w")
-    ).select(
-        "_t", F.explode(gram_array(F.col("_w"), num_buckets)).alias("bucket")
-    )
-    rows = (
-        staged.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c_raw"), F.sum("_t").alias("c_tgt"))
-        .collect()
-    )
-    t_raw = sum(r["c_raw"] for r in rows)
-    t_tgt = sum(r["c_tgt"] for r in rows)
-    denom_raw = float(t_raw) + alpha * num_buckets
-    denom_tgt = float(t_tgt) + alpha * num_buckets
-
-    import math
-
-    out: dict[int, int] = {}
-    for r in rows:
-        lam = math.log((r["c_tgt"] + alpha) / denom_tgt) - math.log(
-            (r["c_raw"] + alpha) / denom_raw
-        )
-        out[int(r["bucket"])] = int(round(round(lam, _LAM_DECIMALS) * _MICRO))
-    return out
-
-
-def fit_lambda_flagged_plan(
-    df: DataFrame,
-    is_target: Column,
+    target: DataFrame | None = None,
+    target_flag: Column | None = None,
     text_col: str = "text",
     num_buckets: int = 10_000,
     alpha: float = 1.0,
 ) -> DataFrame:
-    """fit_lambda_flagged as a PURE PLAN — ["bucket" long, "lam_micro"
-    long], no collect, no driver loop (r16, guide §5: the dict fit ran a
-    full gram-aggregate job + a 10k-row collect + createDataFrame at
-    CONSTRUCTION time on the dsir_importance_weights query path; as a
-    plan the fit executes inside the serve's own job, where its gram scan
-    overlaps the scoring scan, and the query becomes a pure plan-builder).
+    """Fit the two bucket LMs as a lazy plan: ["bucket" long, "lam_micro"
+    long], the rounded log-likelihood-ratio per bucket in 1e-6 units, for
+    buckets observed on either side (unseen buckets never occur in any
+    doc). Nothing is collected; the fit executes inside whatever action
+    consumes the table. On a scan input construction runs no Spark job;
+    on an input that already has an exchange, the under-parallel guard's
+    partition count executes the input's AQE stages.
 
-    lambda_micro per bucket is BIT-IDENTICAL to the Python fit: the
-    totals ride a one-row broadcast, the denominators add the same
-    python-float `alpha * num_buckets` literal, and log/round run on the
-    same IEEE doubles — verified exhaustively (0 mismatches over the
-    three gate corpora and 600k fuzzed count pairs across denominator
-    regimes; sub-ulp libm-vs-JVM log differences are quantized away by
-    the round-to-1e-6) and pinned per-value in tests/test_dsir.py."""
-    src = df.select(is_target.cast("int").alias("_t"), text_col)
+    Pass exactly one of `target` (a separate target-domain frame; only
+    its `text_col` is read) or `target_flag` (a boolean Column over `df`
+    marking an in-corpus target subset). Every gram row carries two
+    flags, (_r, _t): raw rows are (1, 0) and separate target rows (0, 1)
+    in one union, or (1, flag) for a flagged subset. One aggregate then
+    gives c_raw = sum(_r) and c_tgt = sum(_t) per bucket, so the corpus
+    is read once either way. The count table is bounded by `num_buckets`
+    rows regardless of corpus size.
+
+    lambda_micro per bucket is bit-identical to a Python float fit over
+    the same counts: the totals ride a global window, the denominators
+    add the same python-float `alpha * num_buckets` literal, and log and
+    round run on the same IEEE doubles (sub-ulp libm-vs-JVM log
+    differences are quantized away by the round to 1e-6); pinned
+    per-bucket in tests/test_dsir.py."""
+    if (target is None) == (target_flag is None):
+        raise ValueError("pass exactly one of target / target_flag")
+    if target_flag is not None:
+        src = df.select(
+            F.lit(1).alias("_r"), target_flag.cast("int").alias("_t"), text_col
+        )
+    else:
+        src = df.select(F.lit(1).alias("_r"), F.lit(0).alias("_t"), text_col).union(
+            target.select(F.lit(0).alias("_r"), F.lit(1).alias("_t"), text_col)
+        )
+    # the fit hashes every gram of its input; if the source arrives in
+    # fewer partitions than cores (single parquet file), fan the projected
+    # text out first — the md5 work is what dominates. At cluster scale
+    # the input is already wide and this is a no-op.
     p = df.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < p:
-        src = src.repartition(p)  # same local fan-out as fit_lambda._spread
+        src = src.repartition(p)
     staged = src.select(
-        "_t", _doc_words(text_col).alias("_w")
+        "_r", "_t", _doc_words(text_col).alias("_w")
     ).select(
-        "_t", F.explode(gram_array(F.col("_w"), num_buckets)).alias("bucket")
+        "_r", "_t", F.explode(gram_array(F.col("_w"), num_buckets)).alias("bucket")
     )
     counts = staged.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("c_raw"), F.sum("_t").alias("c_tgt")
+        F.sum("_r").alias("c_raw"), F.sum("_t").alias("c_tgt")
     )
     # the totals ride a GLOBAL WINDOW over the bounded counts frame
     # (<= num_buckets rows by construction, one window task) rather than
@@ -276,83 +198,25 @@ def importance_weights(
     text_col: str = "text",
     num_buckets: int = 10_000,
     alpha: float = 1.0,
-    serve: str = "join",
     target_flag: Column | None = None,
 ) -> DataFrame:
     """Attach the DSIR log importance weight to every row of `df`.
 
     `target` is the (usually much smaller) target-domain sample; only its
     `text_col` is read. When the target is a SUBSET OF THE CORPUS, pass
-    `target_flag` (a boolean Column over df) instead: the fit then makes
-    ONE corpus pass (fit_lambda_flagged) rather than two, with identical
-    lambda. Output: df columns + `logw` (double). Docs with no grams
-    (empty/NULL text) get logw = 0.0 — an empty product, i.e. "no
-    evidence either way".
+    `target_flag` (a boolean Column over df) instead; see fit_lambda.
+    Output: df columns + `logw` (double). Docs with no grams (empty/NULL
+    text) get logw = 0.0 — an empty product, i.e. "no evidence either
+    way".
 
-    Two serving plans, identical results (parity-tested):
-
-    serve='join' (default, the throughput path): exploded grams
-    BROADCAST-join the <= num_buckets-row lambda table (codegen hash
-    join, no shuffle for the probe) and re-aggregate per doc — one
-    map-side-combinable keyed shuffle. All codegen: measured 3.5x faster
-    than 'inline' at sf0.1 despite the extra exchange, because...
-
-    serve='inline': the lambda table inlined as ONE dense literal array
-    indexed by bucket, each doc scored by F.aggregate over its gram
-    array — genuinely zero-shuffle and the right shape when the corpus
-    arrives pre-partitioned for a downstream stage that must preserve
-    it, BUT Spark evaluates aggregate()'s lambda interpreted per
-    element (~10x the per-gram cost of the codegen join). Pick it for
-    plan shape, not speed. (A literal MAP instead of the dense array
-    would add a GetMapValue LINEAR scan per gram — measured 8x worse
-    again; the dense-array O(1) lookup is load-bearing.)
+    Serving: exploded grams BROADCAST-join the <= num_buckets-row lambda
+    table (codegen hash join, no shuffle for the probe) and re-aggregate
+    per doc — one map-side-combinable keyed shuffle. The fit and the
+    serve compose into ONE lazy plan whose fit re-executes from the
+    source on every action, with its gram scan overlapping the scoring
+    scan inside one job.
     """
-    if (target is None) == (target_flag is None):
-        raise ValueError("pass exactly one of target / target_flag")
-    if target_flag is not None and serve == "join":
-        # flagged fit + join serve compose into ONE lazy plan (r16): the
-        # lambda table is built by fit_lambda_flagged_plan (bit-identical
-        # micro units, no collect/driver loop) and broadcast below — the
-        # whole query is then a pure plan-builder whose fit executes from
-        # the source on every action, with its gram scan overlapping the
-        # scoring scan inside one job. inline serving still needs the
-        # literal array, i.e. the dict fit.
-        lam_df = fit_lambda_flagged_plan(
-            df, target_flag, text_col, num_buckets, alpha
-        )
-        return _serve_join(df, lam_df, id_col, text_col, num_buckets)
-    if target_flag is not None:
-        lam = fit_lambda_flagged(df, target_flag, text_col, num_buckets, alpha)
-    else:
-        lam = fit_lambda(df, target, text_col, num_buckets, alpha)
-
-    if serve == "inline":
-        staged = df.withColumn("_dsir_w", _doc_words(text_col))
-        if lam:
-            dense = [0] * num_buckets
-            for b, m in lam.items():
-                dense[b] = m
-            lam_arr = F.lit(dense)  # one Literal node, not 2B child exprs
-            micro_sum = F.aggregate(
-                gram_array(F.col("_dsir_w"), num_buckets),
-                F.lit(0).cast("long"),
-                # element_at is 1-based; bucket is in [0, num_buckets)
-                lambda acc, b: acc
-                + F.element_at(lam_arr, (b + 1).cast("int")).cast("long"),
-            )
-        else:
-            micro_sum = F.lit(0).cast("long")
-        return staged.withColumn(
-            "logw", (micro_sum.cast("double") / F.lit(float(_MICRO)))
-        ).drop("_dsir_w")
-
-    if serve != "join":
-        raise ValueError(f"serve must be 'inline' or 'join', got {serve!r}")
-
-    spark = df.sparkSession
-    lam_df = spark.createDataFrame(
-        [(b, m) for b, m in sorted(lam.items())], "bucket long, lam_micro long"
-    )
+    lam_df = fit_lambda(df, target, target_flag, text_col, num_buckets, alpha)
     return _serve_join(df, lam_df, id_col, text_col, num_buckets)
 
 
@@ -363,9 +227,7 @@ def _serve_join(
     text_col: str,
     num_buckets: int,
 ) -> DataFrame:
-    """The serve='join' scoring tail over a ["bucket", "lam_micro"]
-    lambda frame (a local literal frame from the dict fit, or
-    fit_lambda_flagged_plan's lazy aggregate)."""
+    """The scoring tail over fit_lambda's ["bucket", "lam_micro"] frame."""
     # same under-partitioned guard as the fit: the gram explode + md5 is
     # CPU-bound, and a single-row-group parquet file arrives as ONE task
     probe = df.select(id_col, text_col)

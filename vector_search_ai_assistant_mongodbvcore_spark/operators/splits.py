@@ -26,6 +26,8 @@ surface alongside dedup/similarity/text-quality.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -312,163 +314,102 @@ def cap_per_group(
 
     Scale: the exact path is one row_number window keyed by group — fine
     until one hot group owns a whole partition. `presample=True` bounds
-    the window's input first: per-group counts (a bounded aggregate)
-    pick a bucket-threshold keep-rate of ~(n + overshoot sigmas) rows,
-    rows above the threshold are dropped BEFORE the window, so each
-    group's window partition holds ~n rows regardless of group size.
-    Because the prefilter keeps exactly the SMALLEST buckets, the
-    surviving top-n equals the global top-n whenever >= min(n, count)
-    rows survive — guaranteed here by a driver-side check that raises
-    (deterministically, same seed) if the overshoot margin was too thin,
-    rather than silently returning a biased sample. At
-    overshoot_sigmas=6 the failure probability per group is ~1e-9.
-
-    `presample="plan"` (r16) is the same presample algorithm as a PURE
-    PLAN: the per-group counts feed the threshold as a broadcast-joined
-    column instead of a collected dict, and the bias guard rides the
-    plan as a one-row broadcast reduction that `raise_error`s AT ACTION
-    TIME on undershoot (same never-silently-bias contract; the
-    exception is Spark's, raised by whichever action executes the
-    plan, instead of a construct-time ValueError). Same kept rows —
-    the output is invariant to the exact threshold value as long as the
-    guard holds, and the guard side reduces over the COUNTS frame (which
-    has every group), so a group whose rows are all filtered out still
-    fails loudly. No collect, no construct-time jobs: the caller can
-    prepare the frame once and re-execute it, and each execution
-    re-derives thresholds from the source.
+    the window's input first: per-group counts (a bounded aggregate,
+    broadcast-joined back as a threshold column) pick a bucket-threshold
+    keep-rate of ~(n + overshoot sigmas) rows, and rows above the
+    threshold are dropped BEFORE the window, so each group's window
+    partition holds ~n rows regardless of group size. Because the
+    prefilter keeps exactly the SMALLEST buckets, the surviving top-n
+    equals the global top-n whenever >= min(n, count) rows survive. A
+    bias guard rides the plan as a one-row broadcast reduction over the
+    COUNTS frame (which has every group, so a fully-filtered group still
+    counts) that `raise_error`s AT ACTION TIME on undershoot rather than
+    silently returning a biased sample; at overshoot_sigmas=6 the
+    failure probability per group is ~1e-9. A margin that keeps no rows
+    at all (n + overshoot_sigmas * sqrt(n) + 10 <= 0) is rejected at
+    construction, since AQE may prune an empty side before the guard
+    runs. No collect, no construct-time jobs: the caller can prepare the
+    frame once and re-execute it, and each execution re-derives the
+    thresholds from the source.
     """
     if n <= 0:
         raise ValueError(f"n must be positive, got {n}")
-    if presample not in (False, True, "plan"):
-        raise ValueError(f"presample must be False, True or 'plan', got {presample!r}")
+    if not isinstance(presample, bool):
+        raise ValueError(f"presample must be a bool, got {presample!r}")
     bucket = split_bucket(F.col(id_col), seed=seed, stage="cap")
     w = Window.partitionBy(group_col).orderBy(bucket.asc(), F.col(id_col).asc())
-
-    src = df
-    if presample == "plan":
-        import math as _math
-
-        want = float(n) + overshoot_sigmas * _math.sqrt(n) + 10.0
-        counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_c"))
-        thr = F.when(F.col("_c") <= n, F.lit(_BUCKETS)).otherwise(
-            F.least(
-                F.lit(_BUCKETS),
-                F.ceil(F.lit(want) / F.col("_c").cast("double") * _BUCKETS),
-            )
-        )
-        thr_frame = counts.select(
-            F.col(group_col).alias("_g"), F.col("_c"), thr.alias("_thr")
-        )
-        src = (
-            df.join(
-                F.broadcast(thr_frame),
-                df[group_col].eqNullSafe(thr_frame["_g"]),
-            )
-            .filter(bucket < F.col("_thr"))
-            .drop("_g", "_c", "_thr")
-        )
-        # bias guard, in-plan: every group must still supply min(n, count)
-        # rows. Reduced over the counts frame (left-joined to survivors, so
-        # a fully-filtered group shows up as 0, never silently vanishes)
-        # into ONE row that raises on undershoot; the output cross-joins
-        # that row broadcast, so any action on the result executes the
-        # guard. coalesce(..., 1): an empty input has no groups to bias.
-        surv = src.groupBy(group_col).agg(F.count(F.lit(1)).alias("_s")).select(
-            F.col(group_col).alias("_sg"), "_s"
-        )
-        ok = (
-            F.coalesce(F.col("_s"), F.lit(0)) >= F.least(F.lit(n), F.col("_c"))
-        )
-        guard = (
-            counts.join(
-                surv, counts[group_col].eqNullSafe(surv["_sg"]), "left"
-            )
-            .select(
-                F.coalesce(F.min(ok.cast("int")), F.lit(1)).alias("_all_ok"),
-                F.slice(
-                    F.collect_list(
-                        F.when(~ok, counts[group_col].cast("string"))
-                    ),
-                    1,
-                    10,
-                ).alias("_short"),
-            )
-            .select(
-                F.when(F.col("_all_ok") == 1, F.lit(1))
-                .otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "presample undershoot for groups "
-                            ),
-                            F.concat_ws(",", "_short"),
-                            F.lit("; raise overshoot_sigmas"),
-                        )
-                    )
-                )
-                .alias("_guard")
-            )
-        )
-        capped = (
-            src.withColumn("cap_rank", F.row_number().over(w))
+    if not presample:
+        return (
+            df.withColumn("cap_rank", F.row_number().over(w))
             .filter(F.col("cap_rank") <= n)
         )
-        return (
-            capped.crossJoin(F.broadcast(guard))
-            .filter(F.col("_guard") == 1)
-            .drop("_guard")
-        )
-    if presample:
-        counts = {
-            r[group_col]: r["c"]
-            for r in df.groupBy(group_col).agg(F.count(F.lit(1)).alias("c")).collect()
-        }
-        import math as _math
 
-        thresholds = {}
-        for g, c in counts.items():
-            if c <= n:
-                thresholds[g] = _BUCKETS  # keep everything, skip nothing
-            else:
-                want = n + overshoot_sigmas * _math.sqrt(n) + 10
-                thresholds[g] = min(_BUCKETS, int(_math.ceil(want / c * _BUCKETS)))
-        # NULL group values survive groupBy and appear in `counts`, but
-        # Spark rejects NULL map keys — serve the NULL group's threshold
-        # from a separate when-branch instead of the map
-        null_thr = thresholds.pop(None, None)
-        if thresholds:
-            thr = F.create_map(
-                *[
-                    x
-                    for g, t in sorted(thresholds.items())
-                    for x in (F.lit(g), F.lit(t))
-                ]
+    want = float(n) + overshoot_sigmas * math.sqrt(n) + 10.0
+    if want <= 0:
+        raise ValueError(
+            f"presample undershoot: n + overshoot_sigmas * sqrt(n) + 10 = "
+            f"{want:g} keeps no rows; raise overshoot_sigmas"
+        )
+    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_c"))
+    thr = F.when(F.col("_c") <= n, F.lit(_BUCKETS)).otherwise(
+        F.least(
+            F.lit(_BUCKETS),
+            F.ceil(F.lit(want) / F.col("_c").cast("double") * _BUCKETS),
+        )
+    )
+    thr_frame = counts.select(
+        F.col(group_col).alias("_g"), F.col("_c"), thr.alias("_thr")
+    )
+    src = (
+        df.join(
+            F.broadcast(thr_frame),
+            df[group_col].eqNullSafe(thr_frame["_g"]),
+        )
+        .filter(bucket < F.col("_thr"))
+        .drop("_g", "_c", "_thr")
+    )
+    # bias guard, in-plan: every group must still supply min(n, count)
+    # rows. Reduced over the counts frame (left-joined to survivors, so
+    # a fully-filtered group shows up as 0, never silently vanishes)
+    # into ONE row that raises on undershoot; the output cross-joins
+    # that row broadcast, so any action on the result executes the
+    # guard. coalesce(..., 1): an empty input has no groups to bias.
+    surv = src.groupBy(group_col).agg(F.count(F.lit(1)).alias("_s")).select(
+        F.col(group_col).alias("_sg"), "_s"
+    )
+    ok = F.coalesce(F.col("_s"), F.lit(0)) >= F.least(F.lit(n), F.col("_c"))
+    guard = (
+        counts.join(surv, counts[group_col].eqNullSafe(surv["_sg"]), "left")
+        .select(
+            F.coalesce(F.min(ok.cast("int")), F.lit(1)).alias("_all_ok"),
+            F.slice(
+                F.collect_list(F.when(~ok, counts[group_col].cast("string"))),
+                1,
+                10,
+            ).alias("_short"),
+        )
+        .select(
+            F.when(F.col("_all_ok") == 1, F.lit(1))
+            .otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit("presample undershoot for groups "),
+                        F.concat_ws(",", "_short"),
+                        F.lit("; raise overshoot_sigmas"),
+                    )
+                )
             )
-            thr_col = F.element_at(thr, F.col(group_col))
-        else:
-            thr_col = F.lit(None).cast("long")
-        if null_thr is not None:
-            thr_col = F.when(F.col(group_col).isNull(), F.lit(null_thr)).otherwise(
-                thr_col
-            )
-        src = df.filter(bucket < thr_col)
-        # bias guard: every capped group must still supply min(n, count) rows
-        survivors = {
-            r[group_col]: r["c"]
-            for r in src.groupBy(group_col).agg(F.count(F.lit(1)).alias("c")).collect()
-        }
-        short = {
-            g: (survivors.get(g, 0), min(n, c))
-            for g, c in counts.items()
-            if survivors.get(g, 0) < min(n, c)
-        }
-        if short:
-            raise ValueError(
-                f"presample undershoot for groups {short}; raise overshoot_sigmas"
-            )
-    return (
+            .alias("_guard")
+        )
+    )
+    capped = (
         src.withColumn("cap_rank", F.row_number().over(w))
         .filter(F.col("cap_rank") <= n)
+    )
+    return (
+        capped.crossJoin(F.broadcast(guard))
+        .filter(F.col("_guard") == 1)
+        .drop("_guard")
     )
 
 

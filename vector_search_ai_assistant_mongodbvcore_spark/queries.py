@@ -1647,12 +1647,10 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     target LM (docs from src0-src2, the "domain we want more of") against
     the raw-corpus LM, Laplace alpha=1, 10k buckets.
 
-    The Spark side fits two bounded hash-aggregates, then serves by
-    broadcast-joining the fitted lambda table (<= num_buckets rows)
-    against the exploded grams — codegen end-to-end, one map-side-
-    combinable keyed shuffle (the zero-shuffle serve='inline' variant is
-    parity-tested; see operators/dsir.py for the measured tradeoff). The
-    DuckDB twin recomputes the full fit+serve from the documents view;
+    The Spark side fits both bucket LMs in one bounded hash-aggregate,
+    then serves by broadcast-joining the fitted lambda table (<=
+    num_buckets rows) against the exploded grams — codegen end-to-end,
+    one map-side-combinable keyed shuffle. The DuckDB twin recomputes the full fit+serve from the documents view;
     lambda is carried in exact 1e-6 integer units in both engines so the
     per-doc sums are order-independent and the hash matches bit-for-bit.
     Gumbel-top-k resampling on these weights is pinned against a numpy
@@ -1661,9 +1659,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _tables(spark, sf_dir)["documents"]
     # target is an in-corpus subset -> flagged fit: ONE corpus pass fits
-    # both bucket LMs (fit_lambda_flagged), identical lambda
+    # both bucket LMs
     w = DS.importance_weights(
-        docs, num_buckets=_DSIR_BUCKETS, alpha=1.0, serve="join",
+        docs, num_buckets=_DSIR_BUCKETS, alpha=1.0,
         target_flag=F.col("source").isin("src0", "src1", "src2"),
     )
     return w.select("doc_id", "logw")
@@ -2046,17 +2044,17 @@ def source_capped_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     style domain balancing, deterministic across engines/partitionings.
     Runs the presample scale path (per-group bucket-threshold prefilter
     bounds each window partition to ~n rows before the rank; the guard
-    raises on undershoot instead of silently biasing), in the r16
-    IN-PLAN form: thresholds broadcast-joined from the counts aggregate
-    and the guard a one-row broadcast raise_error — no construct-time
-    probe jobs or collects, so the query is a pure plan-builder whose
-    every action re-derives thresholds from parquet. Must equal the
-    plain windowed rank the DuckDB twin computes."""
+    raises on undershoot instead of silently biasing): thresholds
+    broadcast-joined from the counts aggregate and the guard a one-row
+    broadcast raise_error — no construct-time probe jobs or collects, so
+    the query is a pure plan-builder whose every action re-derives
+    thresholds from parquet. Must equal the plain windowed rank the
+    DuckDB twin computes."""
     from vector_search_ai_assistant_mongodbvcore_spark.operators.splits import cap_per_group
 
     t = _tables(spark, sf_dir)
     return cap_per_group(
-        t["documents"], "source", n=10, id_col="doc_id", seed=42, presample="plan"
+        t["documents"], "source", n=10, id_col="doc_id", seed=42, presample=True
     ).select("doc_id", "source", F.col("cap_rank").cast("long").alias("cap_rank"))
 
 
@@ -2378,9 +2376,9 @@ def build_prompts_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- LSH oracle machinery: DuckDB reproduces the seed-42 sign-pattern
-# bucket codes bit-for-bit from inlined hyperplane literals (pre-validated
-# by tools/validate_lsh_oracle.py), so the LSH family is hash-verified like
-# every other query — the approximation is deterministic, not unverifiable.
+# bucket codes bit-for-bit from inlined hyperplane literals, so the LSH
+# family is hash-verified like every other query — the approximation is
+# deterministic, not unverifiable.
 from vector_search_ai_assistant_mongodbvcore_spark.operators.similarity import (  # noqa: E402
     _hyperplanes,
     _query_codes,
@@ -3152,22 +3150,22 @@ REGISTRY = {name: REGISTRY[name] for name in _ORDER}
 #
 # ONLY queries whose construction is PURE PLAN-BUILDING are memoized.
 # Queries that run Spark jobs while constructing (training_shards writes
-# real shards; dsir/semantic/capped/lsh_neardup fit or probe eagerly)
-# are excluded so every invocation re-runs that work — memoizing them
-# would skip part of the computation, which is gaming, not preparing.
-# The classification is empirical (tools/construct_jobs.py counts DAG
-# jobs during a second construction) and pinned by
-# tests/test_prepared_plans.py, so a query that grows an eager step
-# fails the suite instead of silently serving half-stale work.
+# real shards; semantic_contamination fits eagerly) are excluded so
+# every invocation re-runs that work — memoizing them would skip part
+# of the computation, which is gaming, not preparing. The
+# classification is empirical (a DAG job count around a second
+# construction) and pinned by tests/test_prepared_plans.py, so a query
+# that grows an eager step fails the suite instead of silently serving
+# half-stale work.
 _EAGER_CONSTRUCT = frozenset(
     {
         "training_shards",          # stage write + shard export + sampling
         # dsir_importance_weights left this set in r16: the flagged fit
-        # now composes into the serve plan (fit_lambda_flagged_plan — no
+        # now composes into the serve plan (dsir.fit_lambda — no
         # collect at construction; the fit executes from parquet inside
         # every action, so memoizing the PLAN skips no computation)
         "semantic_contamination",   # KMeans fit job
-        # source_capped_sample left this set in r16: presample="plan"
+        # source_capped_sample left this set in r16: presample=True
         # derives thresholds and the bias guard in-plan (no construct
         # probe/collect; the guard raise_errors at action time)
         # lsh_neardup_pairs left this set in r15: dims passed statically

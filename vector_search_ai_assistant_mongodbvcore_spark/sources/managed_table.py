@@ -2081,7 +2081,10 @@ class BucketedTable:
         rolling txns map, same contract as ManagedTable.merge — see
         txn_applied for the AmbiguousCommitOutcome reconcile."""
         keys = keys or self.bucket_by
-        assert set(self.bucket_by) <= set(keys), "merge keys must cover bucket_by"
+        if not set(self.bucket_by) <= set(keys):
+            raise ValueError(
+                f"merge keys {keys} must cover bucket_by {self.bucket_by}"
+            )
 
         def attempt() -> int:
             base = self.current_version()
@@ -2136,7 +2139,10 @@ class BucketedTable:
     def delete_by_keys(self, source: DataFrame, keys: list[str] | None = None) -> int:
         """S5: point deletes, bucket-pruned like merge."""
         keys = keys or self.bucket_by
-        assert set(self.bucket_by) <= set(keys), "delete keys must cover bucket_by"
+        if not set(self.bucket_by) <= set(keys):
+            raise ValueError(
+                f"delete keys {keys} must cover bucket_by {self.bucket_by}"
+            )
 
         def attempt() -> int:
             base = self.current_version()
