@@ -189,10 +189,8 @@ def main() -> None:
             }
         )
     )
-    hist_serves = dict(sql_serves)
-    if streaming.get("corpus_chain_rows_per_sec") is not None:
-        hist_serves["stream_corpus_rows_per_s"] = streaming["corpus_chain_rows_per_sec"]
-    _append_history(total, timings, sf_val, hist_serves, total_min)
+    _append_history(total, timings, sf_val, sql_serves, total_min,
+                    streaming.get("corpus_chain_rows_per_sec"))
     spark.stop()
 
 
@@ -386,14 +384,15 @@ def _bench_streaming(spark) -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
-_HISTORY_V2_HEADER = (
+_HISTORY_HEADER = (
     "| when (UTC) | queries | total (s) | total_min (s) | protocol | "
-    "top-5 slowest | sql serves (s) |\n"
+    "top-5 slowest | sql serves (s) | stream corpus (rows/s) |\n"
 )
 
 
 def _append_history(total: float, timings: dict, sf, sql_serves=None,
-                    total_min: "float | None" = None) -> None:
+                    total_min: "float | None" = None,
+                    stream_rows_per_s: "float | None" = None) -> None:
     """Append one row per bench run to BENCH_HISTORY.md (judge r9
     directive #9): the warmed protocol makes rounds comparable, so a
     regression is visible as a table diff instead of a JSON archaeology
@@ -406,10 +405,10 @@ def _append_history(total: float, timings: dict, sf, sql_serves=None,
         return
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.md")
     new = not os.path.exists(path)
-    needs_v2 = new
+    needs_header = new
     if not new:
         with open(path) as f:
-            needs_v2 = _HISTORY_V2_HEADER not in f.read()
+            needs_header = _HISTORY_HEADER not in f.read()
     stamp = datetime.datetime.now(datetime.timezone.utc).strftime("%Y-%m-%d %H:%M")
     slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:5]
     with open(path, "a") as f:
@@ -419,15 +418,16 @@ def _append_history(total: float, timings: dict, sf, sql_serves=None,
                 "Appended by bench.py on every sf0.1 run; totals are the sum of\n"
                 "timed passes after one untimed warm pass per query.\n"
             )
-        if needs_v2:
-            # r14 protocol revision: totals gain the load-robust
-            # min-of-samples twin and an explicit protocol stamp —
-            # compare total_min across runs, total within a round
+        if needs_header:
+            # totals carry the load-robust min-of-samples twin and a
+            # protocol stamp (compare total_min across runs, total within
+            # a round); the streaming chain's rows/s has its own column so
+            # the sql serves column holds seconds only
             f.write(
-                "\n## r14+ (protocol-stamped rows; total_min is the "
-                "cross-run comparable)\n\n"
-                + _HISTORY_V2_HEADER
-                + "|---|---|---|---|---|---|---|\n"
+                "\n## Protocol-stamped rows, streaming rows/s in its own "
+                "column (total_min is the cross-run comparable)\n\n"
+                + _HISTORY_HEADER
+                + "|---|---|---|---|---|---|---|---|\n"
             )
         top = ", ".join(f"{n} {t:.2f}" for n, t in slowest)
         serves = (
@@ -439,9 +439,10 @@ def _append_history(total: float, timings: dict, sf, sql_serves=None,
             or "—"
         )
         tmin = f"{total_min:.3f}" if total_min is not None else "—"
+        stream = f"{stream_rows_per_s:.1f}" if stream_rows_per_s is not None else "—"
         f.write(
             f"| {stamp} | {len(timings)} | {total:.3f} | {tmin} | {_PROTOCOL} "
-            f"| {top} | {serves} |\n"
+            f"| {top} | {serves} | {stream} |\n"
         )
 
 

@@ -19,6 +19,11 @@ the trim) runs distributed; per-turn scalars (the query vector, the payload
 string) legitimately live on the driver. The batch/scale form of steps 1-5
 over millions of rows is the operators themselves (vector_search,
 conversation_text, build_prompts, RemoteCompleter.udf).
+
+Rows built on the driver (the 1-row trim frame here, the session store's
+session and message rows, the empty read of a new session) become Arrow
+LocalRelations through `session.local_frame`, so evaluating them starts no
+Python worker.
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search impor
     vector_search_payload,
     vector_search_payload_reranked,
 )
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 
 
 def chat_turn(
@@ -114,7 +120,8 @@ def chat_turn(
 
     # 4. token-budget trim (ChatService.cs:172-243) — reuses the column
     #    operator on a 1-row frame so there is exactly one trim implementation
-    one = spark.createDataFrame(
+    one = local_frame(
+        spark,
         [(rag_payload, conversation, user_prompt)],
         "rag_payload string, conversation string, prompt string",
     )

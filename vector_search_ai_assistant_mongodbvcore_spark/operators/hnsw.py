@@ -691,6 +691,8 @@ class PartitionedHnswIndex:
         contain duplicates; consumers are join-based and don't care."""
         from pyspark.sql import functions as F
 
+        from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
+
         id_col = meta["id_col"]
         exploded = self._segments_scan(meta).select(
             "segment_id", F.explode("ids").alias(id_col)
@@ -701,8 +703,8 @@ class PartitionedHnswIndex:
             for doc in docs
         ]
         if pairs:
-            dead = self.spark.createDataFrame(
-                pairs, f"segment_id string, {id_col} {meta['id_type']}"
+            dead = local_frame(
+                self.spark, pairs, f"segment_id string, {id_col} {meta['id_type']}"
             )
             exploded = exploded.join(dead, ["segment_id", id_col], "left_anti")
         # no distinct(): the only consumers are semi/anti joins, which are

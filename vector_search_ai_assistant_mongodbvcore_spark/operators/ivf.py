@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 
 from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search import (
     vector_search,
@@ -528,7 +529,8 @@ class IvfIndex:
             for qid, vec in pairs
             for c in self.nearest_centroids(list(vec), n_probe)
         ]
-        routing = self.spark.createDataFrame(
+        routing = local_frame(
+            self.spark,
             probe_rows,
             f"query_id {qid_type}, centroid_id int, _qvec array<double>",
         )
@@ -611,7 +613,8 @@ class IvfIndex:
                 "score", scorer(F.col("query_id"), F.col(vector_col))
             )
         else:
-            qvecs = self.spark.createDataFrame(
+            qvecs = local_frame(
+                self.spark,
                 [(qid, [float(x) for x in vec]) for qid, vec in pairs],
                 f"query_id {qid_type}, _qvec array<double>",
             )

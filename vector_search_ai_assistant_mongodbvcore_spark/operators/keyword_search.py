@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"  # lowercase alnum runs are terms
 
@@ -720,9 +721,7 @@ class Bm25Index:
         if not all_terms:
             raise ValueError("search_many: every query has an empty term list")
         buckets = sorted({self.bucket_py(t, n_b) for t in all_terms})
-        routing = self.spark.createDataFrame(
-            route_rows, f"query_id {qid_type}, term string"
-        )
+        routing = local_frame(self.spark, route_rows, f"query_id {qid_type}, term string")
         scan = (
             _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "postings"))
             .filter(F.col("bucket").isin(buckets))

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_search_ai_assistant_mongodbvcore_spark.operators.topics import cluster_topics
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 
 
 def semantic_duplicates(
@@ -68,7 +69,7 @@ def semantic_duplicates(
     out_schema = f"{id_col} {id_t}, cluster_id int, keep boolean, dup_of {id_t}"
     probe = df.filter(F.col(vector_col).isNotNull()).select(vector_col).first()
     if probe is None:
-        return df.sparkSession.createDataFrame([], out_schema)
+        return local_frame(df.sparkSession, [], out_schema)
     dims = len(probe[0])
 
     # NULL-embedding rows are ABSENT from the verdict frame (mirroring

@@ -25,6 +25,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 from vector_search_ai_assistant_mongodbvcore_spark.sources.ingest import (
     MESSAGE_SCHEMA,
     SESSION_SCHEMA,
@@ -50,16 +51,14 @@ class SessionStore:
         )
         self.txn = TransactionalWriter(self.sessions, self.messages)
         if not self.sessions.exists():
-            self.sessions.overwrite(spark.createDataFrame([], SESSION_SCHEMA))
+            self.sessions.overwrite(local_frame(spark, [], SESSION_SCHEMA))
         if not self.messages.exists():
-            self.messages.overwrite(spark.createDataFrame([], MESSAGE_SCHEMA))
+            self.messages.overwrite(local_frame(spark, [], MESSAGE_SCHEMA))
 
     # ---- CRUD (S3-S6) ----------------------------------------------------
     def create_session(self, name: str = "New Chat") -> str:
         sid = str(uuid.uuid4())
-        row = self.spark.createDataFrame(
-            [(sid, "Session", sid, 0, name)], SESSION_SCHEMA
-        )
+        row = local_frame(self.spark, [(sid, "Session", sid, 0, name)], SESSION_SCHEMA)
         self.sessions.append(row)
         return sid
 
@@ -108,7 +107,8 @@ class SessionStore:
         # +1us keeps the newest-first conversation window deterministic
         now = datetime.now(timezone.utc).replace(tzinfo=None)
         after = now + timedelta(microseconds=1)
-        msgs = self.spark.createDataFrame(
+        msgs = local_frame(
+            self.spark,
             [
                 (str(uuid.uuid4()), "Message", session_id, now, "User", prompt_tokens, 0, prompt_text),
                 (

@@ -34,6 +34,7 @@ from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
     stack_vectors,
 )
 from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 
 
 def knn_candidates(
@@ -650,7 +651,8 @@ class LshIndex:
         for qid, vec in pairs:
             for t, c in enumerate(_query_codes(list(vec), m["bits"], m["tables"], m["seed"])):
                 route_rows.append((qid, t, int(c), [float(x) for x in vec]))
-        routing = self.spark.createDataFrame(
+        routing = local_frame(
+            self.spark,
             route_rows,
             f"query_id {qid_type}, table int, bucket int, _qvec array<double>",
         )
@@ -695,7 +697,8 @@ class LshIndex:
                 "score", scorer(F.col("query_id"), F.col(vector_col))
             )
         else:
-            qvecs = self.spark.createDataFrame(
+            qvecs = local_frame(
+                self.spark,
                 [(qid, [float(x) for x in vec]) for qid, vec in pairs],
                 f"query_id {qid_type}, _qvec array<double>",
             )
@@ -734,7 +737,7 @@ def embedding_neardup(
     plan-building; left None, it is discovered with a one-row first()
     probe — an eager Spark job per construction. The two paths diverge
     on an empty/all-null input (ADVICE r15): the probe path detects it
-    and returns a createDataFrame literal, the dims path builds the full
+    and returns an empty local frame, the dims path builds the full
     LSH plan which *evaluates* to the same empty frame — identical
     results, different plan shapes for callers that inspect plans. A
     dims value that disagrees with the data fails loudly at execution:
@@ -765,7 +768,7 @@ def embedding_neardup(
     if dims is None:
         probe = df.filter(F.col(vector_col).isNotNull()).select(vector_col).first()
         if probe is None:  # empty / all-null input: empty result, right schema
-            return df.sparkSession.createDataFrame([], out_schema)
+            return local_frame(df.sparkSession, [], out_schema)
         dims = len(probe[0])
     # r16: the vector rides through the bucket explode (`carry_vector`)
     # instead of being re-joined on id afterwards — one scan and one join

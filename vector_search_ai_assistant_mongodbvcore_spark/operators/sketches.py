@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
+
 __all__ = [
     "kmv_hash",
     "kmv_smallest",
@@ -516,9 +518,7 @@ def top_frequent(
     certified = len(rows) >= topn and rows[-1]["cnt"] > bound
     certified = certified or (0 < len(rows) < topn and n_rows <= k)
     if certified or n_rows == 0:
-        return df.sparkSession.createDataFrame(
-            rows, "item string, cnt long"
-        ) if rows else df.sparkSession.createDataFrame([], "item string, cnt long")
+        return local_frame(df.sparkSession, rows, "item string, cnt long")
     # uncertified: the honest exact plan (full hash agg + TakeOrdered)
     return (
         vals.groupBy("item")

@@ -25,7 +25,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from vector_search_ai_assistant_mongodbvcore_spark.session import load_tables
+from vector_search_ai_assistant_mongodbvcore_spark.session import load_tables, local_frame
 from vector_search_ai_assistant_mongodbvcore_spark.functions import text as TX
 from vector_search_ai_assistant_mongodbvcore_spark.functions.tokenizer import (
     approx_token_count,
@@ -2868,7 +2868,7 @@ def chat_turn_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cached corpus) before the harness re-executes the returned frame
     rows = state.collect()
     corpus.unpersist()
-    return spark.createDataFrame(rows, state.schema)
+    return local_frame(spark, rows, state.schema)
 
 
 _TOPICS_K = 8

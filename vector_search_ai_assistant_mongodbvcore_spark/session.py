@@ -11,9 +11,11 @@ embedding/tokenizer path.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -68,6 +70,41 @@ def get_spark(app_name: str = "vsai-spark", cpus: int | None = None) -> SparkSes
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame of driver-side `rows` that plans as a LocalRelation.
+
+    `spark.createDataFrame(list, schema)` parallelizes the list and maps a
+    Python re-serializer over every default partition, so each evaluation
+    of the frame starts Python-worker tasks, even for zero rows. An Arrow
+    table typed by the schema is shipped to the JVM once and plans as a
+    LocalRelation: evaluating it starts no Python worker. The engine's
+    per-turn and per-search frames (session writes, the trim frame, empty
+    reads, index routing rows) are all built here.
+
+    `schema` is a StructType or a DDL string. A value that does not fit
+    its field's type, a NULL in a non-nullable field, or a row of the
+    wrong width raises; there is no fallback to the list path. A naive
+    datetime in a timestamp field is read as UTC, the session time zone
+    `get_spark` sets, which is how the session store stamps messages.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    width = len(schema.fields)
+    if any(len(row) != width for row in rows):
+        raise ValueError(f"every row must have {width} values for schema {schema.simpleString()}")
+    arrow_schema = to_arrow_schema(schema)
+    columns = [pa.array([row[i] for row in rows], type=f.type) for i, f in enumerate(arrow_schema)]
+    for field, column in zip(schema.fields, columns):
+        if not field.nullable and column.null_count:
+            raise ValueError(f"NULL in non-nullable field {field.name!r}")
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

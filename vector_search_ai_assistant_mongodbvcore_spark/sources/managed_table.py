@@ -77,6 +77,7 @@ from functools import lru_cache, reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 from vector_search_ai_assistant_mongodbvcore_spark.sources.dataplane import (
     LocalDataPlane,
 )
@@ -1437,7 +1438,7 @@ class ManagedTable:
         residual = _filters_to_column(checked)
         if not keep:
             schema = self.spark.read.parquet(d).schema  # metadata-only
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.parquet(*keep).filter(residual)
 
     def pruned_files(self, filters, version: int | None = None) -> tuple[int, int]:
@@ -1915,7 +1916,7 @@ class BucketedTable:
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(doc["schema"]))
-        empty = self.spark.createDataFrame([], schema)
+        empty = local_frame(self.spark, [], schema)
         return empty.drop(self.BUCKET_COL) if self.BUCKET_COL in empty.columns else empty
 
     def _bucket_for_values(self, doc: dict, values: dict) -> int:

@@ -36,6 +36,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
+
 __all__ = ["start_cardinality_monitor_stream", "fold_sketch_batches"]
 
 
@@ -138,7 +140,8 @@ def start_cardinality_monitor_stream(
             running_est = kmv_estimate_from_sketch(merged, k).collect()[0][
                 "approx_distinct"
             ]
-            report = spark.createDataFrame(
+            report = local_frame(
+                spark,
                 [(int(epoch_id), n_rows, float(batch_est), float(running_est))],
                 "batch long, batch_rows long, batch_distinct_est double, "
                 "running_distinct_est double",

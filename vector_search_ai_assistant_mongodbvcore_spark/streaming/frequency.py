@@ -36,6 +36,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
+
 __all__ = ["start_frequency_monitor_stream"]
 
 
@@ -78,9 +80,7 @@ def start_frequency_monitor_stream(
         finally:
             df.unpersist()
         (
-            spark.createDataFrame(
-                rows, "item string, mg_count long, batch_rows long"
-            )
+            local_frame(spark, rows, "item string, mg_count long, batch_rows long")
             .withColumn("batch", F.lit(int(epoch_id)))
             .write.mode("overwrite")
             .partitionBy("batch")
