@@ -31,16 +31,21 @@ same-code closing run hours apart); the min is the load-robust statistic
 on the true plan cost and is the number to compare across runs.  Each
 BENCH_HISTORY row records the protocol that produced it.
 
-The DEFAULT since r14 is the INTERLEAVED protocol: warm every query
-once, then 3 full passes over the list (one timed execution per query
-per pass) — same execution count as the old consecutive protocol, just
-reordered. Four r14 idle back-to-back consecutive-protocol runs measured
-this shared host swinging ±25% on minutes-long load regimes — longer
-than one query's 3 consecutive samples, so even their min carried a
-spike; interleaving spreads each query's samples across the whole run's
+Since r14 the protocol is INTERLEAVED: warm every query once, then 3
+full passes over the list (one timed execution per query per pass) —
+same execution count as the old consecutive protocol, just reordered.
+Four r14 idle back-to-back consecutive-protocol runs measured this
+shared host swinging ±25% on minutes-long load regimes — longer than
+one query's 3 consecutive samples, so even their min carried a spike;
+interleaving spreads each query's samples across the whole run's
 regimes. Measured: back-to-back interleaved runs differ 0.6% on
-value_min (vs 10-24% consecutive). SPARK_GRAFT_BENCH_PASSES overrides
-the pass count; =0 restores the consecutive r12 protocol.
+value_min (vs 10-24% consecutive).
+
+The headline set is every registry query declared with `bench=True` on
+@register (queries.py), timed in registry order: the flagship retrieval
+path plus one per operator family. embedding_neardup_pairs (quadratic
+oracle baseline) is deliberately left out — lsh_neardup_pairs is the
+scale path.
 
 "sql_serves" (judge r11 directive #8) times the raw-SQL-served
 quantized-IVF and LSH top-k paths (plans/sql_rewrite whole-query serve,
@@ -61,56 +66,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Headline set: the flagship retrieval path + one per operator family.
-# embedding_neardup_pairs (quadratic oracle baseline) is deliberately
-# excluded — lsh_neardup_pairs is the scale path.
-BENCH_QUERIES = [
-    "pricing_summary",
-    "events_conjunctive_filter",
-    "conversation_window_events",
-    "payload_concat_by_source",
-    "text_stats",
-    "cleaned_corpus",
-    "language_id_pred",
-    "dedup_corpus_exact",
-    "remove_duplicated_spans",
-    "minhash_band_pairs",
-    "ngram_jaccard_pairs",
-    "ann_topk",
-    "knn_join",
-    "bm25_topk",
-    "bm25_search_many",
-    "hybrid_search_indexed",
-    "asof_purchase_attribution",
-    "document_chunks",
-    "lsh_ann_topk",
-    "lsh_neardup_pairs",
-    "ivf_search_all_probes",
-    "ivf_search_many",
-    "hnsw_index_topk",
-    "decontamination_report",
-    "semantic_contamination",
-    "packed_sequences",
-    "training_shards",
-    "dsir_importance_weights",
-    "vocab_top_terms",
-    "domain_audit",
-    "distinct_cardinality_kmv",
-    "data_quality_report",
-    "source_capped_sample",
-    "summarize_labels",
-    "rolling_fingerprints",
-    "build_prompts_trim",
-    "corpus_enrichment",
-]
 
-
-def main() -> None:
-    from vector_search_ai_assistant_mongodbvcore_spark import get_spark
-    from vector_search_ai_assistant_mongodbvcore_spark import queries as q
-
-    spark = get_spark(app_name="vsai-bench")
-    registry = q.queries()
+def warm_up(spark) -> None:
+    """Pay session start-up before anything is timed."""
     # JVM/codegen warmup so the first measured query isn't billed for
     # session startup (it was ~+4s on the first groupBy otherwise)
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -123,6 +81,16 @@ def main() -> None:
         return s
 
     spark.range(1000).select(_warm("id")).write.format("noop").mode("overwrite").save()
+
+
+def main() -> None:
+    from vector_search_ai_assistant_mongodbvcore_spark import get_spark
+    from vector_search_ai_assistant_mongodbvcore_spark import queries as q
+
+    spark = get_spark(app_name="vsai-bench")
+    registry = q.queries()
+    names = [n for n, r in q.REGISTRY.items() if r.bench]
+    warm_up(spark)
     # Index prewarm: materialized IVF/LSH indexes are built OFFLINE in any
     # real deployment (build once per corpus, serve many queries). A
     # regenerated dataset invalidates the cache fingerprint, and without
@@ -136,32 +104,21 @@ def main() -> None:
     def _noop_run(name):
         registry[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
-    if _PASSES:
-        # interleaved protocol (SPARK_GRAFT_BENCH_PASSES=N): warm every
-        # query once, then N full passes over the whole list, one timed
-        # execution per query per pass. Box-load swings on this shared
-        # host last minutes — consecutive samples all land inside one
-        # load regime, so their min still carries the spike; interleaving
-        # time-decorrelates each query's samples across the run.
-        for name in BENCH_QUERIES:
+    # interleaved protocol (module docstring): warm every query once, then
+    # _PASSES full passes over the list, one timed execution per query
+    # per pass
+    for name in names:
+        _noop_run(name)
+        samples[name] = []
+    for _ in range(_PASSES):
+        for name in names:
+            t0 = time.time()
             _noop_run(name)
-            samples[name] = []
-        for _ in range(_PASSES):
-            for name in BENCH_QUERIES:
-                t0 = time.time()
-                _noop_run(name)
-                samples[name].append(round(time.time() - t0, 3))
-        for name in BENCH_QUERIES:
-            ts = sorted(samples[name])
-            timings[name] = ts[len(ts) // 2]
-            timings_min[name] = ts[0]
-    else:
-        for name in BENCH_QUERIES:
-            # warm pass (untimed): pages the input files, JITs the codegen,
-            # spins up any Python workers this query needs
-            _noop_run(name)
-            timings[name], samples[name] = _median_of(lambda: _noop_run(name))
-            timings_min[name] = min(samples[name])
+            samples[name].append(round(time.time() - t0, 3))
+    for name in names:
+        ts = sorted(samples[name])
+        timings[name] = ts[len(ts) // 2]
+        timings_min[name] = ts[0]
     total = round(sum(timings.values()), 3)
     total_min = round(sum(timings_min.values()), 3)
     sql_serves = _bench_sql_serves(spark, q)
@@ -197,12 +154,8 @@ def main() -> None:
 # recorded on every JSON line + history row so a reader knows which
 # timing discipline produced the numbers (r13 adjudicated an apparent
 # regression that was pure inter-run load drift)
-_PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-_PROTOCOL = (
-    f"warm1+interleaved{_PASSES}(median+min)"
-    if _PASSES
-    else "warm1+median3(+min3 since r14)"
-)
+_PASSES = 3
+_PROTOCOL = f"warm1+interleaved{_PASSES}(median+min)"
 
 
 def _median_of(run, n: int = 3) -> "tuple[float, list[float]]":

@@ -76,7 +76,8 @@ def test_registered_twin_on_degenerate_rows(spark, tmp_path):
     con = duckdb.connect()
     con.execute(f"COPY (SELECT * FROM pdf) TO '{d}/documents.parquet' (FORMAT PARQUET)")
 
-    fn, oracle = queries.REGISTRY["domain_audit"]
+    rec = queries.REGISTRY["domain_audit"]
+    fn, oracle = rec.fn, rec.oracle
     cols = sorted(fn(spark, str(d)).columns)
     got = sorted(tuple(r[c] for c in cols) for r in fn(spark, str(d)).collect())
     con2 = duckdb.connect()

@@ -153,7 +153,8 @@ def test_registered_twin_on_degenerate_rows(spark, tmp_path):
     con = duckdb.connect()
     con.execute(f"COPY (SELECT * FROM pdf) TO '{d}/documents.parquet' (FORMAT PARQUET)")
 
-    fn, oracle = queries.REGISTRY["dsir_importance_weights"]
+    rec = queries.REGISTRY["dsir_importance_weights"]
+    fn, oracle = rec.fn, rec.oracle
     got = {r["doc_id"]: r["logw"] for r in fn(spark, str(d)).collect()}
     con2 = duckdb.connect()
     con2.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")

@@ -48,7 +48,8 @@ def doc_dir(spark, tmp_path_factory):
 
 
 def test_text_stats_twin_matches_on_degenerate_rows(spark, doc_dir):
-    fn, oracle = queries.REGISTRY["text_stats"]
+    rec = queries.REGISTRY["text_stats"]
+    fn, oracle = rec.fn, rec.oracle
     got = {r["doc_id"]: r.asDict() for r in fn(spark, doc_dir).collect()}
 
     con = duckdb.connect()
@@ -86,7 +87,7 @@ def test_empty_text_edge_values(spark, doc_dir):
     and a 4th violation (repetitive: the '' token's max-run fraction is
     2/2). Quirky, but identical in Spark and DuckDB, which is the
     contract the oracle gate needs."""
-    fn, _ = queries.REGISTRY["text_stats"]
+    fn = queries.REGISTRY["text_stats"].fn
     rows = {r["doc_id"]: r for r in fn(spark, doc_dir).collect()}
     r0 = rows[0]
     assert r0["word_count"] == 0
@@ -127,7 +128,7 @@ def test_oracle_sql_plumbs_sf_dir_and_narrows_degradation():
         raise ValueError("simulated oracle-generation regression")
 
     saved = q.REGISTRY["language_id_pred"]
-    q.REGISTRY["language_id_pred"] = (saved[0], broken_oracle)
+    q.REGISTRY["language_id_pred"] = saved._replace(oracle=broken_oracle)
     try:
         with pytest.raises(ValueError, match="simulated"):
             q.oracle_sql("/root/testdata/sf0.001")

@@ -166,7 +166,7 @@ def test_contamination_sources_broadcasts_benchmark_side(spark, reg):
 
 
 def test_fanned_docs_gated_on_scan_parallelism(spark, tmp_path_factory):
-    """Judge r10 directive #7: _fanned_docs must repartition ONLY when
+    """_fanned must repartition ONLY when
     the scan is under-parallel. A one-file bench table fans out to the
     cores; a table whose scan already arrives in >= cores partitions
     (the 100 TB case) passes through with NO added Exchange — an
@@ -175,7 +175,7 @@ def test_fanned_docs_gated_on_scan_parallelism(spark, tmp_path_factory):
     cores = spark.sparkContext.defaultParallelism
 
     # bench case: one parquet file -> under-parallel -> fan out
-    fanned = Q._fanned_docs(spark, SF_DIR)
+    fanned = Q._fanned(spark, SF_DIR, "documents")
     assert fanned.rdd.getNumPartitions() == cores
     assert "Repartition" in fanned._jdf.queryExecution().logical().toString()
 
@@ -183,7 +183,7 @@ def test_fanned_docs_gated_on_scan_parallelism(spark, tmp_path_factory):
     wide_dir = str(tmp_path_factory.mktemp("wide_sf"))
     docs = Q._tables(spark, SF_DIR)["documents"]
     docs.repartition(2 * cores).write.parquet(f"{wide_dir}/documents.parquet")
-    passthrough = Q._fanned_docs(spark, wide_dir)
+    passthrough = Q._fanned(spark, wide_dir, "documents")
     assert passthrough.rdd.getNumPartitions() >= cores
     assert "Repartition" not in passthrough._jdf.queryExecution().logical().toString()
 
@@ -200,7 +200,7 @@ def test_plans_md_covers_every_registered_query():
     with open(path) as f:
         text = f.read()
     rows = {m.group(1) for m in re.finditer(r"^\| (\w+) \|", text, re.MULTILINE)}
-    registered = set(Q._ORDER) - {"chat_turn"}  # imperative lifecycle, skipped by design
+    registered = set(Q.REGISTRY) - {"chat_turn"}  # imperative lifecycle, skipped by design
     missing = sorted(registered - rows)
     assert not missing, f"PLANS.md lacks rows for registered queries: {missing}"
     # a present-but-broken row must fail too (plan_audit refuses to

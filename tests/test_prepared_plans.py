@@ -4,8 +4,8 @@ memoized registry queries are PURE PLAN-BUILDERS.
 The cache re-serves a constructed DataFrame per (session, sf_dir) — an
 immutable lazy plan, so results are never cached. That is only sound
 when construction itself runs no Spark jobs: a query that fits, probes,
-or writes while constructing must be excluded (_EAGER_CONSTRUCT) so
-every invocation re-runs that work. These tests make the classification
+or writes while constructing must be declared `eager=True` on @register
+so every invocation re-runs that work. These tests make the classification
 a suite failure instead of a silent drift.
 """
 
@@ -16,8 +16,6 @@ import pytest
 from tests.conftest import SF_DIR
 from vector_search_ai_assistant_mongodbvcore_spark import queries as Q
 
-import bench
-
 
 def _next_job_id(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
@@ -27,25 +25,30 @@ def test_memoized_construct_runs_zero_jobs(spark):
     """Every memoized registry query must construct without running a DAG
     job (second construction — the first warms model fits and table
     handles, memoized independently). r16 (ADVICE r15): the pin covers
-    the FULL registry minus _EAGER_CONSTRUCT, not just the bench list —
-    queries() memoizes all 55 entries, so a non-bench query that grows an
-    eager construct step must fail here, not get silently memoized."""
-    reg = {name: fn for name, (fn, _) in Q.REGISTRY.items()}
+    the FULL registry minus the eager entries, not just the bench list —
+    queries() memoizes every other entry, so a non-bench query that grows
+    an eager construct step must fail here, not get silently memoized."""
     offenders = {}
-    for name in Q.REGISTRY:
-        if name in Q._EAGER_CONSTRUCT:
+    for name, rec in Q.REGISTRY.items():
+        if rec.eager:
             continue
-        reg[name](spark, SF_DIR)  # warm
+        rec.fn(spark, SF_DIR)  # warm
         before = _next_job_id(spark)
-        reg[name](spark, SF_DIR)
+        rec.fn(spark, SF_DIR)
         ran = _next_job_id(spark) - before
         if ran:
             offenders[name] = ran
     assert not offenders, (
-        f"queries run Spark jobs during construction but are not in "
-        f"_EAGER_CONSTRUCT (move them there or make construction lazy): "
-        f"{offenders}"
+        f"queries run Spark jobs during construction but are not declared "
+        f"eager=True (declare them or make construction lazy): {offenders}"
     )
+
+
+def test_queries_memoizes_exactly_the_non_eager_entries():
+    reg = Q.queries()
+    assert list(reg) == list(Q.REGISTRY)
+    wrapped = {name for name, fn in reg.items() if hasattr(fn, "__wrapped__")}
+    assert wrapped == {name for name, rec in Q.REGISTRY.items() if not rec.eager}
 
 
 def test_prepared_cache_reserves_same_plan(spark):

@@ -22,7 +22,6 @@ def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
 
-    import bench
     from vector_search_ai_assistant_mongodbvcore_spark import get_spark
     from vector_search_ai_assistant_mongodbvcore_spark import queries as q
 
@@ -32,7 +31,7 @@ def main() -> None:
     spark = get_spark(app_name="plan-capture")
     q.prewarm_indexes(spark, SF_DIR)
     registry = q.queries()
-    names = [n for n in bench.BENCH_QUERIES if not only or n in only]
+    names = [n for n, r in q.REGISTRY.items() if r.bench and (not only or n in only)]
     for name in names:
         try:
             df = registry[name](spark, SF_DIR)

@@ -67,7 +67,7 @@ def main() -> None:
         "marks Arrow-batched UDF stages (embedding/LSH/tokenizer — the "
         "intended edges); wide `xchg` counts on pair-generation queries are "
         "the aggregation fan-in, not quadratic joins. Queries over "
-        "`_fanned_docs` carry one same-size scan fan-out Exchange at bench "
+        "`_fanned` carry one same-size scan fan-out Exchange at bench "
         "scale only (GATED on scan parallelism — skipped when the scan "
         "already arrives in >= cores partitions, i.e. at real scale; "
         "pinned in tests/test_plans.py); static counts also include "

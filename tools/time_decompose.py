@@ -31,17 +31,10 @@ def main() -> None:
     from vector_search_ai_assistant_mongodbvcore_spark import queries as q
 
     spark = get_spark(app_name="time-decompose")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(1000).select(_warm("id")).write.format("noop").mode("overwrite").save()
+    bench.warm_up(spark)
     q.prewarm_indexes(spark, SF_DIR)
     registry = q.queries()
-    names = [n for n in bench.BENCH_QUERIES if not only or n in only]
+    names = [n for n, r in q.REGISTRY.items() if r.bench and (not only or n in only)]
     rows = []
     for name in names:
         spark.sparkContext.setJobDescription(name)

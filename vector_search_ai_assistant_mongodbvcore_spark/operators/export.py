@@ -153,6 +153,13 @@ def export_training_shards(
     any order) sees a deterministic uniform shuffle of its rows.
     maxRecordsPerFile bounds shard size regardless of partition count.
 
+    File count: the hash repartition on (split, shuffle key) spreads every
+    split over every post-shuffle partition, and each partition writes one
+    file per split directory it holds rows for. A multi-split export
+    therefore writes up to partitions x splits files per epoch (more when
+    maxRecordsPerFile cuts a file); pass a small `n_partitions` to bound
+    it.
+
     r16 (guide §2.4): this was a repartitionByRange, whose range
     partitioner runs a SAMPLING pass that re-executes the entire child
     plan (tokenize -> pack -> assemble) once per epoch before the write
