@@ -81,9 +81,10 @@ def test_misfit_rows_raise(spark, rows, schema, error):
 
 
 def test_chat_turn_job_counts(spark, tmp_path):
-    """A turn's driver-built frames run no jobs of their own: 12 jobs for a
-    new session's first turn and 16 for a session whose history is past
-    the 1000-token window (16 and 18 with list-built frames)."""
+    """A turn's driver-built frames and its prompt trim run no jobs of
+    their own: 11 jobs for a new session's first turn and 15 for a session
+    whose history is past the 1000-token window (16 and 18 with list-built
+    frames, 12 and 16 with the trim as a 1-row Spark job)."""
     emb = HashNgramEmbedder(dims=64)
     catalog = ManagedTable(spark, str(tmp_path / "catalog"))
     catalog.overwrite(
@@ -109,8 +110,8 @@ def test_chat_turn_job_counts(spark, tmp_path):
         return _next_job_id(spark) - before
 
     jobs(long_session, "warm-up question?")
-    assert jobs(store.create_session(), "What kind of bikes?") == 12
-    assert jobs(long_session, "And helmets?") == 16
+    assert jobs(store.create_session(), "What kind of bikes?") == 11
+    assert jobs(long_session, "And helmets?") == 15
 
 
 def test_create_data_frame_only_in_local_frame():

@@ -3,17 +3,26 @@ arithmetic (ChatService.cs:172-243) — denominator includes prompt + buffer,
 banker's rounding, head-slice RAG, tail-slice conversation, and the
 "\n"+prompt suffix in both branches."""
 
+import json
+import pathlib
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
 from vector_search_ai_assistant_mongodbvcore_spark.functions.tokenizer import (
+    _ENC,
     _encode_py,
     _split_py,
 )
 from vector_search_ai_assistant_mongodbvcore_spark.operators.prompt_budget import (
     TOKEN_ESTIMATE_BUFFER,
     build_prompts,
+    trim_prompt,
 )
+from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import plan_report
+
+GOLDEN = pathlib.Path(__file__).parent / "fixtures" / "build_prompts_golden.json"
 
 RAG = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
 CONV = "one two three four five six seven eight nine ten " * 3
@@ -80,3 +89,53 @@ def test_empty_inputs_do_not_crash(spark):
     row = _run(spark, "", "", "", max_tokens=100)
     assert row.rag_tokens_out == 0 and row.conv_tokens_out == 0
     assert row.conversation_and_prompt == "\n"
+
+
+def _words(rng, n):
+    vocab = ["alpha", "beta", "gamma", "bike", "helmet", "road", "42", "ok,", "why?"]
+    return " ".join(rng.choice(vocab) for _ in range(n))
+
+
+def test_trim_prompt_matches_csharp_port_on_random_triples():
+    rng = random.Random(7)
+    for _ in range(200):
+        rag, conv, prompt = (_words(rng, rng.randint(0, n)) for n in (150, 120, 30))
+        max_tokens = rng.choice([50, 120, 250, 400])
+        got = trim_prompt(rag, conv, prompt, max_tokens=max_tokens)
+        e_rag_t, e_conv_t, e_rag, e_conv_prompt = _expected(rag, conv, prompt, max_tokens)
+        assert (got.rag_tokens_out, got.conv_tokens_out) == (e_rag_t, e_conv_t)
+        assert (got.trimmed_rag, got.conversation_and_prompt) == (e_rag, e_conv_prompt)
+
+
+def test_build_prompts_is_one_python_eval(spark):
+    df = spark.createDataFrame(
+        [(RAG, CONV, PROMPT)], "rag_payload string, conversation string, prompt string"
+    )
+    assert plan_report(build_prompts(df, max_tokens=120)).python_evals == 1
+
+
+@pytest.mark.skipif(_ENC is not None, reason="fixture recorded with the regex tokenizer")
+def test_golden_fixture(spark):
+    """Rows recorded from the earlier column-program build_prompts: NULL in
+    each input, empty strings, under- and over-budget rows and a banker's
+    rounding tie (1 RAG token -> 0.5 -> 0). build_prompts and trim_prompt
+    must both reproduce them exactly, with the same output schema."""
+    golden = json.loads(GOLDEN.read_text())
+    for group in golden["groups"]:
+        budget = {"max_tokens": group["max_tokens"], "buffer_tokens": group["buffer_tokens"]}
+        rows = group["rows"]
+        for row in rows:
+            out = row["out"]
+            assert list(trim_prompt(*row["in"], **budget)) == [out[3], out[4], *out[:3]]
+        df = spark.createDataFrame(
+            [(i, *row["in"]) for i, row in enumerate(rows)],
+            "id int, rag_payload string, conversation string, prompt string",
+        )
+        res = build_prompts(df, **budget)
+        assert res.schema.simpleString() == golden["schema"]
+        got = sorted(res.collect(), key=lambda x: x.id)
+        assert [
+            [x.trimmed_rag, x.trimmed_conversation, x.conversation_and_prompt,
+             x.rag_tokens_out, x.conv_tokens_out]
+            for x in got
+        ] == [row["out"] for row in rows]

@@ -34,8 +34,6 @@ from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     StringType,
-    StructField,
-    StructType,
 )
 
 # cl100k_base's public pre-tokenization split (tiktoken's published
@@ -178,7 +176,7 @@ def _encode_py(text: str) -> list[int]:
         return []
     # Deterministic id: 31-bit FNV-1a of the token string. decode() needs the
     # original strings, so ids are only used for counting/slicing; decode is
-    # implemented by re-splitting (see _decode_slice_py).
+    # implemented by re-splitting (see _head_py / _tail_py).
     out = []
     for m in _TOKEN_RE.finditer(text):
         h = 2166136261
@@ -190,6 +188,22 @@ def _encode_py(text: str) -> list[int]:
 
 def _split_py(text: str) -> list[str]:
     return _TOKEN_RE.findall(text or "")
+
+
+def _head_py(text: str, n: int) -> str:
+    """decode(encode(text)[:n])."""
+    if _ENC is not None:
+        return _ENC.decode(_ENC.encode(text or "")[:n])
+    return "".join(_split_py(text)[:n])
+
+
+def _tail_py(text: str, n: int) -> str:
+    """decode(encode(text)[-n:]); "" when n <= 0."""
+    if n <= 0:
+        return ""
+    if _ENC is not None:
+        return _ENC.decode(_ENC.encode(text or "")[-n:])
+    return "".join(_split_py(text)[-n:])
 
 
 @pandas_udf(ArrayType(IntegerType()))
@@ -204,62 +218,13 @@ def count_tokens(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield s.map(lambda t: len(_encode_py(t if t is not None else "")))
 
 
-@pandas_udf(ArrayType(IntegerType()))
-def count_tokens3(
-    it: Iterator[tuple[pd.Series, pd.Series, pd.Series]]
-) -> Iterator[pd.Series]:
-    """Fused counter: token counts of THREE text columns in one Arrow
-    round-trip (one Python eval node instead of three in the trim plan)."""
-    for a, b, c in it:
-        yield pd.Series(
-            [
-                [len(_encode_py(x if x is not None else "")) for x in row]
-                for row in zip(a, b, c)
-            ]
-        )
-
-
-@pandas_udf(StructType([StructField("head", StringType()), StructField("tail", StringType())]))
-def slice_head_tail(
-    it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]]
-) -> Iterator[pd.DataFrame]:
-    """Fused trim: decode(encode(head_text)[:n_head]) AND
-    decode(encode(tail_text)[-n_tail:]) in one Arrow round-trip."""
-    for head_text, n_head, tail_text, n_tail in it:
-        if _ENC is not None:
-            heads = [
-                _ENC.decode(_ENC.encode(t or "")[: int(k)]) for t, k in zip(head_text, n_head)
-            ]
-            tails = [
-                _ENC.decode(_ENC.encode(t or "")[-int(k):]) if int(k) > 0 else ""
-                for t, k in zip(tail_text, n_tail)
-            ]
-        else:
-            heads = ["".join(_split_py(t or "")[: int(k)]) for t, k in zip(head_text, n_head)]
-            tails = [
-                "".join(_split_py(t or "")[-int(k):]) if int(k) > 0 else ""
-                for t, k in zip(tail_text, n_tail)
-            ]
-        yield pd.DataFrame({"head": heads, "tail": tails})
-
-
 @pandas_udf(StringType())
 def detokenize_head(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
     """decode(encode(text)[:n]) — head-slice used for RAG payload trimming
     (ChatService.cs:214). Implemented by re-splitting so it works without
     tiktoken; with tiktoken it decodes real token ids."""
     for text, n in it:
-        if _ENC is not None:
-            yield pd.Series(
-                [
-                    _ENC.decode(_ENC.encode(t or "")[: int(k)])
-                    for t, k in zip(text, n)
-                ]
-            )
-        else:
-            yield pd.Series(
-                ["".join(_split_py(t or "")[: int(k)]) for t, k in zip(text, n)]
-            )
+        yield pd.Series([_head_py(t, int(k)) for t, k in zip(text, n)])
 
 
 @pandas_udf(StringType())
@@ -267,20 +232,7 @@ def detokenize_tail(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Se
     """decode(encode(text)[-n:]) — tail-slice used for conversation trimming
     (ChatService.cs:218-221)."""
     for text, n in it:
-        if _ENC is not None:
-            yield pd.Series(
-                [
-                    _ENC.decode(_ENC.encode(t or "")[-int(k):]) if int(k) > 0 else ""
-                    for t, k in zip(text, n)
-                ]
-            )
-        else:
-            yield pd.Series(
-                [
-                    "".join(_split_py(t or "")[-int(k):]) if int(k) > 0 else ""
-                    for t, k in zip(text, n)
-                ]
-            )
+        yield pd.Series([_tail_py(t, int(k)) for t, k in zip(text, n)])
 
 
 def approx_token_count(col: Column | str) -> Column:

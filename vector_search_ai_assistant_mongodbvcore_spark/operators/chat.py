@@ -14,16 +14,17 @@ Reference: ChatService.GetChatCompletionAsync
                                                      (:273-282, ChatPane.razor:255-264)  S10/A4/F1
 
 This module is ORCHESTRATION, exactly like the reference's ChatService: each
-step is a driver-side call whose heavy lifting (the top-k scan, the window,
-the trim) runs distributed; per-turn scalars (the query vector, the payload
-string) legitimately live on the driver. The batch/scale form of steps 1-5
-over millions of rows is the operators themselves (vector_search,
-conversation_text, build_prompts, RemoteCompleter.udf).
+step is a driver-side call whose heavy lifting (the top-k scan, the window)
+runs distributed; per-turn scalars (the query vector, the payload string)
+legitimately live on the driver. Steps 1 and 4 work on one string each and
+run on the driver with the same functions their batch operators map (the
+embedder, `trim_prompt`), so neither starts a Spark job. The batch/scale
+form of steps 1-5 over millions of rows is the operators themselves
+(vector_search, conversation_text, build_prompts, RemoteCompleter.udf).
 
-Rows built on the driver (the 1-row trim frame here, the session store's
-session and message rows, the empty read of a new session) become Arrow
-LocalRelations through `session.local_frame`, so evaluating them starts no
-Python worker.
+Rows built on the driver (the session store's session and message rows,
+the empty read of a new session) become Arrow LocalRelations through
+`session.local_frame`, so evaluating them starts no Python worker.
 """
 
 from __future__ import annotations
@@ -39,15 +40,16 @@ from vector_search_ai_assistant_mongodbvcore_spark.operators.conversation import
     DEFAULT_MAX_CONVERSATION_TOKENS,
     conversation_text,
 )
-from vector_search_ai_assistant_mongodbvcore_spark.operators.prompt_budget import (
+# build_prompts is step 4's batch form; perfbench/rag_chat.py traces it here
+from vector_search_ai_assistant_mongodbvcore_spark.operators.prompt_budget import (  # noqa: F401
     build_prompts,
+    trim_prompt,
 )
 from vector_search_ai_assistant_mongodbvcore_spark.operators.sessions import SessionStore
 from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search import (
     vector_search_payload,
     vector_search_payload_reranked,
 )
-from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 
 
 def chat_turn(
@@ -118,20 +120,18 @@ def chat_turn(
     )
     conversation = conv_rows[0]["conversation"] if conv_rows else ""
 
-    # 4. token-budget trim (ChatService.cs:172-243) — reuses the column
-    #    operator on a 1-row frame so there is exactly one trim implementation
-    one = local_frame(
-        spark,
-        [(rag_payload, conversation, user_prompt)],
-        "rag_payload string, conversation string, prompt string",
+    # 4. token-budget trim (ChatService.cs:172-243) on the driver, with the
+    #    function build_prompts maps over its rows: one trim implementation,
+    #    and no Spark job or Python worker for a single triple
+    trimmed = trim_prompt(
+        rag_payload, conversation, user_prompt, max_tokens=max_completion_tokens
     )
-    trimmed = build_prompts(one, max_tokens=max_completion_tokens).collect()[0]
 
     # 5. completion (OpenAiService.cs:163-209); usage maps to the completion
     #    message exactly as ChatService.cs:145-149 does (PromptTokens = the
     #    completion call's prompt-side usage)
     completion_text, completion_prompt_tokens, completion_tokens = completer.complete(
-        trimmed["conversation_and_prompt"], trimmed["trimmed_rag"]
+        trimmed.conversation_and_prompt, trimmed.trimmed_rag
     )
 
     # 6. persist transactionally + token rollup (ChatService.cs:302-320)

@@ -24,26 +24,80 @@ deliberately under-reduces — the output can still exceed the budget; the
 buffer is counted in the estimate but never restored after trimming; RAG
 keeps its head, conversation keeps its tail; the user prompt is appended to
 the conversation with a newline in BOTH branches; `round()` is C#
-Math.Round, which defaults to banker's rounding (MidpointRounding.ToEven) —
-Spark's ROUND is HALF_UP and would diverge at exact .5, so bround() it is.
+Math.Round, which defaults to banker's rounding (MidpointRounding.ToEven),
+as Python's round() does — Spark's ROUND is HALF_UP and would diverge at
+exact .5.
 
-Implemented as a pure column program plus two Arrow-batched slice UDFs, so it
-trims MILLIONS of (rag, conversation, prompt) triples per pass — the
-reference trims one triple per chat turn.
+`trim_prompt` is the one implementation of that arithmetic. A chat turn
+calls it on the driver for its single triple; `build_prompts` maps it over
+Arrow batches in one pandas UDF, so it trims MILLIONS of (rag, conversation,
+prompt) triples per pass — the reference trims one triple per chat turn.
 """
 
 from __future__ import annotations
 
+from typing import Iterator, NamedTuple
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from vector_search_ai_assistant_mongodbvcore_spark.functions.tokenizer import (
-    count_tokens3,
-    slice_head_tail,
+    _encode_py,
+    _head_py,
+    _tail_py,
 )
 
 DEFAULT_MAX_COMPLETION_TOKENS = 2000  # Search/appsettings.json:16
 TOKEN_ESTIMATE_BUFFER = 200  # ChatService.cs:180
+
+
+
+class Trimmed(NamedTuple):
+    """One trimmed triple: the columns build_prompts adds, in its order."""
+
+    rag_tokens_out: int
+    conv_tokens_out: int
+    trimmed_rag: "str | None"
+    trimmed_conversation: "str | None"
+    conversation_and_prompt: "str | None"
+
+
+_TRIMMED_DDL = (
+    "rag_tokens_out int, conv_tokens_out int, trimmed_rag string, "
+    "trimmed_conversation string, conversation_and_prompt string"
+)
+
+
+def trim_prompt(
+    rag: "str | None",
+    conversation: "str | None",
+    prompt: "str | None",
+    max_tokens: int = DEFAULT_MAX_COMPLETION_TOKENS,
+    buffer_tokens: int = TOKEN_ESTIMATE_BUFFER,
+) -> Trimmed:
+    """Proportionally trim (rag, conversation) when
+    rag + conversation + prompt + buffer > max_tokens.
+
+    A NULL text counts as zero tokens; it passes through as NULL when under
+    budget and is sliced as "" when over, and a NULL conversation or prompt
+    makes conversation_and_prompt NULL (SQL concat)."""
+    rag_t, conv_t, prompt_t = (len(_encode_py(x)) for x in (rag, conversation, prompt))
+    # ChatService.cs:196 totalTokens — this full estimate is ALSO the
+    # percentage denominator (:205-206), so ragPct+convPct < 1 and the
+    # reference deliberately under-trims. Do not "fix" to rag+conv.
+    total = rag_t + conv_t + prompt_t + buffer_tokens
+    if total > max_tokens:
+        to_reduce = total - max_tokens
+        # C# Math.Round = banker's rounding = Python round()
+        rag_t = max(round(rag_t - (rag_t / total) * to_reduce), 0)
+        conv_t = max(round(conv_t - (conv_t / total) * to_reduce), 0)
+        rag = _head_py(rag, rag_t)
+        conversation = _tail_py(conversation, conv_t)
+    # ChatService.cs:228/:237 — both branches end with conv + "\n" + prompt
+    joined = None if conversation is None or prompt is None else conversation + "\n" + prompt
+    return Trimmed(rag_t, conv_t, rag, conversation, joined)
 
 
 def build_prompts(
@@ -54,57 +108,26 @@ def build_prompts(
     prompt_col: str = "prompt",
     buffer_tokens: int = TOKEN_ESTIMATE_BUFFER,
 ) -> DataFrame:
-    """Proportionally trim (rag, conversation) when
-    rag + conversation + prompt + buffer > max_tokens.
+    """`trim_prompt` over every row of `df`.
 
-    Adds columns: trimmed_rag, trimmed_conversation, conversation_and_prompt,
-    rag_tokens_out, conv_tokens_out.
+    Adds columns: rag_tokens_out, conv_tokens_out, trimmed_rag,
+    trimmed_conversation, conversation_and_prompt.
 
-    Plan shape: TWO Python eval nodes total — one fused count UDF (all three
-    texts per Arrow batch) and one fused head/tail slice UDF — instead of
-    five chained single-column evals; everything between is codegen'd column
-    arithmetic."""
-    d = df.withColumn(
-        "_counts", count_tokens3(F.col(rag_col), F.col(conv_col), F.col(prompt_col))
-    )
-    d = (
-        d.withColumn("_rag_t", F.col("_counts")[0])
-        .withColumn("_conv_t", F.col("_counts")[1])
-        .withColumn("_prompt_t", F.col("_counts")[2])
-    )
-    # ChatService.cs:196 totalTokens — this full estimate is ALSO the
-    # percentage denominator (:205-206), so ragPct+convPct < 1 and the
-    # reference deliberately under-trims. Do not "fix" to rag+conv.
-    total = F.col("_rag_t") + F.col("_conv_t") + F.col("_prompt_t") + F.lit(buffer_tokens)
-    to_reduce = (total - F.lit(max_tokens)).cast("double")
-    denom = total.cast("double")  # always >= buffer_tokens > 0
-    rag_pct = F.col("_rag_t") / denom
-    conv_pct = F.col("_conv_t") / denom
-    # C# Math.Round = banker's rounding -> Spark bround()
-    new_rag = F.bround(F.col("_rag_t") - rag_pct * to_reduce).cast("int")
-    new_conv = F.bround(F.col("_conv_t") - conv_pct * to_reduce).cast("int")
-    over = total > max_tokens
+    Plan shape: ONE Python eval node — a pandas UDF that maps trim_prompt
+    over each Arrow batch and returns the five fields as one struct."""
 
-    d = (
-        d.withColumn("rag_tokens_out", F.when(over, F.greatest(new_rag, F.lit(0))).otherwise(F.col("_rag_t")))
-        .withColumn("conv_tokens_out", F.when(over, F.greatest(new_conv, F.lit(0))).otherwise(F.col("_conv_t")))
-        .withColumn(
-            "_sliced",
-            slice_head_tail(
-                F.col(rag_col), F.col("rag_tokens_out"), F.col(conv_col), F.col("conv_tokens_out")
-            ),
-        )
-        .withColumn(
-            "trimmed_rag", F.when(over, F.col("_sliced.head")).otherwise(F.col(rag_col))
-        )
-        .withColumn(
-            "trimmed_conversation",
-            F.when(over, F.col("_sliced.tail")).otherwise(F.col(conv_col)),
-        )
-        # ChatService.cs:228/:237 — both branches end with conv + "\n" + prompt
-        .withColumn(
-            "conversation_and_prompt",
-            F.concat(F.col("trimmed_conversation"), F.lit("\n"), F.col(prompt_col)),
-        )
-    )
-    return d.drop("_rag_t", "_conv_t", "_prompt_t", "_counts", "_sliced")
+    @pandas_udf(_TRIMMED_DDL)
+    def trim(
+        it: Iterator[tuple[pd.Series, pd.Series, pd.Series]]
+    ) -> Iterator[pd.DataFrame]:
+        for rag, conv, prompt in it:
+            yield pd.DataFrame(
+                [
+                    trim_prompt(*row, max_tokens=max_tokens, buffer_tokens=buffer_tokens)
+                    for row in zip(rag, conv, prompt)
+                ],
+                columns=Trimmed._fields,
+            )
+
+    d = df.withColumn("_trim", trim(F.col(rag_col), F.col(conv_col), F.col(prompt_col)))
+    return d.withColumns({f: F.col("_trim")[f] for f in Trimmed._fields}).drop("_trim")

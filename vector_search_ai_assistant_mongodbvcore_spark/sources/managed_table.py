@@ -1437,7 +1437,9 @@ class ManagedTable:
         keep = _prune_files(self._version_files(d), self._filestats(v), checked)
         residual = _filters_to_column(checked)
         if not keep:
-            schema = self.spark.read.parquet(d).schema  # metadata-only
+            # not metadata-only: schema inference runs a one-task Spark
+            # job (`parquet at`) over the version's footers
+            schema = self.spark.read.parquet(d).schema
             return local_frame(self.spark, [], schema)
         return self.spark.read.parquet(*keep).filter(residual)
 
