@@ -11,10 +11,16 @@ a suite failure instead of a silent drift.
 
 from __future__ import annotations
 
-import pytest
+import ast
+import pathlib
 
+import pytest
+from pyspark.sql import functions as F
+
+import vector_search_ai_assistant_mongodbvcore_spark as pkg
 from tests.conftest import SF_DIR
 from vector_search_ai_assistant_mongodbvcore_spark import queries as Q
+from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import planned_partitions
 
 
 def _next_job_id(spark) -> int:
@@ -131,3 +137,87 @@ def test_scan_cache_invalidate_notifies_listeners(spark, tmp_path):
         assert len(seen) == 2
     finally:
         scan_cache._LISTENERS.remove(probe)
+
+
+def _construct_jobs(spark, build) -> int:
+    before = _next_job_id(spark)
+    build()
+    return _next_job_id(spark) - before
+
+
+def test_dsir_pipeline_construct_runs_zero_jobs(spark, tables):
+    """The DSIR stage of prepare_training_corpus sits after exchanges
+    (quality joins); its under-parallel guards read the planned count
+    instead of executing those stages to count partitions."""
+    from vector_search_ai_assistant_mongodbvcore_spark.operators.pipeline import (
+        prepare_training_corpus,
+    )
+
+    docs = tables["documents"]
+    target = docs.filter(F.col("source").isin("src0", "src1")).select("text")
+    assert _construct_jobs(spark, lambda: prepare_training_corpus(
+        docs, min_quality=0.0, chunk_size=1000, chunk_overlap=0,
+        dsir_target=target, dsir_top_k=50, dsir_num_buckets=2000,
+    )) == 0
+
+
+@pytest.mark.parametrize("shape", ["aggregate", "repartition"])
+def test_kmv_profile_many_construct_runs_zero_jobs(spark, tables, shape):
+    """The KMV fold gate reads P off the plan: a post-exchange input's
+    FIRST construction runs no job."""
+    from vector_search_ai_assistant_mongodbvcore_spark.operators.sketches import (
+        kmv_profile_many,
+    )
+
+    docs = tables["documents"]
+    if shape == "aggregate":
+        src = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+        cols = ["source", "n"]
+    else:
+        src = docs.repartition(4)
+        cols = ["doc_id", "source"]
+    assert _construct_jobs(spark, lambda: kmv_profile_many(src, cols, k=16)) == 0
+
+
+def test_planned_partitions_reads_the_plan(spark, tables):
+    """Scan-side shapes: the same count as the RDD conversion. Exchange
+    shapes: the planned count, where the RDD conversion would run the AQE
+    stages. Never a job."""
+    docs = tables["documents"]
+    lineitem = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
+    scans = {
+        "one-file scan": docs,
+        "lineitem sf0.1": lineitem,
+        "union of scans": docs.select("text").union(docs.select("text")),
+        "coalesce(2)": lineitem.coalesce(2),
+        "range(7)": spark.range(0, 100, 1, numPartitions=7),
+    }
+    for label, df in scans.items():
+        got = []
+        assert _construct_jobs(spark, lambda: got.append(planned_partitions(df))) == 0
+        assert got == [df.rdd.getNumPartitions()], label
+    assert planned_partitions(scans["coalesce(2)"]) == 2
+    assert planned_partitions(scans["range(7)"]) == 7
+
+    initial = int(spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
+    for df, want in (
+        (docs.groupBy("source").count(), initial),
+        (docs.repartition(24), 24),
+    ):
+        got = []
+        assert _construct_jobs(spark, lambda: got.append(planned_partitions(df))) == 0
+        assert got == [want]
+
+
+def test_no_rdd_access_in_package():
+    """The under-parallel decision lives in plans.inspect: an RDD
+    conversion on a plan-builder path executes the input's AQE stages at
+    construction, so no package code may touch `.rdd`."""
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Attribute) and node.attr == "rdd"
+    ]
+    assert not offenders, f".rdd access in the package: {offenders}"

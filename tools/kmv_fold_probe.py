@@ -34,6 +34,7 @@ def main() -> None:
 
     from vector_search_ai_assistant_mongodbvcore_spark import get_spark
     from vector_search_ai_assistant_mongodbvcore_spark.operators import sketches as SK
+    from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import planned_partitions
 
     spark = get_spark(app_name="kmv-fold-probe")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
@@ -87,14 +88,16 @@ def main() -> None:
     assert rows_off == rows_on, "sketch rows diverge between fold ON/OFF"
     assert prof_off == prof_on, "profile rows diverge between fold ON/OFF"
 
+    planned = planned_partitions(docs)  # the P the fold gate reads
+
     print(
         json.dumps(
             {
                 "factor": factor,
-                "partitions": docs.rdd.getNumPartitions(),
+                "partitions": planned,
                 "k": k,
                 "cols": len(cols),
-                "partials_per_col": docs.rdd.getNumPartitions() * k,
+                "partials_per_col": planned * k,
                 "one_level_s": [w_off1, w_off2],
                 "folded_s": [w_on1, w_on2],
                 "bit_identical": True,

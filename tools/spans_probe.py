@@ -1,8 +1,11 @@
 """remove_duplicated_spans memory-formula probe (judge r11 directive #6).
 
-r11 validated the `ng_shuffle_partitions` lever at 256x only (P=512 cut
-the first-occurrence aggregate stage 26.6 -> 18.0 s). This probe pins
-the formula at TWO scales and for bounded=True:
+r11 validated a fixed ng-exchange partition count at 256x only (P=512
+cut the first-occurrence aggregate stage 26.6 -> 18.0 s). The engine's
+exchange is adaptive; this probe pins the per-task state formula (the
+model a count derived from planned input size would follow,
+operators/dedup.remove_duplicated_spans) at TWO scales and for
+bounded=True:
 
   * replicates sf0.1 documents at each factor (same replication as
     scale_probe.py — each copy gets fresh doc ids, so distinct (ng,doc)

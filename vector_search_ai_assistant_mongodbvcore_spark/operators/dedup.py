@@ -693,7 +693,6 @@ def remove_duplicated_spans(
     id_col: str = "doc_id",
     n: int = 8,
     bounded: bool = False,
-    ng_shuffle_partitions: "int | None" = None,
 ) -> DataFrame:
     """(id_col, text_col, clean_text, n_words, n_removed): the APPLY form of
     duplicated_ngram_stats — Lee et al. 2021 (arXiv:2107.06499) REMOVES the
@@ -735,11 +734,12 @@ def remove_duplicated_spans(
     now BOUNDED, not sort-shaped: the hash aggregates spill to the
     sort-based fallback per-map-full, and the hash join's build side is
     the duplicated-DISTINCT-ngram slice — ~(distinct duplicated ngrams
-    / shuffle partitions) x (key + 2 longs) bytes per task, shrinkable
-    linearly via `ng_shuffle_partitions` (formula + TWO-scale measured
-    validation, 128x and 256x, at the in-body comment; reproduce with
-    `python tools/spans_probe.py 128 256`, which also gates the lever's
-    gain). Re-probed at 64x/256x after the rewrite: see SCALE.md.
+    / shuffle partitions) x (key + 2 longs) bytes per task, shrinking
+    linearly in the exchange's partition count (formula + TWO-scale
+    measured validation, 128x and 256x, at the in-body comment;
+    reproduce with `python tools/spans_probe.py 128 256`, which also
+    gates a fixed count's gain). Re-probed at 64x/256x after the
+    rewrite: see SCALE.md.
     Docs with NULL text pass through
     with clean_text NULL and zero counts (no shingle rows, left join).
 
@@ -756,10 +756,10 @@ def remove_duplicated_spans(
     # ONE explicit ng-keyed exchange feeds both the aggregate and the
     # join's probe side (identical subtrees — AQE reuses the shuffle
     # stage, so the probe re-reads shuffle files instead of paying a
-    # second exchange or recomputing the explode). Default: let AQE
-    # size the exchange. `ng_shuffle_partitions` pins a FIXED count
-    # instead — per-task memory here is hash state, and it shrinks
-    # linearly in the partition count:
+    # second exchange or recomputing the explode). AQE sizes the
+    # exchange. Per-task memory here is hash state, and it shrinks
+    # linearly in the partition count P — the model a count derived
+    # from planned input size would be sized by:
     #     agg state/task  ≈ distinct(ng, doc) × (ng bytes + 24) / P
     #     join build/task ≈ distinct dup ngrams × (ng bytes + 16) / P
     # TWO-SCALE validation (r12, tools/spans_probe.py at 128x AND 256x —
@@ -777,14 +777,11 @@ def remove_duplicated_spans(
     #     removes by scaling executors, which no P can emulate here.
     #   * at fixed F the 128..512-P curve is FLAT (+/-3%): once state
     #     fits, extra partitions trade state for shuffle blocks ~1:1 on
-    #     one box — so the engine DEFAULT stays adaptive locally, and
-    #     on a real cluster the knob (or the advisory size) is set from
-    #     the formula so state/task stays heap-resident as data and
-    #     executors scale together.
-    if ng_shuffle_partitions is not None:
-        by_ng = toks.repartition(int(ng_shuffle_partitions), F.col("ng"))
-    else:
-        by_ng = toks.repartition(F.col("ng"))
+    #     one box — so the exchange stays adaptive locally, and on a
+    #     real cluster P (or the advisory size) comes from the formula
+    #     so state/task stays heap-resident as data and executors scale
+    #     together.
+    by_ng = toks.repartition(F.col("ng"))
     # stage 1: collapse each (ngram, doc) to its min position + its
     # occurrence count — all-long buffers, stays HashAggregate
     per_doc = by_ng.groupBy("ng", id_col).agg(

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_search_ai_assistant_mongodbvcore_spark.functions.text import words
+from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import fan_out
 
 __all__ = [
     "gram_array",
@@ -116,9 +117,8 @@ def fit_lambda(
     long], the rounded log-likelihood-ratio per bucket in 1e-6 units, for
     buckets observed on either side (unseen buckets never occur in any
     doc). Nothing is collected; the fit executes inside whatever action
-    consumes the table. On a scan input construction runs no Spark job;
-    on an input that already has an exchange, the under-parallel guard's
-    partition count executes the input's AQE stages.
+    consumes the table, and construction runs no Spark job at any input
+    shape.
 
     Pass exactly one of `target` (a separate target-domain frame; only
     its `text_col` is read) or `target_flag` (a boolean Column over `df`
@@ -145,13 +145,8 @@ def fit_lambda(
         src = df.select(F.lit(1).alias("_r"), F.lit(0).alias("_t"), text_col).union(
             target.select(F.lit(0).alias("_r"), F.lit(1).alias("_t"), text_col)
         )
-    # the fit hashes every gram of its input; if the source arrives in
-    # fewer partitions than cores (single parquet file), fan the projected
-    # text out first — the md5 work is what dominates. At cluster scale
-    # the input is already wide and this is a no-op.
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < p:
-        src = src.repartition(p)
+    # under-parallel guard (plans.inspect.fan_out): the gram md5 dominates
+    src = fan_out(src)
     staged = src.select(
         "_r", "_t", _doc_words(text_col).alias("_w")
     ).select(
@@ -228,12 +223,8 @@ def _serve_join(
     num_buckets: int,
 ) -> DataFrame:
     """The scoring tail over fit_lambda's ["bucket", "lam_micro"] frame."""
-    # same under-partitioned guard as the fit: the gram explode + md5 is
-    # CPU-bound, and a single-row-group parquet file arrives as ONE task
-    probe = df.select(id_col, text_col)
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if probe.rdd.getNumPartitions() < p:
-        probe = probe.repartition(p)
+    # the fit's under-parallel guard (plans.inspect.fan_out)
+    probe = fan_out(df.select(id_col, text_col))
     doc_sums = (
         hashed_gram_buckets(probe, id_col, text_col, num_buckets)
         .join(F.broadcast(lam_df), "bucket")

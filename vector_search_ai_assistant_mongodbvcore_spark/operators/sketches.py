@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import planned_partitions
 from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 
 __all__ = [
@@ -73,14 +74,14 @@ _FOLD_GROUPS = 1024
 # single merge task (P*k <= 2^18) the one-level merge is both safe and
 # faster (A/B at sf0.1, P=32, k=256: two-level +0.13 s median on the
 # gate query for zero benefit), past it the two-level shape caps every
-# buffer. P is the planned scan partition count — the same pre-AQE
-# heuristic (and the same misread-costs-only-performance argument) as
-# queries._fanned; at 100 TB P ~ 10^5-10^6 and the fold is always on.
+# buffer. P is plans.inspect.planned_partitions (an upper bound past an
+# exchange; a misread costs only performance); at 100 TB P ~ 10^5-10^6
+# and the fold is always on.
 _FOLD_CUTOVER = 1 << 18
 
 
 def _fold_worthwhile(df: DataFrame, k: int, n_cols: int = 1) -> bool:
-    return df.rdd.getNumPartitions() * k * n_cols > _FOLD_CUTOVER
+    return planned_partitions(df) * k * n_cols > _FOLD_CUTOVER
 
 
 def _kmv_fold_partials(local: DataFrame, k: int, by_col: bool) -> DataFrame:

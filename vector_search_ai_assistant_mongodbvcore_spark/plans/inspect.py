@@ -5,6 +5,10 @@ things that matter at 100 TB: shuffles (Exchange), whole-stage-codegen
 coverage, scan pushdown (PushedFilters / ReadSchema width), broadcast vs
 sort-merge joins, and the top-k pattern (TakeOrderedAndProject vs global
 Sort). Tests assert on these so perf regressions fail CI, not the bench.
+
+`planned_partitions(df)` / `fan_out(df)` are the engine's one answer to
+"is this input under-parallel?", read from the physical plan without
+running a Spark job.
 """
 
 from __future__ import annotations
@@ -67,6 +71,56 @@ def plan_report(df: DataFrame) -> PlanReport:
     for m in re.finditer(r"PushedFilters: \[(.*?)\]", txt):
         rep.scans.append({"pushed_filters": m.group(1)})
     return rep
+
+
+def planned_partitions(df: DataFrame) -> int:
+    """The partition count Spark plans for `df`, read off its physical
+    plan without executing anything (no Spark job, at any input shape).
+
+    A file-scan leaf reports its planned split (file listing +
+    maxPartitionBytes math), the same count the DataFrame's RDD reports
+    for a scan. A plan with exchanges is read through AQE's initial
+    plan, so an exchange reports its PLANNED count: the repartition's
+    n, or the shuffle-partition start (`initialPartitionNum`) for an
+    aggregate or join, an upper bound on what AQE coalescing leaves.
+    Converting to an RDD would execute the AQE stages to answer
+    instead. A misread in either direction costs only a fan-out
+    or fold choice, never correctness: every consumer is
+    row-order-independent."""
+    return _planned(df._jdf.queryExecution().executedPlan())
+
+
+def _planned(node) -> int:
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _planned(node.initialPlan())
+    if name == "InMemoryTableScanExec":  # its RDD would execute the cached plan
+        return _planned(node.relation().cachedPlan())
+    n = node.outputPartitioning().numPartitions()
+    if name == "CoalesceExec":  # coalesce(n) never adds partitions
+        return min(n, _planned(node.child()))
+    if n > 0:
+        return n
+    kids = [node.children().apply(i) for i in range(node.children().size())]
+    if not kids:
+        # a leaf builds its RDD lazily (a file scan from its listing), so
+        # asking for the partitions runs nothing
+        return node.execute().getNumPartitions()
+    counts = [_planned(k) for k in kids]
+    return sum(counts) if name == "UnionExec" else max(counts)
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """The one fan-out rule: `df` unchanged when its planned partitions
+    already cover the cores, else `df.repartition(defaultParallelism)`.
+
+    One-file single-row-group parquet plans as ONE scan partition, so
+    everything Catalyst fuses into the scan runs on one core until the
+    first exchange; the repartition spreads it. At scale the scan
+    already arrives in thousands of partitions, and an unconditional
+    repartition would be a full extra shuffle bought for nothing."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return df if planned_partitions(df) >= cores else df.repartition(cores)
 
 
 def bounded_window_key(anchor) -> "Column":

@@ -37,6 +37,7 @@ from vector_search_ai_assistant_mongodbvcore_spark.functions.embedder import (
 from vector_search_ai_assistant_mongodbvcore_spark.operators import dedup as DD
 from vector_search_ai_assistant_mongodbvcore_spark.operators import keyword_search as KW
 from vector_search_ai_assistant_mongodbvcore_spark.operators.chunking import chunking_sql as _chunking_sql
+from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import fan_out
 from vector_search_ai_assistant_mongodbvcore_spark.operators.conversation import (
     conversation_window,
 )
@@ -158,31 +159,12 @@ def _tables(spark: SparkSession, sf_dir: str):
 def _fanned(
     spark: SparkSession, sf_dir: str, name: str, cols: "tuple[str, ...] | None" = None
 ) -> DataFrame:
-    """Table `name` (projected to `cols` first, when given) with its scan
-    fanned out across the cores — ONLY when the scan itself is
-    under-parallel.
-
-    The testdata tables are single-file single-row-group parquet, so EVERY
-    scan — and everything Catalyst fuses into it (MinHash signatures,
-    shingle explosion, md5 hashing, decimal casts, partial aggregation) —
-    runs on ONE core until the first exchange; the repartition fixes that
-    (measured 1.7x on minhash_band_pairs). At 100 TB the scan already
-    arrives in thousands of partitions, where an unconditional repartition
-    would be a FULL EXTRA SHUFFLE of the corpus bought for nothing — so
-    the fan-out is GATED on the scan's partition count and skipped when
-    the scan is already at least core-parallel.
-
-    The gate is a HEURISTIC, not an invariant (ADVICE r11, low):
-    .rdd.getNumPartitions() reports the PRE-AQE planned scan split
-    (file listing + maxPartitionBytes math — no data job runs, though
-    the .rdd conversion itself builds a Python-side plan), and AQE may
-    execute with a different partitioning. It still beats a raw input
-    file count — a single huge splittable parquet file plans as many
-    scan partitions, where file count would buy a pointless full
-    shuffle. A >= cores misread in either direction costs only the
-    fan-out optimization, never correctness: only queries whose results
-    are ROW-ORDER-INDEPENDENT use this (no sampling, no positional
-    ids).
+    """Table `name` (projected to `cols` first, when given) through
+    plans.inspect.fan_out: fanned out across the cores ONLY when the scan
+    itself is under-parallel (measured 1.7x on minhash_band_pairs over a
+    one-file bench table), a pass-through at 100 TB. Only queries whose
+    results are ROW-ORDER-INDEPENDENT use this (no sampling, no
+    positional ids).
 
     A/B-measured per consumer (r15, idle box, min-of-3 at sf0.1): the
     fan WINS where the scan-fused per-row work is heavy — decimal
@@ -208,12 +190,10 @@ def _fanned(
         src = _tables(spark, sf_dir)[name]
         if cols is not None:
             src = src.select(*cols)
-        cores = spark.sparkContext.defaultParallelism
-        # the .rdd conversion builds a Python-side plan (~0.1-0.3 s of
-        # driver work) — memoized with the table handles (same
-        # immutability argument; the gate alone constructs this 20+
-        # times per session)
-        cached = src if src.rdd.getNumPartitions() >= cores else src.repartition(cores)
+        # the gate plans the scan (driver work) — memoized with the table
+        # handles (same immutability argument; the gate alone constructs
+        # this 20+ times per session)
+        cached = fan_out(src)
         per_session[key] = cached
     return cached
 
