@@ -82,9 +82,11 @@ def test_misfit_rows_raise(spark, rows, schema, error):
 
 def test_chat_turn_job_counts(spark, tmp_path):
     """A turn's driver-built frames and its prompt trim run no jobs of
-    their own: 11 jobs for a new session's first turn and 15 for a session
-    whose history is past the 1000-token window (16 and 18 with list-built
-    frames, 12 and 16 with the trim as a 1-row Spark job)."""
+    their own, and a table read infers no schema: 5 jobs for a new
+    session's first turn and 9 for a session whose history is past the
+    1000-token window (11 and 15 with a schema-inference job per table
+    read, 16 and 18 with list-built frames as well, 12 and 16 with the
+    trim as a 1-row Spark job)."""
     emb = HashNgramEmbedder(dims=64)
     catalog = ManagedTable(spark, str(tmp_path / "catalog"))
     catalog.overwrite(
@@ -110,8 +112,8 @@ def test_chat_turn_job_counts(spark, tmp_path):
         return _next_job_id(spark) - before
 
     jobs(long_session, "warm-up question?")
-    assert jobs(store.create_session(), "What kind of bikes?") == 11
-    assert jobs(long_session, "And helmets?") == 15
+    assert jobs(store.create_session(), "What kind of bikes?") == 5
+    assert jobs(long_session, "And helmets?") == 9
 
 
 def test_create_data_frame_only_in_local_frame():

@@ -112,3 +112,48 @@ def test_time_travel_read(spark, tmp_path):
     with pytest.raises(FileNotFoundError, match="vacuumed"):
         t.read(version=0)
     assert sorted(tuple(r) for r in t.read(version=1).collect()) == v1
+
+
+def test_read_pins_committed_schema(spark, tmp_path, monkeypatch):
+    """read() passes each version's committed schema to the reader instead
+    of inferring it from footers (a one-task `parquet at` job per read).
+    The pinned schema must equal the inferred one: for non-nullable `lit`,
+    timestamp and array columns, after an append that adds a column, for
+    a time-travel read, for a pruned-to-nothing filtered read, and for the
+    session store's tables. A version committed without a recorded schema
+    still reads by inference."""
+    from vector_search_ai_assistant_mongodbvcore_spark.operators.sessions import SessionStore
+
+    from tests.test_prepared_plans import _next_job_id
+
+    t = ManagedTable(spark, str(tmp_path / "pinned"))
+    base = spark.range(3).select(
+        "id",
+        F.lit(7).alias("n"),
+        F.current_timestamp().alias("ts"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("vec"),
+    )
+    t.overwrite(base)                                         # v0
+    t.append(base.withColumn("tag", F.lit("x")))              # v1: adds a column
+    store = SessionStore(spark, str(tmp_path / "sessions"))
+    store.add_turn(store.create_session(), "q", 1, "a", 2, 3)
+
+    def inferred(table, v):
+        return spark.read.parquet(table._data_dir(v)).schema
+
+    reads = [(t, 0), (t, 1), (store.sessions, None), (store.messages, None)]
+    for table, v in reads:
+        want = inferred(table, table.current_version() if v is None else v)
+        before = _next_job_id(spark)
+        assert table.read(version=v).schema == want
+        assert _next_job_id(spark) == before, "read() inferred the schema"
+    assert "tag" in t.read().columns and "tag" not in t.read(version=0).columns
+    assert t.read(version=0, filters=[("id", ">", 100)]).schema == inferred(t, 0)
+    assert sorted(r.id for r in t.read().collect()) == [0, 0, 1, 1, 2, 2]
+
+    legacy = t._version_doc()
+    legacy.pop("schemas")
+    monkeypatch.setattr(t, "_version_doc", lambda: legacy)
+    before = _next_job_id(spark)
+    assert t.read().schema == inferred(t, 1)
+    assert _next_job_id(spark) > before  # inference runs its footer job

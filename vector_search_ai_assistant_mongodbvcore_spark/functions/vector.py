@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from typing import Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,8 +28,11 @@ def _to_col(v: Column | str | Sequence[float]) -> Column:
         return v
     if isinstance(v, str):
         return F.col(v)
-    # literal query vector: array<double> literal, folded by Catalyst
-    return F.array(*[F.lit(float(x)) for x in v])
+    # literal query vector: ONE array<double> Literal node. An
+    # F.array(*[F.lit(x) ...]) form would put `dims` Literal nodes into
+    # every plan (each use of the vector repeats them) for the analyzer
+    # and optimizer to walk before constant folding collapses them.
+    return F.lit(np.asarray(v, dtype=np.float64))
 
 
 def dot_product(a: Column | str | Sequence[float], b: Column | str | Sequence[float]) -> Column:
@@ -84,8 +88,6 @@ def stack_vectors(s: "pd.Series", dims: int | None = None):
     vectors in the batch) raises ValueError: silently truncating/padding a
     wrong-dimension embedding would skew every cosine score downstream
     without any signal that the input was bad."""
-    import numpy as np
-
     vals = s.to_numpy()
     valid = [v is not None and len(v) > 0 for v in vals]
     lens = {len(v) for v, ok in zip(vals, valid) if ok}
@@ -115,7 +117,6 @@ def make_cosine_scores_pandas(query: Sequence[float], normalized: bool = False):
     Arrow batch beats per-element codegen. Used by operators.vector_search
     when `use_pandas=True`.
     """
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType
 

@@ -89,7 +89,9 @@ def chat_turn(
     prompt_tokens = int(counts[0])
 
     # 2. retrieval -> ONE space-joined payload string (MongoDbService.cs:227-229),
-    #    with the rerank stage between retrieve and payload when enabled
+    #    with the rerank stage between retrieve and payload when enabled: one
+    #    TakeOrdered recall scan, then one Arrow pass over the recalled rows
+    #    ranks, scores, fuses and joins them (no window, sort or aggregate)
     if rerank_candidates is not None:
         payload_frame = vector_search_payload_reranked(
             corpus,

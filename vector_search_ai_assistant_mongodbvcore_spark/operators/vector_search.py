@@ -15,13 +15,21 @@ keeps a k-row heap, the driver merges P×k rows — no global sort, no full
 shuffle. That is the exact distributed analogue of the index's top-k and it
 scales linearly with partition count; at 100 TB the scan dominates and the
 vector column is the only wide column read (column pruning keeps the payload
-columns out of the scoring scan when project-after-limit).
+columns out of the scoring scan when project-after-limit). The query vector
+enters the plan as one array<double> literal (functions/vector._to_col).
+
+The served chat path (`vector_search_payload_reranked`) is that recall scan
+plus ONE Arrow pass over its top-n rows: retrieval rank, rerank score,
+fusion, the top-k cut and the space-joined payload are one Python function
+(operators/rerank.rank_candidates), with no window, sort or aggregate after
+the TakeOrdered.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -124,9 +132,12 @@ def vector_search_payload_reranked(
 ) -> DataFrame:
     """Retrieve → rerank → payload: the production serving chain the raw
     reference path (vector_search_payload) lacks. Cosine top-`n_candidates`
-    recall stage, then one Arrow-batched rerank pass (operators/rerank.py)
-    scores each serialized candidate against `query_text`, and the payload
-    is space-joined in the reranked order.
+    recall stage, then ONE Arrow pass over the recalled rows
+    (`coalesce(1).mapInArrow`; TakeOrdered output is one partition
+    already, so the coalesce adds no exchange) ranks them by retrieval
+    score, scores each serialized candidate against `query_text`, fuses,
+    keeps k and space-joins the payload — the same `rank_candidates` that
+    `rerank` maps, so there is one implementation of the order.
 
     `fuse=True` (default) RRF-fuses the scorer's order with the cosine
     retrieval order (rerank(rank_col=...)): the scorer refines rather than
@@ -135,63 +146,44 @@ def vector_search_payload_reranked(
     of the old replace-by-default policy. Set fuse=False only for a scorer
     known to dominate the retriever (a real cross-encoder).
 
-    Scale shape: the corpus-sized work is still the TakeOrdered recall scan;
-    rerank touches only n_candidates rows, so payload cost stays independent
-    of corpus size. `scorer_factory` defaults to the deterministic lexical
-    scorer; inject the cross-encoder transport in production."""
+    Returns a 1-row DataFrame with column `payload` ("" when no candidate
+    is recalled). Scale shape: the corpus-sized work is still the
+    TakeOrdered recall scan; rerank touches only n_candidates rows, so
+    payload cost stays independent of corpus size. `scorer_factory`
+    defaults to the deterministic lexical scorer; inject the cross-encoder
+    transport in production."""
     from vector_search_ai_assistant_mongodbvcore_spark.operators.rerank import (
         lexical_overlap_scorer,
-        rerank,
+        rank_candidates,
+        rank_positions,
+        serving_order,
     )
 
-    if scorer_factory is None:
-        scorer_factory = lexical_overlap_scorer
+    scorer = (scorer_factory or lexical_overlap_scorer)(query_text)
     topk = vector_search(df, query_vector, k=n_candidates, vector_col=vector_col)
     doc_cols = [c for c in topk.columns if c not in id_cols and c != "score"]
     id_col = next((c for c in id_cols if c in topk.columns), None) or doc_cols[0]
-    # retrieval rank over the top-n frame: bounded window (<= n_candidates
-    # rows post-LIMIT), same benign shape as ranked_topk
-    from pyspark.sql import Window
-
-    from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import bounded_window_key
-
-    rw = Window.partitionBy(bounded_window_key(id_col)).orderBy(F.col("score").desc(), F.col(id_col))
-    docs = topk.withColumn("_ret_rank", F.row_number().over(rw)).select(
-        F.col(id_col).alias("_cand_id"),
-        F.col("_ret_rank"),
+    docs = topk.select(
+        F.col(id_col).alias("id"),
+        F.col("score"),
         F.to_json(F.struct(*[F.col(c) for c in doc_cols])).alias("doc"),
     )
-    ranked = rerank(
-        docs,
-        query_text,
-        k=k,
-        text_col="doc",
-        id_col="_cand_id",
-        scorer_factory=scorer_factory,
-        keep_cols=("doc",),
-        rank_col="_ret_rank" if fuse else None,
-    )
-    order_col = "fused" if fuse else "rerank_score"
-    # struct(-score, id, doc) sorted ascending = score desc, id asc — the
-    # exact rerank order, reproduced inside the aggregate so the payload is
-    # deterministic regardless of partitioning
-    return ranked.agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            (-F.col(order_col)).alias("neg"),
-                            F.col("_cand_id").alias("i"),
-                            F.col("doc").alias("doc"),
-                        )
-                    )
-                ),
-                lambda s: s["doc"],
-            ),
-            " ",
-        ).alias("payload")
-    )
+
+    def payload(batches):
+        ids, scores, texts = [], [], []
+        for b in batches:
+            ids += b.column(0).to_pylist()
+            scores += b.column(1).to_pylist()
+            texts += b.column(2).to_pylist()
+        out = ""
+        if ids:
+            ret_ranks = rank_positions(scores, ids) if fuse else None
+            top, rerank_scores, fused = rank_candidates(ids, texts, scorer, k, ret_ranks)
+            key = fused if fuse else rerank_scores
+            out = " ".join(texts[i] for i in serving_order(top, key, ids, texts))
+        yield pa.RecordBatch.from_pydict({"payload": [out]})
+
+    return docs.coalesce(1).mapInArrow(payload, "payload string")
 
 
 def embed_and_search(

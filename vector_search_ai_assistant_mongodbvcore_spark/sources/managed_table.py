@@ -788,6 +788,18 @@ def _trim_version_map(m: "dict[str, str]", new_version: int) -> "dict[str, str]"
     return {k: v for k, v in m.items() if int(k) > new_version - _DOC_MAP_KEEP}
 
 
+def _schema_reader(spark: SparkSession, schema_json: "str | None"):
+    """A reader pinned to a committed schema, so a read infers nothing
+    from footers (inference is a one-task `parquet at` Spark job). Spark
+    reads file columns as nullable either way. No schema recorded: the
+    plain reader, which infers."""
+    if not schema_json:
+        return spark.read
+    from pyspark.sql.types import StructType
+
+    return spark.read.schema(StructType.fromJson(json.loads(schema_json)))
+
+
 def _txn_applied(
     doc: dict, txn_note: str, since_version: "int | None"
 ) -> "bool | None":
@@ -1293,6 +1305,7 @@ class ManagedTable:
         staged_stats = _collect_parquet_stats(
             self._version_files(staging), bloom_cols, plane=self.plane
         )
+        schema_json = df.schema.json()
         attempt = uuid.uuid4().hex[:8]
         published: "str | None" = None
         stats_path: "str | None" = None
@@ -1335,6 +1348,12 @@ class ManagedTable:
                         "stats_files": {
                             **_trim_version_map(cur_doc.get("stats_files", {}), new_v),
                             str(new_v): stats_name,
+                        },
+                        # reads pin the written schema instead of
+                        # inferring it (see _schema_reader)
+                        "schemas": {
+                            **_trim_version_map(cur_doc.get("schemas", {}), new_v),
+                            str(new_v): schema_json,
                         },
                     }
                 )
@@ -1419,29 +1438,29 @@ class ManagedTable:
         `bloom_cols` additionally consult the per-file Bloom filters,
         which prune even when every file's range spans the key space
         (interleaved GUID-ish keys)."""
-        cur = self.current_version()
+        doc = self._version_doc()
+        cur = doc["version"]
         if cur < 0:
             raise FileNotFoundError(f"table {self.path} has no committed version")
         v = cur if version is None else version
         if not 0 <= v <= cur:
             raise ValueError(f"version {v} out of range [0, {cur}]")
-        d = self._data_dir(v)
+        d = self._data_dir(v, doc)
         if not self.plane.exists(d):
             raise FileNotFoundError(
                 f"version {v} was vacuumed (oldest retained snapshot wins); "
                 f"current={cur}"
             )
+        # a version committed before schemas were recorded infers its own
+        reader = _schema_reader(self.spark, doc.get("schemas", {}).get(str(v)))
         if not filters:
-            return self.spark.read.parquet(d)
+            return reader.parquet(d)
         checked = _validate_filters(filters)
         keep = _prune_files(self._version_files(d), self._filestats(v), checked)
         residual = _filters_to_column(checked)
         if not keep:
-            # not metadata-only: schema inference runs a one-task Spark
-            # job (`parquet at`) over the version's footers
-            schema = self.spark.read.parquet(d).schema
-            return local_frame(self.spark, [], schema)
-        return self.spark.read.parquet(*keep).filter(residual)
+            return local_frame(self.spark, [], reader.parquet(d).schema)
+        return reader.parquet(*keep).filter(residual)
 
     def pruned_files(self, filters, version: int | None = None) -> tuple[int, int]:
         """(files kept, files total) a filtered read of `version` would
@@ -1967,12 +1986,7 @@ class BucketedTable:
         for the schema — nondeterministically dropping newer columns.
         The manifest schema is the evolved union (see _evolve_schema);
         files that predate a column yield NULLs for it, deterministically."""
-        sch = doc.get("schema")
-        if not sch:
-            return self.spark.read  # pre-schema manifest: legacy behavior
-        from pyspark.sql.types import StructType
-
-        return self.spark.read.schema(StructType.fromJson(json.loads(sch)))
+        return _schema_reader(self.spark, doc.get("schema"))
 
     def _read_buckets(self, manifest: dict[str, list[str]], buckets: list[int]) -> DataFrame | None:
         paths = [d for b in buckets for d in manifest.get(str(b), [])]
