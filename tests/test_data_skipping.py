@@ -406,7 +406,9 @@ def test_bloom_in_filter(bloomed):
 
 
 def test_bloom_declaration_is_sticky(spark, bloomed):
-    """A later writer constructed WITHOUT bloom_cols keeps indexing."""
+    """A later writer constructed WITHOUT bloom_cols keeps indexing: the
+    version it appends carries sid Bloom filters, and a multi-file
+    version it writes prunes on them."""
     t2 = ManagedTable(spark, bloomed.path)  # no declaration
     extra = spark.range(800, 1000).select(
         F.col("id").alias("k"),
@@ -414,9 +416,14 @@ def test_bloom_declaration_is_sticky(spark, bloomed):
         (F.col("id") % 7).alias("cat"),
     )
     t2.append(extra.repartition(2, "cat"))
+    stats = t2._filestats(t2.current_version())
+    assert stats and all("sid" in (s.get("blooms") or {}) for s in stats.values())
     sid = _guid(900)
+    assert _ids(t2.read(filters=[("sid", "=", sid)])) == [900]
+    # an append of a small table is one file; pruning needs several
+    t2.overwrite(t2.read().repartition(4, "k"))
     kept, total = t2.pruned_files([("sid", "=", sid)])
-    assert kept < total
+    assert total == 4 and kept < total, (kept, total)
     assert _ids(t2.read(filters=[("sid", "=", sid)])) == [900]
 
 

@@ -6,6 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 from vector_search_ai_assistant_mongodbvcore_spark.sources.managed_table import (
     ManagedTable,
     TransactionalWriter,
@@ -157,3 +158,123 @@ def test_read_pins_committed_schema(spark, tmp_path, monkeypatch):
     before = _next_job_id(spark)
     assert t.read().schema == inferred(t, 1)
     assert _next_job_id(spark) > before  # inference runs its footer job
+
+
+def _files(t) -> int:
+    return len(t._version_files(t._data_dir(t.current_version())))
+
+
+def _rows(t) -> list:
+    return sorted(tuple(r) for r in t.read().collect())
+
+
+def _eight_file_table(spark, path):
+    t = ManagedTable(spark, path)
+    df = spark.range(0, 200).select(
+        F.col("id").alias("k"), F.md5(F.col("id").cast("string")).alias("s")
+    )
+    t.overwrite(df.repartition(8))
+    return t, df
+
+
+def test_rewrites_size_files_by_planned_bytes(spark, tmp_path):
+    """Every rewrite (merge, append, delete, delete_by_keys) of a small
+    table writes ONE file, whatever the split of the version it read,
+    with the same rows as before; overwrite keeps the caller's
+    partitioning."""
+    t, df = _eight_file_table(spark, str(tmp_path / "sized"))
+    assert _files(t) == 8
+    want = {r.k: r.s for r in df.collect()}
+
+    t.merge(local_frame(spark, [(3, "x"), (500, "y")], "k long, s string"), ["k"])
+    want.update({3: "x", 500: "y"})
+    assert _files(t) == 1 and _rows(t) == sorted(want.items())
+
+    t.append(local_frame(spark, [(501, "z")], "k long, s string"))
+    want[501] = "z"
+    assert _files(t) == 1 and _rows(t) == sorted(want.items())
+
+    t.delete(F.col("k") >= 150)
+    want = {k: s for k, s in want.items() if k < 150}
+    assert _files(t) == 1 and _rows(t) == sorted(want.items())
+
+    t.delete_by_keys(local_frame(spark, [(0,), (7,)], "k long"), ["k"])
+    del want[0], want[7]
+    assert _files(t) == 1 and _rows(t) == sorted(want.items())
+
+    t.overwrite(df.repartition(8))
+    assert _files(t) == 8
+
+
+def test_planned_bytes_reads_the_plan_without_a_job(spark, tmp_path):
+    """planned_bytes is the optimizer's estimate: a scan's file bytes, a
+    merge frame's scan plus its source rows, and no Spark job."""
+    from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import planned_bytes
+
+    from tests.test_prepared_plans import _next_job_id
+
+    t, _ = _eight_file_table(spark, str(tmp_path / "est"))
+    on_disk = sum(
+        os.path.getsize(f) for f in t._version_files(t._data_dir(t.current_version()))
+    )
+    src = local_frame(spark, [(3, "x")], "k long, s string")
+    merged = t.read().join(src.select("k"), "k", "left_anti").unionByName(src)
+    before = _next_job_id(spark)
+    assert planned_bytes(t.read()) == on_disk
+    assert planned_bytes(merged) > on_disk
+    assert _next_job_id(spark) == before
+
+
+def test_low_advisory_size_writes_ceil_bytes_files(spark, tmp_path):
+    """A rewrite writes ceil(planned bytes / advisory size) files: with the
+    advisory size set to a third of the frame, an append writes three."""
+    import math
+
+    from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import planned_bytes
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    t, df = _eight_file_table(spark, str(tmp_path / "low"))
+    extra = local_frame(spark, [(900, "n")], "k long, s string")
+    total = planned_bytes(t.read().unionByName(extra, allowMissingColumns=True))
+    size = math.ceil(total / 3)
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(size))
+    try:
+        t.append(extra)
+    finally:
+        spark.conf.set(key, old)
+    assert _files(t) == math.ceil(total / size) == 3
+    assert t.read().count() == 201
+
+
+def test_commit_retry_is_logged(spark, tmp_path, caplog):
+    """A commit that loses its version check logs one retry record naming
+    the table and the attempt; the commit that lands logs its version,
+    mode and file count at DEBUG."""
+    import logging
+
+    name = "vector_search_ai_assistant_mongodbvcore_spark.sources.managed_table"
+    t = ManagedTable(spark, str(tmp_path / "logged"))
+    t.overwrite(local_frame(spark, [(1, "a")], "k long, s string"))
+    commit = t._commit
+    forced = []
+
+    def stale_once(df, mode_note, expected=None, txn_note=None):
+        if not forced:
+            forced.append(expected)
+            expected -= 1  # as if a concurrent writer had moved the pointer
+        return commit(df, mode_note, expected=expected, txn_note=txn_note)
+
+    t._commit = stale_once
+    with caplog.at_level(logging.DEBUG, logger=name):
+        t.merge(local_frame(spark, [(2, "b")], "k long, s string"), ["k"])
+    records = [r for r in caplog.records if r.name == name]
+    retries = [r for r in records if r.levelno == logging.INFO]
+    assert len(retries) == 1, [r.getMessage() for r in records]
+    assert t.path in retries[0].getMessage()
+    assert "attempt 1 of" in retries[0].getMessage()
+    assert any(
+        r.levelno == logging.DEBUG and "committed v1 (merge, 1 files)" in r.getMessage()
+        for r in records
+    ), [r.getMessage() for r in records]
+    assert _rows(t) == [(1, "a"), (2, "b")]

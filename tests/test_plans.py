@@ -206,3 +206,37 @@ def test_plans_md_covers_every_registered_query():
     # a present-but-broken row must fail too (plan_audit refuses to
     # write one, but guard the committed artifact independently)
     assert "ERROR" not in text, "PLANS.md contains ERROR rows"
+
+
+def test_plan_report_counts_every_python_node(spark):
+    """python_evals counts each Python evaluation node Spark prints: scalar
+    and batch UDFs, grouped-aggregate and window pandas UDFs, the
+    mapInPandas / mapInArrow passes and the grouped-map forms."""
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("double")
+    def mean_(v: pd.Series) -> float:
+        return v.mean()
+
+    df = spark.range(4).select(
+        "id", (F.col("id") % 2).alias("g"), F.col("id").cast("double").alias("v")
+    )
+    grouped = df.groupBy("g")
+    shapes = {
+        "ArrowEvalPython": df.select(F.pandas_udf(lambda v: v, "double")("v")),
+        "BatchEvalPython": df.select(F.udf(lambda v: v, "double")("v")),
+        "ArrowAggregatePython": grouped.agg(mean_("v")),
+        "ArrowWindowPython": df.select(mean_("v").over(Window.partitionBy("g"))),
+        "MapInPandas": df.mapInPandas(lambda it: it, df.schema),
+        "MapInArrow": df.mapInArrow(lambda it: it, df.schema),
+        "FlatMapGroupsInPandas": grouped.applyInPandas(lambda p: p, df.schema),
+        "FlatMapGroupsInArrow": grouped.applyInArrow(lambda t: t, df.schema),
+        "FlatMapCoGroupsInPandas": grouped.cogroup(grouped).applyInPandas(
+            lambda a, b: a, df.schema
+        ),
+    }
+    for node, frame in shapes.items():
+        rep = plan_report(frame)
+        assert f") {node}" in rep.raw and rep.python_evals == 1, (node, rep.summary())

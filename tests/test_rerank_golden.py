@@ -23,6 +23,7 @@ from vector_search_ai_assistant_mongodbvcore_spark.operators.rerank import reran
 from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search import (
     vector_search_payload_reranked,
 )
+from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import plan_report
 
 GOLDEN = pathlib.Path(__file__).parent / "fixtures" / "rerank_golden.json"
 
@@ -228,6 +229,7 @@ def test_reranked_payload_is_one_arrow_pass(spark):
     names = _nodes(df)
     assert sum("MapInArrow" in n for n in names) == 1, names
     assert not [n for n in names if "Window" in n or "ArrowEvalPython" in n], names
+    assert plan_report(df).python_evals == 1
 
 
 def test_literal_query_vector_is_one_literal(spark):

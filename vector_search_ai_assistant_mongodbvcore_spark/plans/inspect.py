@@ -8,7 +8,8 @@ Sort). Tests assert on these so perf regressions fail CI, not the bench.
 
 `planned_partitions(df)` / `fan_out(df)` are the engine's one answer to
 "is this input under-parallel?", read from the physical plan without
-running a Spark job.
+running a Spark job; `planned_bytes(df)` is the optimizer's size
+estimate, read the same way.
 """
 
 from __future__ import annotations
@@ -49,6 +50,17 @@ class PlanReport:
         )
 
 
+# every physical node Spark 4.1 prints for a Python evaluation: scalar
+# UDFs and UDTFs, grouped-aggregate and window pandas UDFs, mapInPandas /
+# mapInArrow, (co)grouped applyInPandas / applyInArrow, and the stateful
+# streaming forms
+_PYTHON_NODE = re.compile(
+    r"\(\d+\) (?:(?:Arrow|Batch)EvalPython(?:UDTF)?|Arrow(?:Aggregate|Window)Python"
+    r"|MapIn(?:Pandas|Arrow)|FlatMap(?:Co)?GroupsIn(?:Pandas|Arrow)(?:WithState)?"
+    r"|TransformWithStateInPySpark)\b"
+)
+
+
 def plan_report(df: DataFrame) -> PlanReport:
     """Counts operate on the '(n) NodeName' detail headers only — each node
     appears twice in formatted output (tree line + detail section), and a
@@ -65,9 +77,7 @@ def plan_report(df: DataFrame) -> PlanReport:
         re.findall(r"\(\d+\) Sort\b[^(]*?Arguments: \[[^\]]*\], true,", txt)
     )
     rep.codegen_stages = len(set(re.findall(r"WholeStageCodegen \((\d+)\)", txt)))
-    rep.python_evals = len(
-        re.findall(r"\(\d+\) (?:ArrowEvalPython|BatchEvalPython|MapInPandas)\b", txt)
-    )
+    rep.python_evals = len(_PYTHON_NODE.findall(txt))
     for m in re.finditer(r"PushedFilters: \[(.*?)\]", txt):
         rep.scans.append({"pushed_filters": m.group(1)})
     return rep
@@ -108,6 +118,18 @@ def _planned(node) -> int:
         return node.execute().getNumPartitions()
     counts = [_planned(k) for k in kids]
     return sum(counts) if name == "UnionExec" else max(counts)
+
+
+def planned_bytes(df: DataFrame) -> int:
+    """The size in bytes the optimizer estimates for `df`: its optimized
+    plan's `sizeInBytes` statistic, computed without running a Spark job.
+
+    A file scan estimates its files' on-disk bytes, a LocalRelation its
+    rows times the row width, a union the sum of its children, a filter
+    its input and a left-anti join its left input. A leaf of unknown
+    size (an RDD scan) estimates `spark.sql.defaultSizeInBytes`,
+    Long.MaxValue by default."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -68,6 +68,7 @@ from __future__ import annotations
 import base64
 import hashlib
 import json
+import logging
 import math
 import os
 import time
@@ -77,10 +78,13 @@ from functools import lru_cache, reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import planned_bytes
 from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
 from vector_search_ai_assistant_mongodbvcore_spark.sources.dataplane import (
     LocalDataPlane,
 )
+
+_log = logging.getLogger(__name__)
 
 # default DATA plane (sources/dataplane.py — the seam object-store
 # deployments swap; see its module docstring). Tests patch this module
@@ -866,7 +870,41 @@ def _retry_conflicts(attempt, attempts: int = _CONFLICT_RETRIES, table=None):
                 raise
             if i == attempts - 1:
                 raise
+            _log.info(
+                "%s: attempt %d of %d lost to %s; retrying",
+                getattr(table, "path", "?"), i + 1, attempts,
+                "a concurrent commit" if isinstance(e, CommitConflict)
+                else "a vanished snapshot file",
+            )
             time.sleep(0.05 * (i + 1))
+
+
+_MAX_PARTITIONS = (1 << 31) - 1  # coalesce(n) takes a JVM int
+
+
+def _sized(df: DataFrame) -> DataFrame:
+    """`df` coalesced to as many partitions as its planned size warrants:
+    max(1, ceil(planned_bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)),
+    so a rewrite writes one file per advisory-size share of its bytes.
+
+    Every ManagedTable rewrite (append, merge, delete, delete_by_keys)
+    passes its frame through here; `overwrite` writes the caller's
+    partitioning unchanged, so a clustered overwrite keeps its files.
+    Coalesce is narrow: whatever runs upstream of the last exchange (a
+    broadcast anti-join, the upserts an incremental apply embeds) runs
+    in those n tasks, each handling about the advisory size, the bound
+    AQE puts on a coalesced shuffle partition. n at or above the frame's
+    own partition count changes nothing, so a table at scale keeps its
+    split without a second planning pass. A plan of unknown size keeps
+    its partitioning: an RDD scan, such as `createDataFrame` over a
+    Python list, estimates Long.MaxValue (`session.local_frame` builds
+    a sized LocalRelation instead)."""
+    spark = df.sparkSession
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    n = math.ceil(planned_bytes(df) / advisory)
+    return df if n >= _MAX_PARTITIONS else df.coalesce(max(1, n))
 
 
 def _staging_dir(table_path: str) -> str:
@@ -904,11 +942,11 @@ def _post_commit_maintenance(table) -> None:
     try:
         table._vacuum(keep=2)
     except Exception:
-        pass
+        _log.debug("%s: vacuum skipped", table.path, exc_info=True)
     try:
         _sweep_stale_staging(table.path, table.plane)
     except Exception:
-        pass
+        _log.debug("%s: staging sweep skipped", table.path, exc_info=True)
 
 
 def _sweep_stale_staging(table_path: str, plane=None) -> None:
@@ -954,6 +992,13 @@ def _sweep_stale_staging(table_path: str, plane=None) -> None:
 # `col > 100` under Spark semantics — float pruning on footer stats is
 # unsound. Integer/string/boolean/date-int columns cover the engine's
 # key, timestamp-as-long and category predicates.
+#
+# Pruning needs several files to choose between. An `overwrite` writes
+# the caller's partitioning; every other ManagedTable rewrite writes one
+# file per advisory-size share of its planned bytes (`_sized`), so a
+# small table is ONE file per version and a filtered read opens it
+# whatever the stats say. Min-max and Bloom pruning act once a version
+# spans several advisory-size files.
 
 _FILTER_OPS = ("=", "==", "<", "<=", ">", ">=", "in", "is_null")
 
@@ -1287,9 +1332,15 @@ class ManagedTable:
         never collide on a path; the committer's transaction covers only
         the version check and the pointer swap (plus, for POSIX, the
         mutex that makes check+swap atomic — the conditional-put
-        committer needs no mutex at all)."""
+        committer needs no mutex at all).
+
+        One file per partition of `df`: the rewrites hand in a frame
+        sized by `_sized` (one file per advisory-size share of its
+        planned bytes, so a small table is one file per version), while
+        `overwrite` hands in the caller's partitioning as is."""
         staging = _staging_dir(self.path)
         df.write.mode("overwrite").parquet(staging)
+        staged_files = self._version_files(staging)
         # stats (footer reads + opt-in Bloom column reads — potentially
         # seconds on a bloom-indexed table) are computed on the STAGING
         # files OUTSIDE the transaction and path-remapped after publish.
@@ -1303,7 +1354,7 @@ class ManagedTable:
             else list(self.bloom_cols)
         )
         staged_stats = _collect_parquet_stats(
-            self._version_files(staging), bloom_cols, plane=self.plane
+            staged_files, bloom_cols, plane=self.plane
         )
         schema_json = df.schema.json()
         attempt = uuid.uuid4().hex[:8]
@@ -1378,6 +1429,10 @@ class ManagedTable:
                         self.plane.remove_file(stats_path)
                     except FileNotFoundError:
                         pass
+        _log.debug(
+            "%s: committed v%d (%s, %d files)",
+            self.path, new_v, mode_note, len(staged_files),
+        )
         _post_commit_maintenance(self)
         return new_v
 
@@ -1487,7 +1542,7 @@ class ManagedTable:
         def attempt() -> int:
             base = self.current_version()
             out = (
-                self.read(version=base).unionByName(df, allowMissingColumns=True)
+                _sized(self.read(version=base).unionByName(df, allowMissingColumns=True))
                 if base >= 0
                 else df
             )
@@ -1502,7 +1557,12 @@ class ManagedTable:
         MATCHED INSERT ALL, with equality on `keys` (the reference uses the
         compound (categoryId, _id) key, MongoDbService.cs:254-258).
         `txn_note` stamps the committed version's entry in the pointer
-        doc's rolling txns map (TransactionalWriter.consistent_read)."""
+        doc's rolling txns map (TransactionalWriter.consistent_read).
+
+        The merged frame is sized by `_sized`: the broadcast anti-join
+        against a small key set would otherwise keep the scan's split
+        count and write that many files of a few KB each; a small table
+        writes one file per version."""
 
         def attempt() -> int:
             base = self.current_version()
@@ -1511,7 +1571,7 @@ class ManagedTable:
             target = self.read(version=base)
             # rows in target not matched by source + all source rows
             remaining = target.join(source.select(*keys), on=keys, how="left_anti")
-            merged = remaining.unionByName(source, allowMissingColumns=True)
+            merged = _sized(remaining.unionByName(source, allowMissingColumns=True))
             return self._commit(merged, "merge", expected=base, txn_note=txn_note)
 
         return _retry_conflicts(attempt, table=self)
@@ -1558,7 +1618,9 @@ class ManagedTable:
             base = self.current_version()
             target = self.read(version=base)
             return self._commit(
-                target.filter(~predicate | predicate.isNull()), "delete", expected=base
+                _sized(target.filter(~predicate | predicate.isNull())),
+                "delete",
+                expected=base,
             )
 
         return _retry_conflicts(attempt, table=self)
@@ -1570,7 +1632,7 @@ class ManagedTable:
             base = self.current_version()
             target = self.read(version=base)
             return self._commit(
-                target.join(source.select(*keys), on=keys, how="left_anti"),
+                _sized(target.join(source.select(*keys), on=keys, how="left_anti")),
                 "delete-keys",
                 expected=base,
             )
