@@ -177,7 +177,7 @@ def _eight_file_table(spark, path):
     return t, df
 
 
-def test_rewrites_size_files_by_planned_bytes(spark, tmp_path):
+def test_small_rewrites_write_one_file(spark, tmp_path):
     """Every rewrite (merge, append, delete, delete_by_keys) of a small
     table writes ONE file, whatever the split of the version it read,
     with the same rows as before; overwrite keeps the caller's
@@ -208,7 +208,12 @@ def test_rewrites_size_files_by_planned_bytes(spark, tmp_path):
 
 def test_planned_bytes_reads_the_plan_without_a_job(spark, tmp_path):
     """planned_bytes is the optimizer's estimate: a scan's file bytes, a
-    merge frame's scan plus its source rows, and no Spark job."""
+    merge frame's scan plus its source rows, and no Spark job. A plan of
+    unknown size or with a Python evaluation node has no usable
+    estimate."""
+    from vector_search_ai_assistant_mongodbvcore_spark.functions.embedder import (
+        HashNgramEmbedder,
+    )
     from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import planned_bytes
 
     from tests.test_prepared_plans import _next_job_id
@@ -219,31 +224,50 @@ def test_planned_bytes_reads_the_plan_without_a_job(spark, tmp_path):
     )
     src = local_frame(spark, [(3, "x")], "k long, s string")
     merged = t.read().join(src.select("k"), "k", "left_anti").unionByName(src)
+    rdd_src = spark.createDataFrame([(3, "x")], "k long, s string")
+    embedded = src.withColumn("v", HashNgramEmbedder(dims=64).udf()(F.col("s")))
     before = _next_job_id(spark)
     assert planned_bytes(t.read()) == on_disk
     assert planned_bytes(merged) > on_disk
+    assert planned_bytes(t.read().unionByName(rdd_src)) is None
+    assert planned_bytes(t.read().unionByName(embedded, allowMissingColumns=True)) is None
     assert _next_job_id(spark) == before
 
 
-def test_low_advisory_size_writes_ceil_bytes_files(spark, tmp_path):
-    """A rewrite writes ceil(planned bytes / advisory size) files: with the
-    advisory size set to a third of the frame, an append writes three."""
-    import math
-
-    from vector_search_ai_assistant_mongodbvcore_spark.plans.inspect import planned_bytes
-
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    t, df = _eight_file_table(spark, str(tmp_path / "low"))
-    extra = local_frame(spark, [(900, "n")], "k long, s string")
-    total = planned_bytes(t.read().unionByName(extra, allowMissingColumns=True))
-    size = math.ceil(total / 3)
+def test_rewrite_over_the_bound_keeps_its_partitioning(spark, tmp_path):
+    """The one-file bound is AQE's minimum partition size: with it set
+    below the frame's planned bytes (runtime conf, restored after), an
+    append keeps the scan's split; at its default the next append is
+    one file again."""
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    t, _ = _eight_file_table(spark, str(tmp_path / "bound"))
     old = spark.conf.get(key)
-    spark.conf.set(key, str(size))
+    spark.conf.set(key, "1b")
     try:
-        t.append(extra)
+        t.append(local_frame(spark, [(900, "n")], "k long, s string"))
     finally:
         spark.conf.set(key, old)
-    assert _files(t) == math.ceil(total / size) == 3
+    assert _files(t) > 1
+    t.append(local_frame(spark, [(901, "m")], "k long, s string"))
+    assert _files(t) == 1
+    assert t.read().count() == 202
+
+
+def test_unestimated_rewrites_keep_their_partitioning(spark, tmp_path):
+    """A merge whose source embeds with a pandas UDF, or is a
+    createDataFrame RDD scan, has no usable size estimate and is not
+    coalesced: the embedding keeps running in several tasks."""
+    from vector_search_ai_assistant_mongodbvcore_spark.functions.embedder import (
+        HashNgramEmbedder,
+    )
+
+    t, _ = _eight_file_table(spark, str(tmp_path / "udf"))
+    src = local_frame(spark, [(3, "x"), (500, "y")], "k long, s string")
+    t.merge(src.withColumn("v", HashNgramEmbedder(dims=8).udf()(F.col("s"))), ["k"])
+    assert _files(t) > 1
+    assert t.read().filter("v IS NOT NULL").count() == 2
+    t.merge(spark.createDataFrame([(4, "z")], "k long, s string"), ["k"])
+    assert _files(t) > 1
     assert t.read().count() == 201
 
 

@@ -42,10 +42,10 @@ class SessionStore:
         # session_id is a GUID — interleaved across files, so min-max
         # ranges never prune it; the Bloom declaration serves the
         # reference's point reads (MongoDbService.cs:471-492) from the
-        # filter index instead. Each merge writes one file per
-        # advisory-size share of the table's bytes, so until a table
-        # outgrows one such file the point read opens its one file and
-        # the filter index waits for the versions that span several
+        # filter index instead. A merge of a table under 1 MB writes
+        # one file (ManagedTable's `_one_file_if_small`), so until a
+        # table outgrows that the point read opens its one file and the
+        # filter index waits for the versions that span several
         self.sessions = ManagedTable(
             spark, f"{root}/sessions", bloom_cols=("session_id",)
         )

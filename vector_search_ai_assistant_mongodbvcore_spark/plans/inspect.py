@@ -50,15 +50,19 @@ class PlanReport:
         )
 
 
-# every physical node Spark 4.1 prints for a Python evaluation: scalar
-# UDFs and UDTFs, grouped-aggregate and window pandas UDFs, mapInPandas /
+# every node Spark 4.1 prints for a Python evaluation: scalar UDFs and
+# UDTFs, grouped-aggregate and window pandas UDFs, mapInPandas /
 # mapInArrow, (co)grouped applyInPandas / applyInArrow, and the stateful
-# streaming forms
-_PYTHON_NODE = re.compile(
-    r"\(\d+\) (?:(?:Arrow|Batch)EvalPython(?:UDTF)?|Arrow(?:Aggregate|Window)Python"
+# streaming forms. The optimized logical plan and the formatted physical
+# plan use the same names.
+_PYTHON_NODES = (
+    r"(?:(?:Arrow|Batch)EvalPython(?:UDTF)?|Arrow(?:Aggregate|Window)Python"
     r"|MapIn(?:Pandas|Arrow)|FlatMap(?:Co)?GroupsIn(?:Pandas|Arrow)(?:WithState)?"
     r"|TransformWithStateInPySpark)\b"
 )
+_PYTHON_NODE = re.compile(r"\(\d+\) " + _PYTHON_NODES)
+# a logical tree line: the node name after the "+- " / ":  " indent
+_PYTHON_LOGICAL = re.compile(r"^[ :|+-]*" + _PYTHON_NODES, re.M)
 
 
 def plan_report(df: DataFrame) -> PlanReport:
@@ -120,16 +124,26 @@ def _planned(node) -> int:
     return sum(counts) if name == "UnionExec" else max(counts)
 
 
-def planned_bytes(df: DataFrame) -> int:
+def planned_bytes(df: DataFrame) -> "int | None":
     """The size in bytes the optimizer estimates for `df`: its optimized
     plan's `sizeInBytes` statistic, computed without running a Spark job.
+    None when the plan has no usable estimate.
 
-    A file scan estimates its files' on-disk bytes, a LocalRelation its
-    rows times the row width, a union the sum of its children, a filter
-    its input and a left-anti join its left input. A leaf of unknown
-    size (an RDD scan) estimates `spark.sql.defaultSizeInBytes`,
-    Long.MaxValue by default."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    A file scan estimates its files' on-disk (compressed) bytes, a
+    LocalRelation its rows times the row width, a union the sum of its
+    children, a filter its input and a left-anti join its left input.
+    Two plans have no usable estimate. A leaf of unknown size (an RDD
+    scan, such as `createDataFrame` over a Python list) estimates
+    `spark.sql.defaultSizeInBytes`, Long.MaxValue by default. A Python
+    evaluation node sizes the columns it adds by their types' default
+    widths, so an array<float> embedding counts as one float per row,
+    and a mapInPandas pass may emit any number of rows."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    size = int(plan.stats().sizeInBytes())
+    unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    if size >= unknown or _PYTHON_LOGICAL.search(plan.toString()):
+        return None
+    return size
 
 
 def fan_out(df: DataFrame) -> DataFrame:

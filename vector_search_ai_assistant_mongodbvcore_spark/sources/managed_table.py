@@ -879,32 +879,37 @@ def _retry_conflicts(attempt, attempts: int = _CONFLICT_RETRIES, table=None):
             time.sleep(0.05 * (i + 1))
 
 
-_MAX_PARTITIONS = (1 << 31) - 1  # coalesce(n) takes a JVM int
+def _one_file_if_small(df: DataFrame) -> DataFrame:
+    """`df` as one partition when its planned size is at most
+    `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB), the
+    size below which AQE never leaves a coalesced shuffle partition;
+    otherwise `df` unchanged. A small rewrite then writes one file
+    instead of one per scan split.
 
+    The bound is on the optimizer's estimate (`planned_bytes`), not on
+    measured bytes: a file scan estimates its compressed on-disk bytes,
+    so the one task may decode several times the bound. A plan without a
+    usable estimate keeps its partitioning: an RDD scan such as
+    `createDataFrame` over a Python list (`session.local_frame` builds a
+    sized LocalRelation instead), or a Python evaluation node, whose
+    output the estimate undercounts. Coalesce is narrow, so the second
+    case also keeps the upserts an incremental apply embeds running in
+    their own tasks.
 
-def _sized(df: DataFrame) -> DataFrame:
-    """`df` coalesced to as many partitions as its planned size warrants:
-    max(1, ceil(planned_bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)),
-    so a rewrite writes one file per advisory-size share of its bytes.
+    A larger frame is not coalesced at all. `coalesce(n)` for n > 1
+    groups neighbouring partitions without weighing them: a merge's
+    union of a 4-split 60 MB scan and a 4-partition source, coalesced to
+    4, put the scan into 2 tasks and doubled the rewrite's wall time.
 
     Every ManagedTable rewrite (append, merge, delete, delete_by_keys)
     passes its frame through here; `overwrite` writes the caller's
-    partitioning unchanged, so a clustered overwrite keeps its files.
-    Coalesce is narrow: whatever runs upstream of the last exchange (a
-    broadcast anti-join, the upserts an incremental apply embeds) runs
-    in those n tasks, each handling about the advisory size, the bound
-    AQE puts on a coalesced shuffle partition. n at or above the frame's
-    own partition count changes nothing, so a table at scale keeps its
-    split without a second planning pass. A plan of unknown size keeps
-    its partitioning: an RDD scan, such as `createDataFrame` over a
-    Python list, estimates Long.MaxValue (`session.local_frame` builds
-    a sized LocalRelation instead)."""
+    partitioning unchanged, so a clustered overwrite keeps its files."""
+    size = planned_bytes(df)
     spark = df.sparkSession
-    advisory = spark._jsparkSession.sessionState().conf().getConf(
-        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    bound = spark._jsparkSession.sessionState().conf().getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE()
     )
-    n = math.ceil(planned_bytes(df) / advisory)
-    return df if n >= _MAX_PARTITIONS else df.coalesce(max(1, n))
+    return df if size is None or size > bound else df.coalesce(1)
 
 
 def _staging_dir(table_path: str) -> str:
@@ -994,11 +999,11 @@ def _sweep_stale_staging(table_path: str, plane=None) -> None:
 # key, timestamp-as-long and category predicates.
 #
 # Pruning needs several files to choose between. An `overwrite` writes
-# the caller's partitioning; every other ManagedTable rewrite writes one
-# file per advisory-size share of its planned bytes (`_sized`), so a
-# small table is ONE file per version and a filtered read opens it
-# whatever the stats say. Min-max and Bloom pruning act once a version
-# spans several advisory-size files.
+# the caller's partitioning; every other ManagedTable rewrite of a
+# table under 1 MB (planned bytes, `_one_file_if_small`) writes ONE
+# file per version, and a filtered read opens it whatever the stats
+# say. Min-max and Bloom pruning act on larger versions, which keep
+# their scan's split.
 
 _FILTER_OPS = ("=", "==", "<", "<=", ">", ">=", "in", "is_null")
 
@@ -1335,9 +1340,9 @@ class ManagedTable:
         committer needs no mutex at all).
 
         One file per partition of `df`: the rewrites hand in a frame
-        sized by `_sized` (one file per advisory-size share of its
-        planned bytes, so a small table is one file per version), while
-        `overwrite` hands in the caller's partitioning as is."""
+        passed through `_one_file_if_small` (one partition when its
+        planned bytes are under 1 MB), while `overwrite` hands in the
+        caller's partitioning as is."""
         staging = _staging_dir(self.path)
         df.write.mode("overwrite").parquet(staging)
         staged_files = self._version_files(staging)
@@ -1542,7 +1547,9 @@ class ManagedTable:
         def attempt() -> int:
             base = self.current_version()
             out = (
-                _sized(self.read(version=base).unionByName(df, allowMissingColumns=True))
+                _one_file_if_small(
+                    self.read(version=base).unionByName(df, allowMissingColumns=True)
+                )
                 if base >= 0
                 else df
             )
@@ -1559,10 +1566,10 @@ class ManagedTable:
         `txn_note` stamps the committed version's entry in the pointer
         doc's rolling txns map (TransactionalWriter.consistent_read).
 
-        The merged frame is sized by `_sized`: the broadcast anti-join
-        against a small key set would otherwise keep the scan's split
-        count and write that many files of a few KB each; a small table
-        writes one file per version."""
+        The merged frame goes through `_one_file_if_small`: the broadcast
+        anti-join against a small key set would otherwise keep the scan's
+        split count and write that many files of a few KB each; a table
+        under 1 MB writes one file per version."""
 
         def attempt() -> int:
             base = self.current_version()
@@ -1571,7 +1578,9 @@ class ManagedTable:
             target = self.read(version=base)
             # rows in target not matched by source + all source rows
             remaining = target.join(source.select(*keys), on=keys, how="left_anti")
-            merged = _sized(remaining.unionByName(source, allowMissingColumns=True))
+            merged = _one_file_if_small(
+                remaining.unionByName(source, allowMissingColumns=True)
+            )
             return self._commit(merged, "merge", expected=base, txn_note=txn_note)
 
         return _retry_conflicts(attempt, table=self)
@@ -1618,7 +1627,7 @@ class ManagedTable:
             base = self.current_version()
             target = self.read(version=base)
             return self._commit(
-                _sized(target.filter(~predicate | predicate.isNull())),
+                _one_file_if_small(target.filter(~predicate | predicate.isNull())),
                 "delete",
                 expected=base,
             )
@@ -1632,7 +1641,9 @@ class ManagedTable:
             base = self.current_version()
             target = self.read(version=base)
             return self._commit(
-                _sized(target.join(source.select(*keys), on=keys, how="left_anti")),
+                _one_file_if_small(
+                    target.join(source.select(*keys), on=keys, how="left_anti")
+                ),
                 "delete-keys",
                 expected=base,
             )
