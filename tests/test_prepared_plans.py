@@ -50,6 +50,47 @@ def test_memoized_construct_runs_zero_jobs(spark):
     )
 
 
+SF01_DIR = "/root/testdata/sf0.1"
+
+# Index-backed queries whose first construction still runs Spark's own
+# jobs for `spark.read.parquet` of the index directory: the footer read
+# for schema inference, plus one parallel listing job per LSH table
+# directory (each holds more bucket directories than Spark's
+# parallelPartitionDiscovery threshold). Strict: a fix flips them to
+# XPASS, which fails until the mark is removed.
+_INDEX_SCAN_JOBS = {"ivf_search_all_probes", "lsh_ann_topk", "hybrid_search_indexed",
+                    "hnsw_index_topk"}
+
+
+@pytest.fixture(scope="module")
+def sf01_prewarmed(spark):
+    """sf0.1 seen for the first time, with the two steps that run once per
+    (session, corpus) rather than per query paid up front: opening the
+    table handles (one footer job per table) and building any absent or
+    stale vector index (prewarm_indexes, the offline step bench.py runs
+    before timing; an index-backed query would otherwise build it inside
+    its first construction)."""
+    assert SF01_DIR not in Q._TABLES_CACHE.get(spark, {})
+    Q.prewarm_indexes(spark, SF01_DIR)
+    return SF01_DIR
+
+
+@pytest.mark.deep  # constructs every query at sf0.1
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.xfail(strict=True, reason="index scan runs parquet jobs"))
+    if n in _INDEX_SCAN_JOBS else n
+    for n, rec in Q.REGISTRY.items() if not rec.eager
+])
+def test_first_construct_runs_zero_jobs_at_sf01(spark, sf01_prewarmed, name):
+    """The FIRST construction of each memoized registry query, at sf0.1:
+    the pin above counts only second constructions at sf0.001, so a job
+    that runs once per (session, sf_dir), or only where a size gate flips
+    at a larger scale, passes it unseen (distinct_cardinality_kmv's did at
+    sf0.1)."""
+    ran = _construct_jobs(spark, lambda: Q.REGISTRY[name].fn(spark, sf01_prewarmed))
+    assert ran == 0, f"first construction of {name} at sf0.1 ran {ran} Spark jobs"
+
+
 def test_queries_memoizes_exactly_the_non_eager_entries():
     reg = Q.queries()
     assert list(reg) == list(Q.REGISTRY)

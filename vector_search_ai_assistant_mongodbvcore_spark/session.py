@@ -2,10 +2,12 @@
 
 The reference wires MongoClient + OpenAIClient in DI
 (/root/reference/Search/Program.cs). Here the only session-level state is a
-SparkSession tuned for the local[32] harness but with settings that hold on a
-real cluster: AQE on (runtime re-plan, skew-join splitting), modest shuffle
-partition count locally (AQE coalesces), Arrow enabled for the pandas-UDF
-embedding/tokenizer path.
+SparkSession that runs in local mode on `cpus` cores ($SPARK_GRAFT_CPUS by
+default) but with settings that hold on a real cluster: AQE on
+(runtime re-plan, skew-join splitting), modest shuffle partition count
+locally (AQE coalesces), Arrow enabled for the pandas-UDF
+embedding/tokenizer path, and a generated-code cache that holds the
+registry's working set so a repeated plan shape compiles nothing.
 """
 
 from __future__ import annotations
@@ -44,6 +46,10 @@ def get_spark(app_name: str = "vsai-spark", cpus: int | None = None) -> SparkSes
         side never builds a hash table.
       * Arrow for pandas UDFs: the embedding and tokenizer kit moves
         columnar batches, not pickled rows.
+      * Codegen class cache sized to the registry's working set, with the
+        stage id kept out of generated class names: a query shape run
+        again (a chat turn's search, a batch query rebuilt on a new plan)
+        reuses its compiled classes instead of compiling them again.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -68,6 +74,28 @@ def get_spark(app_name: str = "vsai-spark", cpus: int | None = None) -> SparkSes
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
+        # Spark keeps at most 100 generated classes by default, far fewer
+        # than the plan shapes the engine re-runs: a pass over the 55
+        # registry queries at sf0.001 compiled 904 classes, and a second
+        # pass compiled 897 of them again; the six corpus_batch queries
+        # compiled 253 on every repeated pass. Each recompile is Janino
+        # work plus JIT work on the new class. With the two confs below, a
+        # registry pass compiles 716 classes and a repeat 0, and JMX
+        # Metaspace after two passes read 194 MB against 203 MB at the
+        # defaults. 2048 holds a registry pass with margin. Measured in
+        # local mode, where the driver and the executors share one JVM; a
+        # cluster's executors were not measured. The conf is static: it is
+        # read once per JVM, when the codegen cache is first used, so a
+        # running session cannot change it.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # AQE numbers codegen stages in the order they materialise, and by
+        # default that number is part of the generated class name, so two
+        # byte-identical stages (GeneratedIteratorForCodegenStage4 vs ...6)
+        # miss each other in the cache. The id stays in the generated
+        # source's "// codegenStageId=N" comment and in explain's "*(N)";
+        # what is lost is the stage number in stack traces and profiler
+        # frames.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     return builder.getOrCreate()
 
