@@ -187,7 +187,7 @@ def _bench_sql_serves(spark, q) -> dict:
     tables = q._tables(spark, SF_DIR)
     emb = tables["embeddings"]
     IvfIndex(spark, q._cache_dir(SF_DIR, "ivf_q8_embeddings")).build_if_absent(
-        emb, vector_col="embedding", num_lists=4, seed=42, fit_fraction=0.5,
+        emb, vector_col="embedding", num_lists=4, seed=42,
         quantize=True,
     )
     LshIndex(spark, q._cache_dir(SF_DIR, "lsh_embeddings")).build_if_absent(

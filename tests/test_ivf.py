@@ -85,16 +85,87 @@ def test_partition_pruning_in_plan(spark, uniform_idx):
     assert "PartitionFilters" in raw and "centroid_id" in raw
 
 
-def test_sampled_fit_stays_exact_at_full_probe(spark, tables, tmp_path):
-    """KMeans fit on a 30% sample (the 100 TB path): centroids differ but
-    full-probe search is still exact — pruning changes the scan, never the
-    math."""
-    idx = IvfIndex(spark, str(tmp_path)).build(
-        tables["embeddings"], vector_col="embedding", num_lists=4, seed=42, fit_fraction=0.3
-    )
+def test_sampled_fit_stays_exact_at_full_probe(spark, tmp_path, monkeypatch):
+    """An input larger than the derived row cap (num_lists * 256) fits on
+    exactly the cap's hashed sample: centroids differ from a full fit but
+    full-probe search is still exact — pruning changes the scan, never
+    the math."""
+    from vector_search_ai_assistant_mongodbvcore_spark.operators import kmeans
+
+    rng = np.random.RandomState(12)
+    rows = [(i, rng.randn(64).astype(float).tolist()) for i in range(1200)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    seen = []
+    fit = kmeans.lloyd
+
+    def spy(x, *args, **kwargs):
+        seen.append(len(x))
+        return fit(x, *args, **kwargs)
+
+    monkeypatch.setattr(kmeans, "lloyd", spy)
+    idx = IvfIndex(spark, str(tmp_path)).build(df, vector_col="embedding", num_lists=4, seed=42)
+    assert seen == [4 * kmeans.POINTS_PER_CENTROID]
     q = list(map(float, np.random.RandomState(11).randn(64)))
     got = [r.vec_id for r in idx.search(q, k=10, n_probe=4, use_pandas=False, id_col="vec_id").collect()]
-    assert got == _exact_ids(tables["embeddings"], q)
+    assert got == _exact_ids(df, q)
+
+
+def test_first_probe_is_own_list(spark, tmp_path):
+    """Queries are routed by the rule rows were assigned by (x̂·c - |c|²/2),
+    so every indexed vector's n_probe=1 route is its own centroid_id. On
+    uniform unit vectors the centroids are short (|c| ~ 0.2) and unequal,
+    where ranking by cosine to the normalized centroid disagrees."""
+    import os
+
+    rng = np.random.RandomState(0)
+    vecs = rng.randn(2000, 64)
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
+    )
+    idx = IvfIndex(spark, str(tmp_path)).build(df, vector_col="embedding", num_lists=4, seed=42)
+    stored = {
+        r.vec_id: r.centroid_id
+        for r in spark.read.parquet(os.path.join(str(tmp_path), "data"))
+        .select("vec_id", "centroid_id").collect()
+    }
+    cents = idx._centroids()
+    by_cosine = np.argmax(vecs @ (cents / np.linalg.norm(cents, axis=1, keepdims=True)).T, axis=1)
+    assert any(by_cosine[i] != c for i, c in stored.items())  # the fixture bites
+    wrong = [i for i, c in stored.items() if idx.nearest_centroids(vecs[i].tolist(), 1) != [c]]
+    assert not wrong
+
+
+def test_build_runs_at_most_three_jobs(spark, tmp_path):
+    """The build is one aggregate (row count, vector length), one sample
+    collect and one write: no iterative fit job per Lloyd step."""
+    rng = np.random.RandomState(4)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, rng.randn(128).astype(float).tolist()) for i in range(300)],
+        "vec_id long, embedding array<double>",
+    ).write.parquet(src)
+    df = spark.read.parquet(src)
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    before = jobs.nextJobId()
+    IvfIndex(spark, str(tmp_path / "ivf")).build(df, vector_col="embedding", num_lists=2, seed=42)
+    assert jobs.nextJobId() - before <= 3
+
+
+def test_reads_use_the_recorded_schema(spark, tables, tmp_path):
+    """meta.json records the data/ schema the build wrote (centroid_id
+    included); reads pin it, and it matches what inference would give."""
+    import json
+    import os
+
+    from pyspark.sql import types as T
+
+    idx = IvfIndex(spark, str(tmp_path)).build(
+        tables["embeddings"], vector_col="embedding", num_lists=2, seed=42, quantize=True
+    )
+    pinned = T.StructType.fromJson(json.loads(idx.meta()["schema"]))
+    assert pinned == spark.read.parquet(os.path.join(str(tmp_path), "data")).schema
+    assert idx.data().schema == pinned
 
 
 def test_exists_and_build_if_absent(spark, tables, tmp_path):

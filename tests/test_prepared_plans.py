@@ -56,10 +56,10 @@ SF01_DIR = "/root/testdata/sf0.1"
 # jobs for `spark.read.parquet` of the index directory: the footer read
 # for schema inference, plus one parallel listing job per LSH table
 # directory (each holds more bucket directories than Spark's
-# parallelPartitionDiscovery threshold). Strict: a fix flips them to
-# XPASS, which fails until the mark is removed.
-_INDEX_SCAN_JOBS = {"ivf_search_all_probes", "lsh_ann_topk", "hybrid_search_indexed",
-                    "hnsw_index_topk"}
+# parallelPartitionDiscovery threshold). The IVF index is not here: its
+# scan reads with the schema its build recorded in meta.json. Strict: a
+# fix flips them to XPASS, which fails until the mark is removed.
+_INDEX_SCAN_JOBS = {"lsh_ann_topk", "hybrid_search_indexed", "hnsw_index_topk"}
 
 
 @pytest.fixture(scope="module")
@@ -107,7 +107,7 @@ def test_prepared_cache_reserves_same_plan(spark):
         spark, SF_DIR
     )
     # r16: dsir + source_capped_sample became pure plan-builders and left
-    # the eager set; semantic_contamination (KMeans fit) remains eager
+    # the eager set; semantic_contamination (benchmark collect) remains eager
     assert reg["semantic_contamination"](spark, SF_DIR) is not reg[
         "semantic_contamination"
     ](spark, SF_DIR)
@@ -262,3 +262,25 @@ def test_no_rdd_access_in_package():
         if isinstance(node, ast.Attribute) and node.attr == "rdd"
     ]
     assert not offenders, f".rdd access in the package: {offenders}"
+
+
+def test_no_mllib_clustering_in_package():
+    """One k-means (operators/kmeans): no package module imports MLlib's
+    clustering, whose fit runs one Spark job per Lloyd iteration."""
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            if any(n == "pyspark.ml.clustering" for n in names) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "pyspark.ml"
+                and any(a.name == "clustering" for a in node.names)
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, f"pyspark.ml.clustering imported in the package: {offenders}"

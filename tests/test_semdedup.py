@@ -24,7 +24,7 @@ def test_near_identical_vectors_collapse_to_one(spark):
     base = np.random.RandomState(0).randn(8)
     vecs = [base, base + 1e-4, base + 2e-4, -base]  # 3 dupes + 1 opposite
     out = SD.semantic_duplicates(
-        _vec_df(spark, vecs), eps=0.99, k=1, fit_fraction=None
+        _vec_df(spark, vecs), eps=0.99, k=1
     ).collect()
     kept = sorted(r.vec_id for r in out if r.keep)
     assert kept == [0, 3]  # min_id keeps the lowest dupe + the opposite
@@ -36,7 +36,7 @@ def test_keep_far_retains_boundary_member(spark):
     rot = np.zeros(8); rot[0] = np.cos(np.deg2rad(20)); rot[1] = np.sin(np.deg2rad(20))
     vecs = [e1, e1, e1, rot]
     out = SD.semantic_duplicates(
-        _vec_df(spark, vecs), eps=0.9, k=1, keep="far", fit_fraction=None
+        _vec_df(spark, vecs), eps=0.9, k=1, keep="far"
     ).collect()
     kept = sorted(r.vec_id for r in out if r.keep)
     # rot is farthest from the centroid -> scanned first and kept; the
@@ -50,7 +50,7 @@ def test_greedy_python_oracle_parity_single_cluster(spark):
     vecs = rng.randn(40, 16)
     eps = 0.2  # low threshold => dense similarity graph, exercises greedy
     out = SD.semantic_duplicates(
-        _vec_df(spark, vecs), eps=eps, k=1, fit_fraction=None
+        _vec_df(spark, vecs), eps=eps, k=1
     ).collect()
     got = {r.vec_id: r.keep for r in out}
     mn = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
@@ -70,7 +70,7 @@ def test_dedup_is_within_cluster_only(spark):
     a, b = _unit([1, 0, 0, 0]), _unit([-1, 0.01, 0, 0])
     vecs = [a, a, b, b]
     out = SD.semantic_duplicates(
-        _vec_df(spark, vecs), eps=0.999, k=2, fit_fraction=None
+        _vec_df(spark, vecs), eps=0.999, k=2
     ).collect()
     kept = sorted(r.vec_id for r in out if r.keep)
     assert kept == [0, 2]
@@ -83,10 +83,10 @@ def test_hot_cluster_subbuckets_bound_group_size(spark):
     rng = np.random.RandomState(3)
     vecs = rng.randn(60, 8)
     full = SD.semantic_duplicates(
-        _vec_df(spark, vecs), eps=0.95, k=1, fit_fraction=None, max_cluster=100
+        _vec_df(spark, vecs), eps=0.95, k=1, max_cluster=100
     )
     split = SD.semantic_duplicates(
-        _vec_df(spark, vecs), eps=0.95, k=1, fit_fraction=None, max_cluster=10
+        _vec_df(spark, vecs), eps=0.95, k=1, max_cluster=10
     )
     # same schema + full coverage either way; the split path may keep MORE
     # rows (pairs across sub-buckets are not compared) but never fewer
@@ -98,7 +98,7 @@ def test_hot_cluster_subbuckets_bound_group_size(spark):
 
 def test_drop_semantic_duplicates_preserves_columns(spark, tables):
     emb = tables["embeddings"]
-    out = SD.drop_semantic_duplicates(emb, eps=0.99, k=4, fit_fraction=None)
+    out = SD.drop_semantic_duplicates(emb, eps=0.99, k=4)
     assert out.columns == emb.columns
     assert 0 < out.count() <= emb.count()
 
@@ -115,7 +115,7 @@ def test_dup_of_provenance_and_pairs(spark):
     other = np.random.RandomState(2).randn(8)
     vecs = [base, base + 1e-4, other, base + 2e-4]
     out = {r.vec_id: r for r in SD.semantic_duplicates(
-        _vec_df(spark, vecs), eps=0.99, k=1, fit_fraction=None
+        _vec_df(spark, vecs), eps=0.99, k=1
     ).collect()}
     assert out[0].keep and out[0].dup_of is None
     assert not out[1].keep and out[1].dup_of == 0
@@ -123,7 +123,7 @@ def test_dup_of_provenance_and_pairs(spark):
     assert out[2].keep and out[2].dup_of is None
     pairs = sorted(
         (r.id_a, r.id_b) for r in SD.semantic_duplicate_pairs(
-            _vec_df(spark, vecs), eps=0.99, k=1, fit_fraction=None
+            _vec_df(spark, vecs), eps=0.99, k=1
         ).collect()
     )
     assert pairs == [(0, 1), (0, 3)]
@@ -135,7 +135,7 @@ def test_semantic_pairs_feed_leakage_safe_split(spark, tables):
     )
 
     emb = tables["embeddings"]
-    pairs = SD.semantic_duplicate_pairs(emb, eps=0.99, k=4, fit_fraction=None)
+    pairs = SD.semantic_duplicate_pairs(emb, eps=0.99, k=4)
     out = assign_split_leakage_safe(
         emb.select("vec_id"), pairs, id_col="vec_id"
     )
@@ -147,7 +147,7 @@ def test_semantic_pairs_feed_leakage_safe_split(spark, tables):
 def test_null_embeddings_are_skipped_not_fatal(spark):
     """NULL-embedding rows have no position in embedding space: they are
     absent from the verdict frame (exploded_shingles' NULL-text contract),
-    and their presence must not crash the KMeans fit or the kernel's
+    and their presence must not crash the k-means fit or the kernel's
     np.stack."""
     base = np.random.RandomState(3).randn(8)
     good = _vec_df(spark, [base, base + 1e-4, -base])
@@ -155,8 +155,8 @@ def test_null_embeddings_are_skipped_not_fatal(spark):
         [(100, None), (101, None)], "vec_id long, embedding array<float>"
     )
     out = SD.semantic_duplicates(
-        good.unionByName(nulls), eps=0.99, k=1, fit_fraction=None
+        good.unionByName(nulls), eps=0.99, k=1
     ).collect()
     assert sorted(r.vec_id for r in out) == [0, 1, 2]  # nulls absent
-    clean = SD.semantic_duplicates(good, eps=0.99, k=1, fit_fraction=None).collect()
+    clean = SD.semantic_duplicates(good, eps=0.99, k=1).collect()
     assert {(r.vec_id, r.keep) for r in out} == {(r.vec_id, r.keep) for r in clean}

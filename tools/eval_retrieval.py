@@ -199,7 +199,7 @@ def _ann_vs_exact_section(spark, corpus, emb, queries, pq_model, encoded) -> "li
     for p in ("/tmp/eval_ivf", "/tmp/eval_lsh"):
         shutil.rmtree(p, ignore_errors=True)
     ivf = IvfIndex(spark, "/tmp/eval_ivf").build(
-        emb_tbl, vector_col="embedding", num_lists=4, seed=42, fit_fraction=0.5
+        emb_tbl, vector_col="embedding", num_lists=4, seed=42
     )
     lsh = LshIndex(spark, "/tmp/eval_lsh").build(
         emb_tbl, dims=64, bits=4, tables=4, vector_col="embedding", id_col="vec_id"

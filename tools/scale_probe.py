@@ -280,7 +280,7 @@ def main() -> None:
         "knn_matmul": lambda e: knn_brute_force(e, [[0.1] * 64] * 4, k=5)
         .write.format("noop").mode("overwrite").save(),
         "ivf_build": lambda e: IvfIndex(spark, os.path.join(WORK, f"ivf_{e is embN}")).build(
-            e, vector_col="embedding", num_lists=8, seed=42, fit_fraction=0.2
+            e, vector_col="embedding", num_lists=8, seed=42
         ),
         "lsh_build": lambda e: LshIndex(spark, os.path.join(WORK, f"lsh_{e is embN}")).build(
             e, dims=64, bits=6, tables=4, vector_col="embedding", id_col="vec_id"
@@ -290,7 +290,7 @@ def main() -> None:
         "lsh_search": lambda e: LshIndex(spark, os.path.join(WORK, f"lsh_{e is embN}"))
         .search([0.1] * 64, k=10).write.format("noop").mode("overwrite").save(),
         "semdedup": lambda e: semantic_duplicates(
-            e, eps=0.97, k=8, fit_fraction=0.2, max_cluster=50_000
+            e, eps=0.97, k=8, max_cluster=50_000
         ).write.format("noop").mode("overwrite").save(),
         # benchmark embedding set FIXED (emb1-derived) while the corpus
         # grows Nx — same asymmetry as decontam, in embedding space

@@ -3,7 +3,7 @@ extended LLM-training-pipeline inventory in §8).
 
 Reference surface:
 vector_search.py   — exact top-k cosine search + RAG payload assembly (V1/V2/P1/P2/A1)
-ivf.py             — IVF index: KMeans build, centroid-pruned/multi-probe search,
+ivf.py             — IVF index: driver k-means build, centroid-pruned/multi-probe search,
                      int8 + product-quantization (IVF-PQ) storage, incremental
                      add/remove with frozen centroids (V4/V5)
 partitioned_ann.py — per-partition local ANN (hnswlib kernel env-gated) (V3)
@@ -30,9 +30,10 @@ packing.py         — sequence packing via two-level distributed prefix sums
 export.py          — token-id materialization, sharded + curriculum export
 profile.py         — column profiles, domain audit, tokenizer fertility
 pq.py              — product quantization: codebook fit, encode, ADC top-k
+kmeans.py          — the one k-means (ivf, topics, pq): driver fit on a hashed sample
 keyword_search.py  — BM25 + incremental Bm25Index + indexed hybrid RRF retrieval
 asof.py            — as-of join (time-sliced against hot keys)
 chunking.py        — RAG document chunking (word/token units, carry columns)
-topics.py          — KMeans topic clustering (sampled fit)
+topics.py          — k-means topic clustering (driver fit, codegen assignment)
 eval.py            — retrieval metrics (recall@k / MRR / nDCG)
 """

@@ -1,4 +1,4 @@
-"""IVF vector index: KMeans-partitioned store + centroid-pruned search.
+"""IVF vector index: k-means-partitioned store + centroid-pruned search.
 
 Reference: the `vector-ivf` index kind, numLists=2, cosine
 (/root/reference/SharedLib/Services/MongoDbService.cs:144-167); search probes
@@ -7,20 +7,21 @@ the index via $search.cosmosSearch (:194-223).
 Spark-first construction (SURVEY.md §4): there is no ANN server; instead the
 *table layout* is the index.
 
-  build:  MLlib KMeans(k=num_lists) on (unit-normalized) vectors
-          -> write parquet PARTITIONED BY centroid_id
-  search: assign query to its nProbe nearest centroids (driver-side numpy on
-          the tiny centroid set) -> read with centroid_id IN (...) —
-          Catalyst partition pruning makes the scan touch nProbe/num_lists
-          of the files — -> exact top-k inside the probed subset.
+  build:  driver k-means (operators/kmeans.fit_kmeans) on a bounded hashed
+          sample of the unit-normalized vectors -> assign EVERY row
+          -> write parquet PARTITIONED BY centroid_id (schema in meta.json)
+  search: route the query to its nProbe best lists by the rule that
+          assigned the rows (driver-side numpy on the tiny centroid set)
+          -> read with centroid_id IN (...) — Catalyst partition pruning
+          makes the scan touch nProbe/num_lists of the files — -> exact
+          top-k inside the probed subset.
 
-At 100 TB with num_lists ~ sqrt(N) this is the classic IVF-flat tradeoff.
-The KMeans fit runs on a sample (`fit_fraction`) — centroid quality needs
-thousands of vectors per list, not the full table — while the assignment
-pass still covers every row. tests/test_ivf.py asserts EXACT equality with
-brute force at n_probe = num_lists, monotone recall in n_probe on uniform
-random vectors (the no-structure worst case), and recall >= 0.9 at
-n_probe=1 of 4 on clustered data (the regime IVF exists for).
+At 100 TB with num_lists ~ sqrt(N) this is the classic IVF-flat tradeoff;
+the fit sees at most num_lists * 256 rows. tests/test_ivf.py asserts EXACT
+equality with brute force at n_probe = num_lists, monotone recall in
+n_probe on uniform random vectors (the no-structure worst case), and
+recall >= 0.9 at n_probe=1 of 4 on clustered data (the regime IVF exists
+for).
 
 HNSW (MongoDbService.cs:119-143) is intentionally NOT built: no distributed
 primitive exists, and batch-scale retrieval is dominated by scan+prune
@@ -40,6 +41,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
 from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
@@ -49,6 +51,12 @@ from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search impor
 )
 
 DEFAULT_NUM_LISTS = 2  # MongoDbService.cs:158 numLists
+
+
+def _route_scores(unit_rows: np.ndarray, centroids: np.ndarray) -> np.ndarray:
+    """(n, k) scores x̂·c - |c|²/2: argmax is the nearest centroid, argmin
+    ||x̂ - c||². The one rule rows are assigned and queries routed by."""
+    return unit_rows @ centroids.T - 0.5 * (centroids * centroids).sum(axis=1)
 
 
 def data_fingerprint(df: DataFrame) -> dict:
@@ -88,8 +96,6 @@ def data_fingerprint(df: DataFrame) -> dict:
             }
         except OSError:
             pass  # non-local scheme: fall through to the content scan
-    from pyspark.sql import types as T
-
     scalar_cols = [
         f.name
         for f in df.schema.fields
@@ -130,8 +136,11 @@ class IvfIndex:
         """Create-if-missing OR stale, mirroring
         MongoDbService.CreateVectorIndexIfNotExists. Staleness = the stored
         data fingerprint no longer matches `df` (regenerated dataset under
-        the same path) — a stale hit would silently serve the old corpus."""
-        if not self.exists() or self.meta().get("fingerprint") != data_fingerprint(df):
+        the same path) — a stale hit would silently serve the old corpus —
+        or a meta.json with no recorded data/ schema (written before reads
+        pinned it)."""
+        m = self.meta() if self.exists() else {}
+        if "schema" not in m or m.get("fingerprint") != data_fingerprint(df):
             self.build(df, **build_kwargs)
         return self
 
@@ -142,15 +151,16 @@ class IvfIndex:
         num_lists: int = DEFAULT_NUM_LISTS,
         seed: int = 42,
         max_iter: int = 20,
-        fit_fraction: float | None = None,
         quantize: bool | str = False,
         pq_m: int = 8,
         pq_bits: int = 8,
         id_col: str = "vec_id",
     ) -> "IvfIndex":
-        """Fit KMeans (on a `fit_fraction` sample when given — at 100 TB the
-        centroids only need a representative sample, not the full table),
-        then assign EVERY row and write partitioned by centroid_id.
+        """Fit num_lists centroids on the driver (kmeans.fit_kmeans: at
+        most num_lists * 256 sample rows; raises, naming MAX_FIT_BYTES,
+        when the driver bound leaves fewer than 39 per list), assign EVERY
+        row as add_documents does, write partitioned by centroid_id and
+        record the data/ schema in meta.json, so reads never infer it.
 
         quantize=True stores vectors int8 (functions/vector.quantize_int8)
         — the same 4x serving-IO cut as LshIndex(quantize=True); search()
@@ -160,26 +170,13 @@ class IvfIndex:
         quantize="pq" stores product-quantization codes instead of the
         vectors (operators/pq.py — the FAISS IVF-PQ layout): pq_m one-byte
         codes per vector (16-64x IO cut vs float32), codebooks fit on the
-        same bounded-sample discipline and frozen into meta.json, ADC
+        same bounded hashed sample and frozen into meta.json, ADC
         scoring at search() with mandatory-in-practice exact rerank via
         `exact_source`."""
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
+        from vector_search_ai_assistant_mongodbvcore_spark.operators.kmeans import fit_kmeans
 
-        from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import normalize
-
-        # cosine <=> euclidean KMeans on unit-normalized vectors
-        normed = df.withColumn(
-            "_nv", normalize(F.col(vector_col).cast("array<double>"))
-        ).withColumn("_features", array_to_vector(F.col("_nv")))
-        fit_input = (
-            normed.sample(fraction=fit_fraction, seed=seed)
-            if fit_fraction is not None and fit_fraction < 1.0
-            else normed
-        )
-        km = KMeans(k=num_lists, seed=seed, maxIter=max_iter, featuresCol="_features", predictionCol="centroid_id")
-        model = km.fit(fit_input)
-        assigned = model.transform(normed).drop("_features", "_nv")
+        centroids = fit_kmeans(df, vector_col, num_lists, seed=seed, iters=max_iter)
+        assigned = df.withColumn("centroid_id", self._assign_col(vector_col, centroids))
         pq_model = None
         if quantize == "pq":
             from vector_search_ai_assistant_mongodbvcore_spark.operators.pq import (
@@ -211,16 +208,20 @@ class IvfIndex:
             "overwrite"
         ).partitionBy("centroid_id").parquet(os.path.join(self.path, "data"))
         _scan_cache.invalidate(self.spark, self.path)
-        centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])
         buf = io.BytesIO()
         np.save(buf, centroids)
         self.plane.write_bytes(os.path.join(self.path, "centroids.npy"), buf.getvalue())
+        # what a read of data/ sees: file columns, then the partition column
+        fields = [(f.name, f.dataType) for f in assigned.schema if f.name != "centroid_id"]
+        fields.append(("centroid_id", T.IntegerType()))
+        schema = T.StructType([T.StructField(n, t) for n, t in fields])
         meta = {
             "num_lists": num_lists,
             "vector_col": vector_col,
             "seed": seed,
             "quantized": quantize,
             "fingerprint": data_fingerprint(df),
+            "schema": schema.json(),
         }
         if id_col in df.columns:
             # the unique id the index shortlists and reranks by — the
@@ -246,17 +247,14 @@ class IvfIndex:
         return self
 
     # ---- incremental maintenance ----------------------------------------
-    def _assign_col(self, vector_col: str):
-        """centroid_id column for new vectors: nearest FROZEN centroid in
-        the normalized space the KMeans fit ran in — argmin ||v̂ - c_k||²
-        computed as argmax(v̂·c_k - ||c_k||²/2), one Arrow-batched pass
-        with the (num_lists × dims) centroid matrix closed over (a few KB;
-        ships with the task like any broadcast literal)."""
+    @staticmethod
+    def _assign_col(vector_col: str, centroids: np.ndarray):
+        """centroid_id column for build and add_documents: argmax of
+        _route_scores, one Arrow-batched pass with the (num_lists × dims)
+        centroid matrix closed over (a few KB; ships with the task like
+        any broadcast literal)."""
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import IntegerType
-
-        c = self._centroids()  # (k, d), in normalized-vector space
-        half_sq = 0.5 * (c * c).sum(axis=1)  # (k,)
 
         @pandas_udf(IntegerType())
         def assign(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -264,8 +262,8 @@ class IvfIndex:
                 m = np.stack(s.to_numpy()).astype(np.float64)
                 norms = np.linalg.norm(m, axis=1)
                 norms[norms == 0.0] = 1.0
-                mn = m / norms[:, None]
-                yield pd.Series(np.argmax(mn @ c.T - half_sq, axis=1).astype("int32"))
+                scores = _route_scores(m / norms[:, None], centroids)
+                yield pd.Series(np.argmax(scores, axis=1).astype("int32"))
 
         return assign(F.col(vector_col))
 
@@ -285,7 +283,7 @@ class IvfIndex:
         vector_col = m["vector_col"]
         data_dir = os.path.join(self.path, "data")
         if on_duplicate != "trust":
-            existing = self.spark.read.parquet(data_dir).select(id_col)
+            existing = self.data(m).select(id_col)
             dups = df.select(id_col).distinct().join(existing, id_col, "left_semi")
             if on_duplicate == "error":
                 offenders = [r[id_col] for r in dups.limit(10).collect()]
@@ -296,7 +294,9 @@ class IvfIndex:
                     )
             else:
                 df = df.join(dups, id_col, "left_anti")
-        assigned = df.withColumn("centroid_id", self._assign_col(vector_col))
+        assigned = df.withColumn(
+            "centroid_id", self._assign_col(vector_col, self._centroids())
+        )
         if m.get("quantized") == "pq":
             from vector_search_ai_assistant_mongodbvcore_spark.operators.pq import (
                 pq_encode_col,
@@ -331,7 +331,7 @@ class IvfIndex:
         if not ids:
             return self
         data_dir = os.path.join(self.path, "data")
-        scan = self.spark.read.parquet(data_dir)
+        scan = self.data()
         doomed = scan.filter(F.col(id_col).isin(ids))
         touched = [r["centroid_id"] for r in doomed.select("centroid_id").distinct().collect()]
         if not touched:
@@ -389,13 +389,22 @@ class IvfIndex:
     def meta(self) -> dict:
         return json.loads(self.plane.read_text(os.path.join(self.path, "meta.json")))
 
+    def data(self, meta: "dict | None" = None) -> DataFrame:
+        """The data/ scan with the schema build recorded (no footer job),
+        cached per session (plans/scan_cache; every writer invalidates)."""
+        schema = T.StructType.fromJson(json.loads((meta or self.meta())["schema"]))
+        return _scan_cache.cached_parquet(
+            self.spark, os.path.join(self.path, "data"), schema=schema
+        )
+
     def nearest_centroids(self, query: list[float], n_probe: int) -> list[int]:
-        c = self._centroids()
+        """The n_probe lists a query probes, best first, ranked by the rule
+        that assigned the rows (_route_scores; first index on ties), so a
+        stored vector's first probe is its own list."""
         q = np.asarray(query, dtype=np.float64)
         qn = q / (np.linalg.norm(q) or 1.0)
-        cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-        sims = cn @ qn
-        return [int(i) for i in np.argsort(-sims)[:n_probe]]
+        scores = _route_scores(qn[None, :], self._centroids())[0]
+        return [int(i) for i in np.argsort(-scores, kind="stable")[:n_probe]]
 
     def search(
         self,
@@ -422,29 +431,18 @@ class IvfIndex:
         design: treat no-rerank PQ results as candidate sets."""
         meta = self.meta()
         probes = self.nearest_centroids(query, n_probe)
-        scan = _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "data")).filter(
-            F.col("centroid_id").isin(probes)
-        )
+        scan = self.data(meta).filter(F.col("centroid_id").isin(probes))
         quantized = meta.get("quantized", False)
         shortlist_k = k * expand if (quantized and exact_source is not None) else k
         if quantized == "pq":
-            from vector_search_ai_assistant_mongodbvcore_spark.operators.pq import (
-                adc_score_col,
-            )
+            from vector_search_ai_assistant_mongodbvcore_spark.operators.pq import adc_topk
 
             # ADC over the probed partitions' CODES — the float vectors are
             # never read; TakeOrderedAndProject picks the shortlist
-            key = id_col if id_col is not None else "vec_id"
-            approx = (
-                scan.select(
-                    key,
-                    F.round(
-                        adc_score_col(meta["pq_model"], query, "_pq"),
-                        round_scores if round_scores is not None else 6,
-                    ).alias("score"),
-                )
-                .orderBy(F.col("score").desc(), F.col(key).asc())
-                .limit(shortlist_k)
+            approx = adc_topk(
+                scan.withColumnRenamed("_pq", "codes"), meta["pq_model"], query,
+                k=shortlist_k, id_col=id_col if id_col is not None else "vec_id",
+                round_scores=round_scores if round_scores is not None else 6,
             )
         else:
             if quantized:
@@ -535,9 +533,7 @@ class IvfIndex:
             f"query_id {qid_type}, centroid_id int, _qvec array<double>",
         )
         all_probes = sorted({c for _, c, _ in probe_rows})
-        scan = _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "data")).filter(
-            F.col("centroid_id").isin(all_probes)
-        )
+        scan = self.data(meta).filter(F.col("centroid_id").isin(all_probes))
         cand = scan.join(F.broadcast(routing), "centroid_id")
 
         if quantized == "pq":
@@ -545,22 +541,11 @@ class IvfIndex:
             # pq.adc_score_col, grouped by query id within each batch
             from pyspark.sql.types import DoubleType
 
+            from vector_search_ai_assistant_mongodbvcore_spark.operators.pq import query_lut
+
             model = meta["pq_model"]
-            m_sub, dims = model["m"], model["dims"]
-            dsub = dims // m_sub
-            luts = {}
-            for qid, vec in pairs:
-                q = np.asarray([float(x) for x in vec], dtype=np.float64)
-                qn = np.linalg.norm(q)
-                if qn > 0:
-                    q = q / qn
-                luts[qid] = np.stack(
-                    [
-                        np.array(model["codebooks"][j], dtype=np.float64)
-                        @ q[j * dsub : (j + 1) * dsub]
-                        for j in range(m_sub)
-                    ]
-                )
+            m_sub = model["m"]
+            luts = {qid: query_lut(model, [float(x) for x in vec]) for qid, vec in pairs}
 
             @F.pandas_udf(DoubleType())
             def adc_many(

@@ -16,11 +16,10 @@ product decomposes over subspaces as sum_j <q_j, c_j(code_j)> — so one
 m x k lookup table per query replaces every per-vector float read.
 
 Scale shape:
-  * fit: per-subspace Lloyd KMeans runs on the DRIVER over a bounded,
-    deterministic md5-sampled collect (<= max_sample rows; codebooks are
-    m * k * (dims/m) floats — KBs). Same sampled-fit discipline as the
-    IVF index.
-  * encode: one Arrow-batched mapInPandas pass, narrow (no shuffle);
+  * fit: per-subspace k-means on the DRIVER (operators/kmeans) over the
+    engine's bounded hashed sample (<= max_sample rows); codebooks are
+    m * k * (dims/m) floats — KBs.
+  * encode: one Arrow-batched pandas_udf pass, narrow (no shuffle);
     codes persist wherever the corpus lives and are 16-64x smaller than
     the vectors they replace.
   * serve: the query's LUT broadcasts inside a pandas_udf closure (m*k
@@ -28,7 +27,7 @@ Scale shape:
     TakeOrderedAndProject top-k — per-query cost scans CODES, never the
     float vectors.
 
-No registry slot: KMeans codebooks are approximate by construction, so
+No registry slot: k-means codebooks are approximate by construction, so
 this could only ever be a rows-only gate row (the same reason
 ivf_search_pruned was retired); exactness properties that CAN be pinned
 are pytest-pinned instead (encode parity with numpy, ADC == table
@@ -37,7 +36,7 @@ lookup, recall floor vs exact cosine, determinism across partitionings).
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -46,46 +45,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import stack_vectors
+from vector_search_ai_assistant_mongodbvcore_spark.operators.kmeans import (
+    hashed_sample,
+    lloyd,
+    unit_rows,
+)
 
 __all__ = ["fit_pq", "encode_pq", "adc_topk", "pq_model_bytes", "pq_encode_col", "adc_score_col"]
-
-
-def _normalize_rows(mat: np.ndarray) -> np.ndarray:
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return mat / norms
-
-
-def _lloyd(x: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarray:
-    """Deterministic Lloyd KMeans (numpy): seeded sample init, empty
-    clusters re-seeded from the farthest points. x: (n, d) -> (k, d).
-
-    Distances use the |x|^2 - 2 x@c.T + |c|^2 matmul form (same as
-    encode_pq): O(n*k) memory per iteration. The 3-D broadcast form
-    allocates n*k*dsub float64 temporaries — ~1.6 GB per temporary at
-    the documented defaults (n=100k, k=256, dsub=8), a driver OOM at
-    exactly the scale this module claims to support."""
-    rng = np.random.RandomState(seed)
-    n = x.shape[0]
-    if n == 0:
-        raise ValueError("cannot fit PQ codebook on zero sample rows")
-    init = rng.choice(n, size=min(k, n), replace=False)
-    cents = x[init].copy()
-    if cents.shape[0] < k:  # fewer points than centroids: pad with jitter
-        pad = cents[rng.choice(cents.shape[0], k - cents.shape[0])]
-        cents = np.vstack([cents, pad + rng.normal(0, 1e-6, pad.shape)])
-    x2 = (x * x).sum(axis=1)[:, None]
-    for _ in range(iters):
-        c2 = (cents * cents).sum(axis=1)[None, :]
-        d2 = x2 - 2.0 * (x @ cents.T) + c2
-        assign = d2.argmin(axis=1)
-        for j in range(k):
-            members = x[assign == j]
-            if len(members):
-                cents[j] = members.mean(axis=0)
-            else:
-                cents[j] = x[d2.min(axis=1).argmax()]
-    return cents
 
 
 def fit_pq(
@@ -104,48 +70,12 @@ def fit_pq(
     Returns {"m", "bits", "dims", "codebooks"} with codebooks an
     m x 2^bits x (dims/m) nested list (JSON-serializable; KBs). Vectors
     are L2-normalized before fitting so ADC scores approximate cosine.
-    The sample is the smallest-bucket prefix under the stage-namespaced
-    md5 hash (id tiebreak) — a uniform draw, stable across runs and
-    partitionings, never a full collect: the only driver transfer is
-    <= max_sample vectors. A keep-rate prefilter bounds the sort input
-    with an overshoot margin of `overshoot_sigmas` binomial standard
-    deviations (same guard as splits.cap_per_group; failure probability
-    ~1e-9 at the default 6); if the margin still randomly undershoots
-    min(n, max_sample) survivors the fit raises (deterministically,
-    naming the knob) instead of silently training codebooks on a
-    thinner sample.
+    The sample is kmeans.hashed_sample (stage "pq", <= max_sample rows):
+    keyed on the vector, so `id_col` is not read; an undershoot of its
+    `overshoot_sigmas` prefilter margin raises, naming the knob.
     """
-    from vector_search_ai_assistant_mongodbvcore_spark.operators.splits import split_bucket
-
-    clean = df.filter(F.col(vector_col).isNotNull())
-    n = clean.count()
-    if n == 0:
-        raise ValueError("cannot fit PQ on an empty vector table")
-    bucket = split_bucket(F.col(id_col), seed=seed, stage="pq")
-    if n > max_sample:
-        # keep-rate prefilter on the portable bucket; over-draw then
-        # exact bucket-order truncation keeps the sample deterministic
-        # AND equal to the global smallest-bucket prefix whenever enough
-        # rows survive (checked below)
-        import math as _math
-
-        want = max_sample + overshoot_sigmas * _math.sqrt(max_sample) + 10
-        rate = min(1.0, want / n)
-        clean = clean.filter(bucket < int(rate * (1 << 32)))
-        survivors = clean.count()
-        if survivors < min(n, max_sample):
-            raise ValueError(
-                f"pq sample prefilter undershoot ({survivors} < "
-                f"{min(n, max_sample)}); raise overshoot_sigmas"
-            )
-    rows = (
-        clean.select(id_col, vector_col)
-        .orderBy(bucket.asc(), F.col(id_col).asc())
-        .limit(max_sample)
-        .collect()
-    )
-    mat = _normalize_rows(
-        np.array([r[vector_col] for r in rows], dtype=np.float64)
+    mat = hashed_sample(
+        df, vector_col, max_sample, seed, stage="pq", overshoot_sigmas=overshoot_sigmas
     )
     dims = mat.shape[1]
     if dims % m != 0:
@@ -153,7 +83,7 @@ def fit_pq(
     dsub = dims // m
     k = 1 << bits
     codebooks = [
-        _lloyd(mat[:, j * dsub : (j + 1) * dsub], k, seed=seed + j, iters=iters)
+        lloyd(mat[:, j * dsub : (j + 1) * dsub], k, seed=seed + j, iters=iters)
         for j in range(m)
     ]
     return {
@@ -175,36 +105,11 @@ def encode_pq(
     vector_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """(id_col, codes array<int>) — one narrow Arrow pass; NULL vectors
-    are dropped (they cannot be searched). Codes are the per-subspace
-    argmin centroid over the L2-normalized vector."""
-    cbs = [np.array(cb, dtype=np.float64) for cb in model["codebooks"]]
-    m, dims = model["m"], model["dims"]
-    dsub = dims // m
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = _normalize_rows(stack_vectors(pdf[vector_col], dims=dims))
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                # (n, k) distances via |x|^2 - 2 x.c + |c|^2; |x|^2 constant per argmin
-                d = -2.0 * sub @ cbs[j].T + (cbs[j] ** 2).sum(axis=1)[None, :]
-                codes[:, j] = d.argmin(axis=1)
-            yield pd.DataFrame({"id": pdf[id_col].values, "codes": list(codes)})
-
-    clean = df.filter(F.col(vector_col).isNotNull()).select(id_col, vector_col)
-    return (
-        clean.mapInPandas(encode, out_schema)
-        .withColumnRenamed("id", id_col)
+    """(id_col, codes array<int>) — one narrow Arrow pass (pq_encode_col);
+    NULL vectors are dropped (they cannot be searched). Codes are the
+    per-subspace argmin centroid over the L2-normalized vector."""
+    return df.filter(F.col(vector_col).isNotNull()).select(
+        id_col, pq_encode_col(model, vector_col).alias("codes")
     )
 
 
@@ -223,37 +128,19 @@ def adc_topk(
 
     Scores round to `round_scores` with an id tiebreak so results are
     deterministic across partitionings."""
-    q = np.asarray(list(query), dtype=np.float64)
-    qn = np.linalg.norm(q)
-    if qn > 0:
-        q = q / qn
-    m, dims = model["m"], model["dims"]
-    dsub = dims // m
-    lut = np.stack(
-        [
-            np.array(model["codebooks"][j], dtype=np.float64)
-            @ q[j * dsub : (j + 1) * dsub]
-            for j in range(m)
-        ]
-    )  # (m, k)
-
-    @F.pandas_udf(T.DoubleType())
-    def adc(codes: pd.Series) -> pd.Series:
-        c = np.stack(codes.values).astype(np.int64)  # (n, m)
-        return pd.Series(lut[np.arange(m)[None, :], c].sum(axis=1))
-
+    score = F.round(adc_score_col(model, query, "codes"), round_scores)
     return (
-        encoded.select(id_col, F.round(adc(F.col("codes")), round_scores).alias("score"))
+        encoded.select(id_col, score.alias("score"))
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
 
 
 def pq_encode_col(model: dict, vector_col) -> "F.Column":
-    """Column form of encode_pq for embedding PQ codes inside another
-    operator's projection (IvfIndex build/add): array<int> codes from the
-    broadcast codebooks, one Arrow batch at a time. NULL vectors -> NULL
-    codes (callers decide their policy)."""
+    """PQ codes as a column, for encode_pq and for another operator's
+    projection (IvfIndex build/add): array<int> codes from the broadcast
+    codebooks, one Arrow batch at a time. NULL vectors -> NULL codes
+    (callers decide their policy)."""
     cbs = [np.array(cb, dtype=np.float64) for cb in model["codebooks"]]
     m, dims = model["m"], model["dims"]
     dsub = dims // m
@@ -261,41 +148,48 @@ def pq_encode_col(model: dict, vector_col) -> "F.Column":
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def enc(v: pd.Series) -> pd.Series:
         mask = v.notna().values
-        vals: list = [None] * len(v)
-        if mask.any():
-            mat = _normalize_rows(stack_vectors(v[mask], dims=dims))
-            codes = np.empty((mask.sum(), m), dtype=np.int32)
-            for j in range(m):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                d = -2.0 * sub @ cbs[j].T + (cbs[j] ** 2).sum(axis=1)[None, :]
-                codes[:, j] = d.argmin(axis=1)
-            it = iter(codes)
-            for i, ok in enumerate(mask):
-                if ok:
-                    vals[i] = [int(x) for x in next(it)]
-        return pd.Series(vals, dtype=object)
+        if not mask.any():
+            return pd.Series([None] * len(v), dtype=object)
+        mat = unit_rows(stack_vectors(v[mask], dims=dims))
+        # per subspace argmin |x|^2 - 2 x.c + |c|^2; |x|^2 is constant
+        codes = np.stack(
+            [
+                (-2.0 * mat[:, j * dsub : (j + 1) * dsub] @ cb.T + (cb * cb).sum(axis=1))
+                .argmin(axis=1)
+                for j, cb in enumerate(cbs)
+            ],
+            axis=1,
+        ).astype(np.int32)
+        it = iter(codes)
+        return pd.Series([next(it) if ok else None for ok in mask], dtype=object)
 
     c = F.col(vector_col) if isinstance(vector_col, str) else vector_col
     return enc(c)
+
+
+def query_lut(model: dict, query: Sequence[float]) -> np.ndarray:
+    """The query's (m, 2^bits) inner-product table: entry (j, c) is
+    <q̂_j, codebook_j[c]> for the unit query q̂, so a code row's ADC score
+    is the sum of its m entries."""
+    q = np.asarray(list(query), dtype=np.float64)
+    qn = np.linalg.norm(q)
+    if qn > 0:
+        q = q / qn
+    dsub = model["dims"] // model["m"]
+    return np.stack(
+        [
+            np.array(cb, dtype=np.float64) @ q[j * dsub : (j + 1) * dsub]
+            for j, cb in enumerate(model["codebooks"])
+        ]
+    )
 
 
 def adc_score_col(model: dict, query: Sequence[float], codes_col) -> "F.Column":
     """Column form of the ADC score: the query's LUT closes over the UDF
     and each batch is one numpy gather+sum. Compose with the caller's own
     ordering/limit."""
-    q = np.asarray(list(query), dtype=np.float64)
-    qn = np.linalg.norm(q)
-    if qn > 0:
-        q = q / qn
-    m, dims = model["m"], model["dims"]
-    dsub = dims // m
-    lut = np.stack(
-        [
-            np.array(model["codebooks"][j], dtype=np.float64)
-            @ q[j * dsub : (j + 1) * dsub]
-            for j in range(m)
-        ]
-    )
+    lut = query_lut(model, query)
+    m = model["m"]
 
     @F.pandas_udf(T.DoubleType())
     def sc(codes: pd.Series) -> pd.Series:

@@ -2,14 +2,15 @@
 2023, arXiv:2303.09540).
 
 Not in the reference; part of the extended LLM-training-pipeline surface.
-The recipe: KMeans-cluster the corpus embeddings, then WITHIN each cluster
+The recipe: k-means-cluster the corpus embeddings, then WITHIN each cluster
 drop all but one member of every epsilon-similar group (cosine >= eps).
 Clustering makes the quadratic verification tractable — pairs are only ever
 scored against cluster peers, never across the corpus.
 
 Spark shape (composing operators already in the engine):
-  1. cluster assignment = operators/topics.cluster_topics — MLlib KMeans
-     fit on a SAMPLE (fit_fraction), assignment a single parallel pass;
+  1. cluster assignment = operators/topics.cluster_topics — the engine's
+     driver k-means (operators/kmeans) fit on a bounded hashed sample,
+     assignment a single codegen pass over every row;
   2. clusters larger than `max_cluster` are SUB-BUCKETED by the engine's
      deterministic random-hyperplane code (similarity.lsh_bucket_ids,
      one table) so no task group is ever an unbounded hot cluster; dedup
@@ -47,7 +48,6 @@ def semantic_duplicates(
     id_col: str = "vec_id",
     keep: str = "min_id",
     seed: int = 42,
-    fit_fraction: float | None = 0.5,
     max_cluster: int = 100_000,
     sub_bits: int = 4,
 ) -> DataFrame:
@@ -75,13 +75,12 @@ def semantic_duplicates(
     # NULL-embedding rows are ABSENT from the verdict frame (mirroring
     # exploded_shingles' NULL-text contract): they have no position in
     # embedding space, so neither a keep nor a drop verdict is meaningful.
-    # Without this filter the KMeans array_to_vector conversion (and the
-    # kernel's np.stack) would crash on the first NULL.
+    # Without this filter the kernel's np.stack would crash on the first
+    # NULL.
     df = df.filter(F.col(vector_col).isNotNull())
 
-    assign = cluster_topics(
-        df, k=k, vector_col=vector_col, id_col=id_col, seed=seed, fit_fraction=fit_fraction
-    ).withColumnRenamed("topic_id", "cluster_id")
+    assign = cluster_topics(df, k=k, vector_col=vector_col, id_col=id_col, seed=seed)
+    assign = assign.withColumnRenamed("topic_id", "cluster_id")
     codes = lsh_bucket_ids(df, dims, bits=sub_bits, tables=1, vector_col=vector_col,
                            id_col=id_col, seed=seed + 1).select(id_col, "bucket")
     data = (
@@ -148,12 +147,11 @@ def drop_semantic_duplicates(
     id_col: str = "vec_id",
     keep: str = "min_id",
     seed: int = 42,
-    fit_fraction: float | None = 0.5,
     max_cluster: int = 100_000,
 ) -> DataFrame:
     """df minus semantic duplicates (all columns preserved)."""
     verdicts = semantic_duplicates(
-        df, eps, k, vector_col, id_col, keep, seed, fit_fraction, max_cluster
+        df, eps, k, vector_col, id_col, keep, seed, max_cluster
     )
     keep_ids = verdicts.filter(F.col("keep")).select(id_col)
     return df.join(keep_ids, id_col, "left_semi")
@@ -167,7 +165,6 @@ def semantic_duplicate_pairs(
     id_col: str = "vec_id",
     keep: str = "min_id",
     seed: int = 42,
-    fit_fraction: float | None = 0.5,
     max_cluster: int = 100_000,
 ) -> DataFrame:
     """(id_a, id_b) pairs: each dropped row with the kept row that
@@ -177,7 +174,7 @@ def semantic_duplicate_pairs(
     (every dropped row connects to its kept suppressor; transitive chains
     share the suppressor's component)."""
     verdicts = semantic_duplicates(
-        df, eps, k, vector_col, id_col, keep, seed, fit_fraction, max_cluster
+        df, eps, k, vector_col, id_col, keep, seed, max_cluster
     )
     return verdicts.filter(~F.col("keep")).select(
         F.col("dup_of").alias("id_a"), F.col(id_col).alias("id_b")

@@ -1,5 +1,5 @@
 """Semantic topic clustering over embedding columns (SURVEY §7.7 extended
-surface): MLlib KMeans on unit-normalized vectors -> per-document topic id.
+surface): k-means on unit-normalized vectors -> per-document topic id.
 
 The same cosine<->euclidean-on-unit-vectors equivalence the IVF index uses
 (operators/ivf.py); the difference is intent — IVF materializes the
@@ -7,16 +7,15 @@ assignment as a partition layout for search pruning, this returns it as a
 column for corpus analytics (topic distributions, per-topic sampling,
 cluster-balanced training splits).
 
-At 100 TB: fit on a sample (`fit_fraction`), assign everything (one pass);
-assignment is embarrassingly parallel.
+At 100 TB: the fit is the engine's one driver k-means (operators/kmeans)
+over at most k * 256 hashed-sample rows; assignment is one codegen
+projection over every row (assign_topics_col), embarrassingly parallel.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import normalize
 
 
 def cluster_topics(
@@ -26,29 +25,18 @@ def cluster_topics(
     id_col: str = "vec_id",
     seed: int = 42,
     max_iter: int = 20,
-    fit_fraction: float | None = None,
 ) -> DataFrame:
     """(id, topic_id) for every row; deterministic under a fixed seed.
 
-    k=1 short-circuits (MLlib KMeans requires k >= 2): every row is topic
-    0 with no fit at all — the degenerate case semdedup uses to scope its
-    greedy pass to the whole corpus on small inputs."""
+    k=1 short-circuits: every row is topic 0 with no fit at all (no Spark
+    job) — the degenerate case semdedup uses to scope its greedy pass to
+    the whole corpus on small inputs."""
     if k == 1:
         return df.select(F.col(id_col), F.lit(0).alias("topic_id"))
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    from vector_search_ai_assistant_mongodbvcore_spark.operators.kmeans import fit_kmeans
 
-    normed = df.withColumn(
-        "_features", array_to_vector(normalize(F.col(vector_col).cast("array<double>")))
-    )
-    fit_input = (
-        normed.sample(fraction=fit_fraction, seed=seed)
-        if fit_fraction is not None and fit_fraction < 1.0
-        else normed
-    )
-    km = KMeans(k=k, seed=seed, maxIter=max_iter, featuresCol="_features", predictionCol="topic_id")
-    model = km.fit(fit_input)
-    return model.transform(normed).select(F.col(id_col), F.col("topic_id"))
+    topic = assign_topics_col(fit_kmeans(df, vector_col, k, seed, max_iter).tolist(), vector_col)
+    return df.select(F.col(id_col), topic.alias("topic_id"))
 
 
 def fit_topics_local(
@@ -68,8 +56,8 @@ def fit_topics_local(
     score the IDENTICAL centroid matrix. Returns k unit-space centroids
     as float64 lists.
 
-    Scale note: this is the driver-side fit for the oracle path; the
-    distributed path at 100 TB is cluster_topics(fit_fraction=...) —
+    Scale note: this is the driver-side fit for the oracle path;
+    cluster_topics fits over a hashed sample of a DataFrame instead —
     both bound the fit input, only this one is bit-replayable."""
     import numpy as np
     import pandas as pd
@@ -149,12 +137,9 @@ def topic_sizes(
     vector_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 42,
-    fit_fraction: float | None = None,
 ) -> DataFrame:
     """Topic distribution: (topic_id, n_docs), the corpus-analytics rollup.
-    `fit_fraction` samples the iterative KMeans fit (assignment still covers
-    every row) — at 100 TB the fit must never see the full table."""
-    assigned = cluster_topics(
-        df, k=k, vector_col=vector_col, id_col=id_col, seed=seed, fit_fraction=fit_fraction
-    )
+    The fit sees a bounded sample (cluster_topics); the rollup counts every
+    row."""
+    assigned = cluster_topics(df, k=k, vector_col=vector_col, id_col=id_col, seed=seed)
     return assigned.groupBy("topic_id").agg(F.count(F.lit(1)).alias("n_docs"))

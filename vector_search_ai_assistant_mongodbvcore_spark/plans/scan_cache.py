@@ -52,13 +52,15 @@ def _norm(p: str) -> str:
     return os.path.abspath(p)
 
 
-def cached_parquet(spark, *paths: str):
-    """spark.read.parquet(*paths), memoized per (session, path tuple)."""
+def cached_parquet(spark, *paths: str, schema=None):
+    """spark.read.parquet(*paths), memoized per (session, path tuple);
+    a recorded `schema` (fixed per path, not keyed) skips the footer read."""
     per_session = _CACHE.setdefault(spark, {})
     key = tuple(_norm(p) for p in paths)
     df = per_session.get(key)
     if df is None:
-        df = spark.read.parquet(*paths)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(*paths)
         per_session[key] = df
     return df
 

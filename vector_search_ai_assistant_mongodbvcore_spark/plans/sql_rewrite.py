@@ -500,11 +500,7 @@ class VectorSqlSession:
         if qvec is None:
             return None
         probes = idx.nearest_centroids(qvec, n_probe)
-        pruned = (
-            self.spark.read.parquet(os.path.join(index_path, "data"))
-            .filter(F.col("centroid_id").isin(probes))
-            .drop("centroid_id")
-        )
+        pruned = idx.data().filter(F.col("centroid_id").isin(probes)).drop("centroid_id")
         # UNIQUE view name per call: concurrent .sql() calls on the same
         # table must not resolve each other's probe sets; the view is
         # dropped right after analysis (spark.sql analyzes eagerly, so

@@ -2202,6 +2202,16 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
+def _ivf_embeddings(spark: SparkSession, sf_dir: str):
+    """The embeddings' 4-list IvfIndex, built if absent or stale: the one
+    set of build parameters the IVF queries and prewarm_indexes share."""
+    from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import IvfIndex
+
+    return IvfIndex(spark, _cache_dir(sf_dir, "ivf_embeddings")).build_if_absent(
+        _tables(spark, sf_dir)["embeddings"], vector_col="embedding", num_lists=4, seed=42
+    )
+
+
 @register(
     "ivf_search_all_probes",
     f"""
@@ -2213,8 +2223,9 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     slot=40, bench=True,
 )
 def ivf_search_all_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V4+V5: IVF index build-if-absent (sampled KMeans fit ->
-    centroid-partitioned parquet under the engine cache dir) + pruned
+    """V4+V5: IVF index build-if-absent (driver k-means over a bounded
+    hashed sample -> centroid-partitioned parquet under the engine cache
+    dir) + pruned
     search, returned LAZILY — the harness sees the real partition-pruned
     scan plan, no driver collect. Probing ALL lists makes IVF exact, so the
     brute-force SQL is a true oracle for the whole build+search path.
@@ -2222,13 +2233,7 @@ def ivf_search_all_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     The batched `ivf_search_many` (r15) serves THREE queries through the
     same build+search path in one pass, query 0 being this very vector;
     both slots stay recorded."""
-    from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import IvfIndex
-
-    t = _tables(spark, sf_dir)
-    idx = IvfIndex(spark, _cache_dir(sf_dir, "ivf_embeddings")).build_if_absent(
-        t["embeddings"], vector_col="embedding", num_lists=4, seed=42, fit_fraction=0.5
-    )
-    out = idx.search(_QV_IVF, k=10, n_probe=4, use_pandas=False, id_col="vec_id", round_scores=4)
+    out = _ivf_embeddings(spark, sf_dir).search(_QV_IVF, k=10, n_probe=4, use_pandas=False, id_col="vec_id", round_scores=4)
     return out.select("vec_id", "score")
 
 
@@ -2266,13 +2271,7 @@ def ivf_search_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     the brute-force cross-join SQL is a true oracle for the full
     build + batched-serve path (query 0 is the retired
     `ivf_search_all_probes` vector)."""
-    from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import IvfIndex
-
-    t = _tables(spark, sf_dir)
-    idx = IvfIndex(spark, _cache_dir(sf_dir, "ivf_embeddings")).build_if_absent(
-        t["embeddings"], vector_col="embedding", num_lists=4, seed=42, fit_fraction=0.5
-    )
-    return idx.search_many(
+    return _ivf_embeddings(spark, sf_dir).search_many(
         list(enumerate(_QV_IVM)), k=10, n_probe=4, use_pandas=False,
         id_col="vec_id", round_scores=4,
     )
@@ -2307,25 +2306,6 @@ def windowed_event_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Rows-only queries (no ANSI-SQL oracle: Python-UDF tokenizer, LSH
 # approximation, multimodal plumbing). Driver records rows-only checks.
 # ===========================================================================
-
-
-def ivf_search_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V4 serving path: n_probe=1 of 4 — the scan reads ONE centroid
-    partition (file-listing-time pruning). Approximate by design, so it
-    could only ever be a rows-only gate row; retired from the 50-slot
-    registry in round 6 (slot went to the oracle-paired
-    `packed_sequences`). The pruned path stays verified where it can be:
-    recall + multi-probe curve + PartitionFilters plan asserts in
-    tests/test_ivf.py, and `ivf_search_all_probes` keeps the exact-path
-    hash gate."""
-    from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import IvfIndex
-
-    t = _tables(spark, sf_dir)
-    idx = IvfIndex(spark, _cache_dir(sf_dir, "ivf_embeddings")).build_if_absent(
-        t["embeddings"], vector_col="embedding", num_lists=4, seed=42, fit_fraction=0.5
-    )
-    out = idx.search(_QV_IVF, k=10, n_probe=1, use_pandas=False, id_col="vec_id", round_scores=4)
-    return out.select("vec_id", "score")
 
 
 def _bankers_sql(x: str) -> str:
@@ -2534,7 +2514,7 @@ _SEMCON_ORACLE = """
     """
 
 
-# eager: construction runs the KMeans fit job
+# eager: construction collects the benchmark matrix (operators/decontam.py)
 @register("semantic_contamination", _SEMCON_ORACLE, slot=31, eager=True, bench=True)
 def semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space benchmark decontamination (operators/decontam.py
@@ -3189,17 +3169,14 @@ def prewarm_indexes(spark: SparkSession, sf_dir: str) -> None:
     (the reference builds its vector index once per collection,
     MongoDbService.cs:76-113, then every chat turn serves from it) — so the
     serving benchmark should measure the partition-pruned search, not a
-    one-time KMeans fit + partitioned rewrite that happens to be triggered
+    one-time k-means fit + partitioned rewrite that happens to be triggered
     by a regenerated dataset. bench.py calls this before its timed loop;
     build_if_absent makes it a metadata no-op when the caches are fresh."""
-    from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import IvfIndex
     from vector_search_ai_assistant_mongodbvcore_spark.operators.keyword_search import Bm25Index
     from vector_search_ai_assistant_mongodbvcore_spark.operators.similarity import LshIndex
 
     t = _tables(spark, sf_dir)
-    IvfIndex(spark, _cache_dir(sf_dir, "ivf_embeddings")).build_if_absent(
-        t["embeddings"], vector_col="embedding", num_lists=4, seed=42, fit_fraction=0.5
-    )
+    _ivf_embeddings(spark, sf_dir)
     LshIndex(spark, _cache_dir(sf_dir, "lsh_embeddings")).build_if_absent(
         t["embeddings"], dims=len(_QV_ANN), bits=_LSH_ANN_BITS, tables=_LSH_ANN_TABLES,
         vector_col="embedding", id_col="vec_id"

@@ -47,7 +47,6 @@ def apply_changes(
     """foreachBatch body: embed + MERGE upserts, anti-join deletes.
     Idempotent per batch (keyed merge), so streaming retries are safe."""
     embedder = embedder or HashNgramEmbedder()
-    ops = batch_df.select(op_col).distinct()
     upserts = batch_df.filter(F.col(op_col) == "upsert").drop(op_col)
     deletes = batch_df.filter(F.col(op_col) == "delete").drop(op_col)
     if upserts.isEmpty() is False:
