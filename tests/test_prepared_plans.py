@@ -53,13 +53,13 @@ def test_memoized_construct_runs_zero_jobs(spark):
 SF01_DIR = "/root/testdata/sf0.1"
 
 # Index-backed queries whose first construction still runs Spark's own
-# jobs for `spark.read.parquet` of the index directory: the footer read
-# for schema inference, plus one parallel listing job per LSH table
-# directory (each holds more bucket directories than Spark's
-# parallelPartitionDiscovery threshold). The IVF index is not here: its
-# scan reads with the schema its build recorded in meta.json. Strict: a
-# fix flips them to XPASS, which fails until the mark is removed.
-_INDEX_SCAN_JOBS = {"lsh_ann_topk", "hybrid_search_indexed", "hnsw_index_topk"}
+# jobs for `spark.read.parquet` of the index directory: one parallel
+# listing job per LSH table directory (each holds more bucket directories
+# than Spark's parallelPartitionDiscovery threshold), and the HNSW
+# segments' footer read for schema inference. IVF, LSH and BM25 read with
+# the schemas their builds recorded in meta.json, so no footer job.
+# Strict: a fix flips them to XPASS, which fails until the mark is removed.
+_INDEX_SCAN_JOBS = {"lsh_ann_topk", "hnsw_index_topk"}
 
 
 @pytest.fixture(scope="module")
@@ -262,6 +262,26 @@ def test_no_rdd_access_in_package():
         if isinstance(node, ast.Attribute) and node.attr == "rdd"
     ]
     assert not offenders, f".rdd access in the package: {offenders}"
+
+
+def test_no_session_partition_overwrite_mode_in_package():
+    """Partition overwrite mode is set per write, never on the session:
+    the session conf is shared by every thread, and while one call has it
+    flipped to dynamic, a concurrent static partitioned overwrite, such as
+    an index build, runs in dynamic mode and keeps the old build's
+    partitions beside the new ones. The session key is the full
+    `spark.sql.sources.partitionOverwriteMode`; the per-write option is
+    the bare `partitionOverwriteMode`."""
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "sources.partitionOverwriteMode" in node.value
+    ]
+    assert not offenders, f"session-level partitionOverwriteMode in the package: {offenders}"
 
 
 def test_no_mllib_clustering_in_package():

@@ -718,27 +718,21 @@ class PartitionedHnswIndex:
         (existing segments are immutable); serve-time merge sees it at
         the next call. An upsert's re-added id is NOT tombstoned in its
         new segment — tombstones are per-segment (see remove_documents)."""
-        if on_duplicate not in ("error", "skip", "trust"):
-            raise ValueError(
-                f"on_duplicate must be error|skip|trust, got {on_duplicate!r}"
-            )
+        from vector_search_ai_assistant_mongodbvcore_spark.sources.maintenance import (
+            check_duplicates,
+        )
+
         meta = self._read_meta_for_rw()
-        if on_duplicate != "trust":
-            # LIVE ids only: a tombstoned (removed) id is re-addable in
-            # every mode — the upsert contract remove_documents documents
-            existing = self._live_ids_df(meta).withColumnRenamed(meta["id_col"], id_col)
-            dups = df.select(id_col).distinct().join(existing, id_col, "left_semi")
-            if on_duplicate == "error":
-                offenders = [r[id_col] for r in dups.limit(10).collect()]
-                if offenders:
-                    raise ValueError(
-                        f"ids already indexed: {offenders!r}; "
-                        f"use on_duplicate='skip' to add only new ids"
-                    )
-            else:
-                df = df.join(dups, id_col, "left_anti")
-                if df.isEmpty():
-                    return self
+        # LIVE ids only: a tombstoned (removed) id is re-addable in every
+        # mode — the upsert contract remove_documents documents
+        df = check_duplicates(
+            df,
+            lambda: self._live_ids_df(meta).withColumnRenamed(meta["id_col"], id_col),
+            id_col,
+            on_duplicate,
+        )
+        if on_duplicate == "skip" and df.isEmpty():
+            return self
         delta = df.withColumnRenamed(id_col, meta["id_col"])
         segments = self._build_segments_df(
             delta, meta["vector_col"], meta["id_col"], meta["id_type"],

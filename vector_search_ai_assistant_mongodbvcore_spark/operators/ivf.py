@@ -43,8 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
 from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
+from vector_search_ai_assistant_mongodbvcore_spark.sources import maintenance
 
 from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search import (
     vector_search,
@@ -199,29 +199,19 @@ class IvfIndex:
             assigned = assigned.withColumn(
                 "_q8", quantize_int8(F.col(vector_col))
             ).drop(vector_col)
-        # co-locate each list before writing: without this every write task
-        # emits a sliver file into every centroid dir (tasks x lists tiny
-        # files — a listing/open bottleneck at query time). One hash
-        # partition per centroid -> one well-sized file per list locally; a
-        # real deployment scales file count per list via repartition(N, key).
-        assigned.repartition(num_lists, F.col("centroid_id")).write.mode(
-            "overwrite"
-        ).partitionBy("centroid_id").parquet(os.path.join(self.path, "data"))
-        _scan_cache.invalidate(self.spark, self.path)
+        schema = maintenance.write_partitioned(
+            self.spark, assigned, os.path.join(self.path, "data"), ["centroid_id"], "overwrite"
+        )
         buf = io.BytesIO()
         np.save(buf, centroids)
         self.plane.write_bytes(os.path.join(self.path, "centroids.npy"), buf.getvalue())
-        # what a read of data/ sees: file columns, then the partition column
-        fields = [(f.name, f.dataType) for f in assigned.schema if f.name != "centroid_id"]
-        fields.append(("centroid_id", T.IntegerType()))
-        schema = T.StructType([T.StructField(n, t) for n, t in fields])
         meta = {
             "num_lists": num_lists,
             "vector_col": vector_col,
             "seed": seed,
             "quantized": quantize,
             "fingerprint": data_fingerprint(df),
-            "schema": schema.json(),
+            "schema": schema,
         }
         if id_col in df.columns:
             # the unique id the index shortlists and reranks by — the
@@ -275,25 +265,10 @@ class IvfIndex:
         IVF maintenance contract; re-fit by rebuilding when drift warrants)
         and APPENDed into that centroid's partition. After add_documents,
         search() == a fresh build that reuses the same centroids (asserted
-        in tests). Duplicate-id guard identical to LshIndex/Bm25Index:
-        error | skip | trust."""
-        if on_duplicate not in ("error", "skip", "trust"):
-            raise ValueError(f"on_duplicate must be error|skip|trust, got {on_duplicate!r}")
+        in tests). Duplicate-id guard: maintenance.check_duplicates."""
         m = self.meta()
         vector_col = m["vector_col"]
-        data_dir = os.path.join(self.path, "data")
-        if on_duplicate != "trust":
-            existing = self.data(m).select(id_col)
-            dups = df.select(id_col).distinct().join(existing, id_col, "left_semi")
-            if on_duplicate == "error":
-                offenders = [r[id_col] for r in dups.limit(10).collect()]
-                if offenders:
-                    raise ValueError(
-                        f"ids already indexed: {offenders!r}; "
-                        f"use on_duplicate='skip' to add only new ids"
-                    )
-            else:
-                df = df.join(dups, id_col, "left_anti")
+        df = maintenance.check_duplicates(df, lambda: self.data(m), id_col, on_duplicate)
         assigned = df.withColumn(
             "centroid_id", self._assign_col(vector_col, self._centroids())
         )
@@ -314,71 +289,31 @@ class IvfIndex:
             assigned = assigned.withColumn("_q8", quantize_int8(F.col(vector_col))).drop(
                 vector_col
             )
-        assigned.repartition(F.col("centroid_id")).write.mode("append").partitionBy(
-            "centroid_id"
-        ).parquet(data_dir)
-        self.spark.catalog.refreshByPath(data_dir)
-        _scan_cache.invalidate(self.spark, self.path)
+        maintenance.write_partitioned(
+            self.spark, assigned, os.path.join(self.path, "data"), ["centroid_id"]
+        )
         return self
 
     def remove_documents(self, ids, id_col: str) -> "IvfIndex":
         """Delete vectors near-real-time: copy-on-write of exactly the
-        centroid partitions holding the doomed ids (dynamic partition
-        overwrite; an emptied partition is dropped). Unknown ids are
-        ignored; search() afterwards == a fresh build over the survivors
-        with the same centroids."""
-        ids = list(ids)
-        if not ids:
-            return self
-        data_dir = os.path.join(self.path, "data")
-        scan = self.data()
-        doomed = scan.filter(F.col(id_col).isin(ids))
-        touched = [r["centroid_id"] for r in doomed.select("centroid_id").distinct().collect()]
-        if not touched:
-            return self
-        survivors = scan.filter(
-            F.col("centroid_id").isin(touched) & ~F.col(id_col).isin(ids)
-        ).localCheckpoint(eager=True)
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "dynamic")
-        try:
-            survivors.repartition(F.col("centroid_id")).write.mode("overwrite").partitionBy(
-                "centroid_id"
-            ).parquet(data_dir)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
-        alive = {r["centroid_id"] for r in survivors.select("centroid_id").distinct().collect()}
-        for c in touched:
-            if c not in alive:
-                self.plane.remove_tree(
-                    os.path.join(data_dir, f"centroid_id={c}")
-                )
-        self.spark.catalog.refreshByPath(data_dir)
-        _scan_cache.invalidate(self.spark, self.path)
+        centroid partitions holding the doomed ids
+        (maintenance.remove_rows; an emptied partition is dropped). Unknown
+        ids are ignored; search() afterwards == a fresh build over the
+        survivors with the same centroids."""
+        maintenance.remove_rows(
+            self.spark, os.path.join(self.path, "data"), ["centroid_id"], id_col, ids,
+            self.meta()["schema"], self.plane,
+        )
         return self
 
     def compact(self, max_files_per_partition: int = 8) -> int:
         """Maintenance for the append add-path (see LshIndex.compact):
         rewrites centroid partitions whose file count reached the
         threshold; returns partitions rewritten, 0 = zero IO."""
-        from vector_search_ai_assistant_mongodbvcore_spark.sources.maintenance import (
-            compact_partitioned_dir,
+        return maintenance.compact_partitioned_dir(
+            self.spark, os.path.join(self.path, "data"), ["centroid_id"],
+            max_files_per_partition, plane=self.plane, schema=self.meta()["schema"],
         )
-
-        n = compact_partitioned_dir(
-            self.spark,
-            os.path.join(self.path, "data"),
-            ["centroid_id"],
-            max_files_per_partition,
-            plane=self.plane,
-        )
-        if n:
-            _scan_cache.invalidate(self.spark, self.path)
-        return n
 
     # ---- search ----------------------------------------------------------
     def _centroids(self) -> np.ndarray:
@@ -391,10 +326,9 @@ class IvfIndex:
 
     def data(self, meta: "dict | None" = None) -> DataFrame:
         """The data/ scan with the schema build recorded (no footer job),
-        cached per session (plans/scan_cache; every writer invalidates)."""
-        schema = T.StructType.fromJson(json.loads((meta or self.meta())["schema"]))
-        return _scan_cache.cached_parquet(
-            self.spark, os.path.join(self.path, "data"), schema=schema
+        cached per session (maintenance.read_partitioned)."""
+        return maintenance.read_partitioned(
+            self.spark, os.path.join(self.path, "data"), (meta or self.meta())["schema"]
         )
 
     def nearest_centroids(self, query: list[float], n_probe: int) -> list[int]:

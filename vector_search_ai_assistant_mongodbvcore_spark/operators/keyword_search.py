@@ -32,13 +32,14 @@ the Lucene-style ln((N - df + 0.5)/(df + 0.5) + 1), positive for every df.
 
 from __future__ import annotations
 
+import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
 from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
+from vector_search_ai_assistant_mongodbvcore_spark.sources import maintenance
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"  # lowercase alnum runs are terms
 
@@ -259,13 +260,10 @@ class Bm25Index:
 
     # ---- lifecycle -------------------------------------------------------
     def exists(self) -> bool:
-        import os
-
         return self.plane.exists(os.path.join(self.path, "meta.json"))
 
     def meta(self) -> dict:
         import json
-        import os
 
         return json.loads(self.plane.read_text(os.path.join(self.path, "meta.json")))
 
@@ -274,15 +272,16 @@ class Bm25Index:
         attempt-unique names since r13 ("terms" is the legacy default, so
         pre-r13 index dirs keep reading). Every terms read goes through
         here; _swap_terms writes a NEW name and flips the pointer."""
-        import os
-
         meta = self.meta() if meta is None else meta
         return os.path.join(self.path, meta.get("terms_dir", "terms"))
 
     def build_if_absent(self, docs: DataFrame, **kwargs) -> "Bm25Index":
+        """Build when absent, stale (fingerprint) or when meta.json has no
+        recorded directory schemas."""
         from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import data_fingerprint
 
-        if not self.exists() or self.meta().get("fingerprint") != data_fingerprint(docs):
+        m = self.meta() if self.exists() else {}
+        if "schemas" not in m or m.get("fingerprint") != data_fingerprint(docs):
             self.build(docs, **kwargs)
         return self
 
@@ -294,17 +293,19 @@ class Bm25Index:
         n_buckets: int = 64,
     ) -> "Bm25Index":
         import json
-        import os
         import uuid
 
         from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import data_fingerprint
 
         tf, dl, dfreq = self._doc_facts(docs, text_col, id_col, n_buckets)
-        tf.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(os.path.join(self.path, "postings"))
-        _scan_cache.invalidate(self.spark, self.path)
-        self._write_doc_rows(dl, id_col, n_buckets, mode="overwrite")
+        # the read schema of each directory, so no read infers one
+        schemas = {
+            "postings": maintenance.write_partitioned(
+                self.spark, tf, os.path.join(self.path, "postings"), ["bucket"], "overwrite"
+            ),
+            "docs": self._write_doc_rows(dl, id_col, n_buckets, mode="overwrite"),
+            "terms": maintenance.read_schema(dfreq, []),
+        }
         terms_name = f"terms_{uuid.uuid4().hex[:8]}"
         dfreq.write.mode("overwrite").parquet(os.path.join(self.path, terms_name))
         row = dl.agg(
@@ -322,32 +323,34 @@ class Bm25Index:
                     "text_col": text_col,
                     "terms_dir": terms_name,
                     "fingerprint": data_fingerprint(docs),
+                    "schemas": schemas,
                 }
             ),
         )
         self._sweep_orphan_terms(terms_name)
         return self
 
-    def _write_doc_rows(self, dl: DataFrame, id_col: str, n_buckets: int, mode: str):
-        import os
-
+    def _write_doc_rows(self, dl: DataFrame, id_col: str, n_buckets: int, mode: str) -> str:
         rows = dl.withColumn(
             "id_bucket", self.bucket_col(F.col(id_col).cast("string"), n_buckets)
         )
-        rows.repartition(F.col("id_bucket")).write.mode(mode).partitionBy(
-            "id_bucket"
-        ).parquet(os.path.join(self.path, "docs"))
+        return maintenance.write_partitioned(
+            self.spark, rows, os.path.join(self.path, "docs"), ["id_bucket"], mode
+        )
 
-    def _doc_rows(self) -> DataFrame:
-        import os
+    def _read(self, name: str, meta: dict) -> DataFrame:
+        """The session's scan of postings/, docs/ or (name "terms") the
+        live terms table, pinned to the schema build recorded."""
+        d = self._terms_dir(meta) if name == "terms" else os.path.join(self.path, name)
+        return maintenance.read_partitioned(self.spark, d, meta.get("schemas", {}).get(name))
 
-        docs_dir = os.path.join(self.path, "docs")
-        if not self.plane.exists(docs_dir):
+    def _doc_rows(self, meta: dict) -> DataFrame:
+        if not self.plane.exists(os.path.join(self.path, "docs")):
             raise ValueError(
                 f"{self.path} predates the docs/ table (indexed-id set); "
                 "rebuild the index to enable duplicate guards and removes"
             )
-        return self.spark.read.parquet(docs_dir)
+        return self._read("docs", meta)
 
     def _swap_terms(self, merged: DataFrame, meta: dict) -> None:
         """Replace the terms table the MVCC way (r13 — the old
@@ -360,7 +363,6 @@ class Bm25Index:
         crash after it leaves only the old dir as debris. NOTE: `meta` is
         MUTATED — the caller must persist it for the swap to take effect.
         No rename anywhere, so the rotation is object-store clean."""
-        import os
         import uuid as _uuid
 
         new_name = f"terms_{_uuid.uuid4().hex[:8]}"
@@ -371,8 +373,6 @@ class Bm25Index:
         """Best-effort reclaim of every terms table except the live one —
         superseded tables and crashed attempts alike (the legacy bare
         `terms` dir included once a named table took over)."""
-        import os
-
         try:
             names = self.plane.list_names(self.path)
         except FileNotFoundError:
@@ -405,15 +405,12 @@ class Bm25Index:
     ) -> "Bm25Index":
         """Absorb documents without touching existing postings:
 
-          * incoming ids are checked against the indexed-id table (an
-            id-bucket-PRUNED anti/semi join — the check reads only the
-            incoming ids' buckets, not the whole table); a re-add would
-            silently double-count df/dl/N and corrupt every score, so the
-            guard is on by default:
-              on_duplicate='error'  raise ValueError naming offenders
-              on_duplicate='skip'   drop already-indexed ids, add the rest
-              on_duplicate='trust'  skip the check (caller guarantees new
-                                    ids; saves the id-bucket read)
+          * incoming ids are checked against the indexed-id table
+            (maintenance.check_duplicates over an id-bucket-PRUNED read —
+            the check reads only the incoming ids' buckets, not the whole
+            table); a re-add would silently double-count df/dl/N and
+            corrupt every score, so the guard is on by default ('error';
+            'trust' saves the id-bucket read)
           * new (term, doc, tf, dl) rows APPEND into their buckets
           * the terms table merges df counts and atomically swaps
             (attempt-unique write + meta-pointer flip, see _swap_terms)
@@ -423,50 +420,30 @@ class Bm25Index:
         build over the union corpus (asserted in tests) — df/dl/N/avgdl are
         all exact integers or exact ratios of them."""
         import json
-        import os
 
-        if on_duplicate not in ("error", "skip", "trust"):
-            raise ValueError(f"on_duplicate must be error|skip|trust, got {on_duplicate!r}")
         meta = self.meta()
         n_buckets, stored_id = meta["n_buckets"], meta["id_col"]
         if id_col != stored_id:
             raise ValueError(f"index is keyed by {stored_id!r}, got {id_col!r}")
 
-        if on_duplicate != "trust":
-            incoming = docs.select(id_col).distinct().withColumn(
-                "id_bucket", self.bucket_col(F.col(id_col).cast("string"), n_buckets)
-            )
-            buckets = [
-                r["id_bucket"]
-                for r in incoming.select("id_bucket").distinct().collect()
-            ]
-            existing = self._doc_rows().filter(F.col("id_bucket").isin(buckets))
-            dups = incoming.join(existing, id_col, "left_semi")
-            if on_duplicate == "error":
-                offenders = [r[id_col] for r in dups.limit(10).collect()]
-                if offenders:
-                    raise ValueError(
-                        f"ids already indexed (re-adding would corrupt df/dl/N): "
-                        f"{offenders!r}; use on_duplicate='skip' to add only new ids"
-                    )
-            else:  # skip
-                docs = docs.join(
-                    dups.select(id_col), id_col, "left_anti"
-                )
+        def existing() -> DataFrame:
+            bucket = self.bucket_col(F.col(id_col).cast("string"), n_buckets)
+            buckets = [r[0] for r in docs.select(bucket).distinct().collect()]
+            return self._doc_rows(meta).filter(F.col("id_bucket").isin(buckets))
 
+        docs = maintenance.check_duplicates(docs, existing, id_col, on_duplicate)
         tf, dl, dfreq = self._doc_facts(docs, text_col, id_col, n_buckets)
         row = dl.agg(
             F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_tokens")
         ).collect()[0]
         if int(row["n_docs"]) == 0:
             return self  # nothing new to add
-        tf.repartition(F.col("bucket")).write.mode("append").partitionBy(
-            "bucket"
-        ).parquet(os.path.join(self.path, "postings"))
-        _scan_cache.invalidate(self.spark, self.path)
+        maintenance.write_partitioned(
+            self.spark, tf, os.path.join(self.path, "postings"), ["bucket"]
+        )
         self._write_doc_rows(dl, id_col, n_buckets, mode="append")
 
-        old = self.spark.read.parquet(self._terms_dir(meta))
+        old = self._read("terms", meta)
         merged = (
             old.unionByName(dfreq)
             .groupBy("term")
@@ -489,44 +466,31 @@ class Bm25Index:
         appends into; the terms table is swap-rewritten wholesale on
         every add and needs no compaction). Returns total partitions
         rewritten, 0 = zero IO; search() is unchanged."""
-        import os
-
-        from vector_search_ai_assistant_mongodbvcore_spark.sources.maintenance import (
-            compact_partitioned_dir,
+        schemas = self.meta().get("schemas", {})
+        return sum(
+            maintenance.compact_partitioned_dir(
+                self.spark, os.path.join(self.path, name), [col],
+                max_files_per_partition, plane=self.plane, schema=schemas.get(name),
+            )
+            for name, col in (("postings", "bucket"), ("docs", "id_bucket"))
         )
-
-        n = compact_partitioned_dir(
-            self.spark,
-            os.path.join(self.path, "postings"),
-            ["bucket"],
-            max_files_per_partition,
-            plane=self.plane,
-        )
-        n += compact_partitioned_dir(
-            self.spark,
-            os.path.join(self.path, "docs"),
-            ["id_bucket"],
-            max_files_per_partition,
-            plane=self.plane,
-        )
-        if n:
-            _scan_cache.invalidate(self.spark, self.path)
-        return n
 
     def remove_documents(self, ids: Sequence) -> "Bm25Index":
         """Delete indexed documents near-real-time — the keyword twin of the
         reference's delete path (AddRemoveData.cs:23-125 'remove' action →
         MongoDbService.DeleteProductAsync, immediately unsearchable):
 
-          1. the removed docs' postings are found with one scan of the
-             postings table (predicate-pushed on id); the TERM-buckets they
-             occupy are rewritten copy-on-write via dynamic partition
-             overwrite — untouched buckets' files are never rewritten
-          2. the docs table drops the ids the same way (id-bucket COW —
-             pruned to the removed ids' buckets)
-          3. per-term df decrements merge into the terms table (atomic
-             swap); terms with df=0 drop out
-          4. n_docs/total_tokens decrement in meta (avgdl stays exact)
+          1. the removed docs' (count, length) come from the docs table,
+             read pruned to the removed ids' buckets; none indexed: no-op
+          2. per-term df decrements of their postings merge into a new
+             terms table (attempt-unique write, _swap_terms); terms with
+             df=0 drop out. Written first, since it reads the postings
+             the next step rewrites
+          3. postings and docs drop the ids copy-on-write
+             (maintenance.remove_rows): only the TERM-buckets and
+             id-buckets holding them are rewritten
+          4. n_docs/total_tokens decrement in meta, whose put flips the
+             terms pointer (avgdl stays exact)
 
         After remove_documents, search() is IDENTICAL to a fresh build over
         the surviving corpus (asserted in tests). Unknown ids are ignored.
@@ -535,55 +499,29 @@ class Bm25Index:
         a handful of partitions for a handful of docs — plus the vocabulary-
         sized terms swap; never a full-index rewrite."""
         import json
-        import os
 
         meta = self.meta()
         n_buckets, id_col = meta["n_buckets"], meta["id_col"]
         ids = list(ids)
         if not ids:
             return self
-        spark = self.spark
-
-        postings_dir = os.path.join(self.path, "postings")
-        postings = spark.read.parquet(postings_dir)
-        doomed = postings.filter(F.col(id_col).isin(ids))
-        touched = [r["bucket"] for r in doomed.select("bucket").distinct().collect()]
-        if not touched:
-            return self  # none of the ids are indexed
-
-        # per-term df decrements + removed dl totals, MATERIALIZED before the
-        # rewrite (their lineage reads the files the COW replaces)
-        dec = doomed.groupBy("term").agg(
-            F.count(F.lit(1)).alias("dec")
-        ).localCheckpoint(eager=True)
+        id_buckets = F.col("id_bucket").isin(
+            sorted({self.bucket_py(str(i), n_buckets) for i in ids})
+        )
         gone = (
-            doomed.select(id_col, "dl").dropDuplicates([id_col])
+            self._doc_rows(meta).filter(id_buckets & F.col(id_col).isin(ids))
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("toks"))
             .collect()[0]
         )
+        if not gone["n"]:
+            return self  # none of the ids are indexed
 
-        # COW: rewrite ONLY the touched term-buckets, minus the doomed rows.
-        # localCheckpoint cuts the lineage from the files being overwritten
-        # (a write can't read its own target); dynamic partition overwrite
-        # leaves untouched buckets' files alone. A touched bucket whose rows
-        # are ALL doomed is absent from the written frame — dynamic
-        # overwrite won't rewrite it, so its directory is dropped explicitly.
-        survivors = postings.filter(
-            F.col("bucket").isin(touched) & ~F.col(id_col).isin(ids)
-        ).localCheckpoint(eager=True)
-        self._cow_partitions(postings_dir, survivors, "bucket", touched)
-
-        docs_dir = os.path.join(self.path, "docs")
-        doc_rows = spark.read.parquet(docs_dir)
-        id_buckets = sorted({self.bucket_py(str(i), n_buckets) for i in ids})
-        doc_survivors = doc_rows.filter(
-            F.col("id_bucket").isin(id_buckets) & ~F.col(id_col).isin(ids)
-        ).localCheckpoint(eager=True)
-        self._cow_partitions(docs_dir, doc_survivors, "id_bucket", id_buckets)
-
-        old = spark.read.parquet(self._terms_dir(meta))
+        dec = (
+            self._read("postings", meta).filter(F.col(id_col).isin(ids))
+            .groupBy("term").agg(F.count(F.lit(1)).alias("dec"))
+        )
         merged = (
-            old.join(F.broadcast(dec), "term", "left")
+            self._read("terms", meta).join(F.broadcast(dec), "term", "left")
             .select(
                 "term",
                 (F.col("df") - F.coalesce(F.col("dec"), F.lit(0))).alias("df"),
@@ -591,6 +529,13 @@ class Bm25Index:
             .filter(F.col("df") > 0)
         )
         self._swap_terms(merged, meta)
+        for name, col, within in (
+            ("postings", "bucket", None), ("docs", "id_bucket", id_buckets)
+        ):
+            maintenance.remove_rows(
+                self.spark, os.path.join(self.path, name), [col], id_col, ids,
+                meta.get("schemas", {}).get(name), self.plane, within,
+            )
 
         meta["n_docs"] = int(meta["n_docs"]) - int(gone["n"])
         meta["total_tokens"] = int(meta["total_tokens"]) - int(gone["toks"] or 0)
@@ -599,34 +544,6 @@ class Bm25Index:
         )
         self._sweep_orphan_terms(meta["terms_dir"])
         return self
-
-    def _cow_partitions(
-        self, path: str, survivors: DataFrame, part_col: str, touched: Sequence[int]
-    ) -> None:
-        """Copy-on-write of exactly `touched` partitions: dynamic partition
-        overwrite rewrites the partitions present in `survivors`; touched
-        partitions with NO survivors are deleted outright."""
-        import os
-
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "dynamic")
-        try:
-            survivors.repartition(F.col(part_col)).write.mode("overwrite").partitionBy(
-                part_col
-            ).parquet(path)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
-        alive = {r[part_col] for r in survivors.select(part_col).distinct().collect()}
-        for b in touched:
-            if b not in alive:
-                self.plane.remove_tree(os.path.join(path, f"{part_col}={b}"))
-        # drop the now-stale cached file listing for the rewritten path
-        self.spark.catalog.refreshByPath(path)
-        _scan_cache.invalidate(self.spark, path)
 
     # ---- serving ---------------------------------------------------------
     def search(
@@ -646,22 +563,17 @@ class Bm25Index:
         `round_scores` quantizes bm25 BEFORE the top-k cut (desc score,
         asc id) so an external oracle ranking on rounded scores selects the
         identical candidate set — same contract as vector_search."""
-        import os
-
         meta = self.meta()
         terms = list(dict.fromkeys(query_terms))
         n_b = meta["n_buckets"]
         buckets = sorted({self.bucket_py(t, n_b) for t in terms})
         id_col = meta["id_col"]
         scan = (
-            _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "postings"))
+            self._read("postings", meta)
             .filter(F.col("bucket").isin(buckets))
             .filter(F.col("term").isin(terms))
         )
-        dfreq = (
-            _scan_cache.cached_parquet(self.spark, self._terms_dir(meta))
-            .filter(F.col("term").isin(terms))
-        )
+        dfreq = self._read("terms", meta).filter(F.col("term").isin(terms))
         scan = scan.join(F.broadcast(dfreq), "term")
         n_docs = float(meta["n_docs"])
         avgdl = float(meta["total_tokens"]) / max(n_docs, 1.0)
@@ -699,8 +611,6 @@ class Bm25Index:
         `queries` = small DataFrame with (query_id, query_terms) columns
         (terms array<string>, pre-tokenized with tokenize_query) or a
         sequence of (id, terms) pairs."""
-        import os
-
         from vector_search_ai_assistant_mongodbvcore_spark.operators.batch_serving import (
             collect_query_batch,
             topk_per_query,
@@ -723,14 +633,11 @@ class Bm25Index:
         buckets = sorted({self.bucket_py(t, n_b) for t in all_terms})
         routing = local_frame(self.spark, route_rows, f"query_id {qid_type}, term string")
         scan = (
-            _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "postings"))
+            self._read("postings", meta)
             .filter(F.col("bucket").isin(buckets))
             .filter(F.col("term").isin(all_terms))
         )
-        dfreq = (
-            _scan_cache.cached_parquet(self.spark, self._terms_dir(meta))
-            .filter(F.col("term").isin(all_terms))
-        )
+        dfreq = self._read("terms", meta).filter(F.col("term").isin(all_terms))
         scan = scan.join(F.broadcast(dfreq), "term").join(
             F.broadcast(routing), "term"
         )

@@ -22,6 +22,7 @@ several hash tables), the standard random-hyperplane construction (Charikar).
 
 from __future__ import annotations
 
+import os
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -33,8 +34,8 @@ from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
     cosine_similarity,
     stack_vectors,
 )
-from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
 from vector_search_ai_assistant_mongodbvcore_spark.session import local_frame
+from vector_search_ai_assistant_mongodbvcore_spark.sources import maintenance
 
 
 def knn_candidates(
@@ -310,13 +311,12 @@ class LshIndex:
 
         self.spark = spark
         self.path = path
+        self.data_dir = os.path.join(path, "data")
         # r13: metadata + partition cleanup run on the data-plane seam
         # so the index tablespace shares the tables' storage universe
         self.plane = dataplane if dataplane is not None else _mt._DEFAULT_DATAPLANE
 
     def _meta_file(self) -> str:
-        import os
-
         return os.path.join(self.path, "meta.json")
 
     def exists(self) -> bool:
@@ -326,12 +326,14 @@ class LshIndex:
         """Create-if-missing OR stale (stored data fingerprint no longer
         matches `df` — see ivf.data_fingerprint): a regenerated dataset
         under the same path must force a rebuild, not silently serve the
-        old corpus."""
+        old corpus. A meta.json with no recorded data/ schema is stale
+        too."""
         from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import (
             data_fingerprint,
         )
 
-        if not self.exists() or self.meta().get("fingerprint") != data_fingerprint(df):
+        m = self.meta() if self.exists() else {}
+        if "schema" not in m or m.get("fingerprint") != data_fingerprint(df):
             self.build(df, **build_kwargs)
         return self
 
@@ -356,7 +358,6 @@ class LshIndex:
         on unit vectors, see tests) — pass `exact_source` to search() to
         re-rank a shortlist at full precision."""
         import json
-        import os
 
         # one pandas-UDF hash pass, exploded to (table, bucket) rows
         bucketed = lsh_bucket_ids(df, dims, bits, tables, vector_col, id_col, seed)
@@ -369,15 +370,12 @@ class LshIndex:
             data = data.withColumn("_q8", quantize_int8(F.col(vector_col))).drop(
                 vector_col
             )
-        # co-locate buckets before the partitioned write — otherwise every
-        # task writes a sliver into every bucket dir (tasks x buckets tiny
-        # files). Default shuffle partitioning: each (table, bucket) combo
-        # hashes to exactly ONE partition (one file per dir) while write
-        # parallelism stays at the full partition count, not `tables`.
-        data.repartition(F.col("table"), F.col("bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("table", "bucket").parquet(os.path.join(self.path, "data"))
-        _scan_cache.invalidate(self.spark, self.path)
+        # default shuffle partitioning: each (table, bucket) combo hashes to
+        # exactly ONE partition (one file per dir) while write parallelism
+        # stays at the full partition count, not `tables`
+        schema = maintenance.write_partitioned(
+            self.spark, data, self.data_dir, ["table", "bucket"], "overwrite"
+        )
         from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import (
             data_fingerprint,
         )
@@ -394,6 +392,7 @@ class LshIndex:
                     "seed": seed,
                     "quantized": quantize,
                     "fingerprint": data_fingerprint(df),
+                    "schema": schema,
                 }
             ),
         )
@@ -404,6 +403,13 @@ class LshIndex:
 
         return json.loads(self.plane.read_text(self._meta_file()))
 
+    def data(self, meta: "dict | None" = None) -> DataFrame:
+        """The data/ scan pinned to the schema build recorded (no footer
+        job), cached per session (maintenance.read_partitioned)."""
+        return maintenance.read_partitioned(
+            self.spark, self.data_dir, (meta or self.meta()).get("schema")
+        )
+
     def add_documents(self, df: DataFrame, on_duplicate: str = "error") -> "LshIndex":
         """Absorb new vectors near-real-time — the ANN twin of the
         reference's add path (AddRemoveData.cs 'add' → upsert → immediately
@@ -413,33 +419,14 @@ class LshIndex:
         search() is IDENTICAL to a fresh build over the union corpus
         (asserted in tests), with no rescoring caveats.
 
-        Duplicate-id guard (a re-added id would surface twice in candidate
-        reads and double its vector's storage):
-          on_duplicate='error'  raise naming offenders
-          on_duplicate='skip'   add only unseen ids
-          on_duplicate='trust'  skip the check (saves an id-column scan of
-                                the index; the scan is column-pruned, but
-                                at warehouse scale keep a doc-id side
-                                table as Bm25Index does and trust here)."""
-        import os
-
-        if on_duplicate not in ("error", "skip", "trust"):
-            raise ValueError(f"on_duplicate must be error|skip|trust, got {on_duplicate!r}")
+        Duplicate-id guard (maintenance.check_duplicates; a re-added id
+        would surface twice in candidate reads and double its vector's
+        storage). 'trust' saves the guard's id-column scan of the index;
+        at warehouse scale keep a doc-id side table as Bm25Index does and
+        trust here."""
         m = self.meta()
         id_col, vector_col = m["id_col"], m["vector_col"]
-        data_dir = os.path.join(self.path, "data")
-        if on_duplicate != "trust":
-            existing = self.spark.read.parquet(data_dir).select(id_col)
-            dups = df.select(id_col).distinct().join(existing, id_col, "left_semi")
-            if on_duplicate == "error":
-                offenders = [r[id_col] for r in dups.limit(10).collect()]
-                if offenders:
-                    raise ValueError(
-                        f"ids already indexed: {offenders!r}; "
-                        f"use on_duplicate='skip' to add only new ids"
-                    )
-            else:
-                df = df.join(dups, id_col, "left_anti")
+        df = maintenance.check_duplicates(df, lambda: self.data(m), id_col, on_duplicate)
         bucketed = lsh_bucket_ids(
             df, m["dims"], m["bits"], m["tables"], vector_col, id_col, m["seed"]
         )
@@ -452,11 +439,7 @@ class LshIndex:
             data = data.withColumn("_q8", quantize_int8(F.col(vector_col))).drop(
                 vector_col
             )
-        data.repartition(F.col("table"), F.col("bucket")).write.mode(
-            "append"
-        ).partitionBy("table", "bucket").parquet(data_dir)
-        self.spark.catalog.refreshByPath(data_dir)
-        _scan_cache.invalidate(self.spark, self.path)
+        maintenance.write_partitioned(self.spark, data, self.data_dir, ["table", "bucket"])
         return self
 
     def remove_documents(self, ids: "Sequence") -> "LshIndex":
@@ -468,52 +451,12 @@ class LshIndex:
         over the survivors (asserted in tests). Unknown ids are ignored.
 
         Cost is O(touched partitions' rows) — each id occupies `tables`
-        partitions — never a full-index rewrite."""
-        import os
-
-        ids = list(ids)
-        if not ids:
-            return self
+        partitions — never a full-index rewrite (maintenance.remove_rows)."""
         m = self.meta()
-        id_col = m["id_col"]
-        data_dir = os.path.join(self.path, "data")
-        scan = self.spark.read.parquet(data_dir)
-        doomed = scan.filter(F.col(id_col).isin(ids))
-        touched = [
-            (r["table"], r["bucket"])
-            for r in doomed.select("table", "bucket").distinct().collect()
-        ]
-        if not touched:
-            return self
-        t_cond = F.lit(False)
-        for t, b in touched:
-            t_cond = t_cond | ((F.col("table") == t) & (F.col("bucket") == b))
-        survivors = scan.filter(t_cond & ~F.col(id_col).isin(ids)).localCheckpoint(
-            eager=True
+        maintenance.remove_rows(
+            self.spark, self.data_dir, ["table", "bucket"], m["id_col"], ids,
+            m.get("schema"), self.plane,
         )
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "dynamic")
-        try:
-            survivors.repartition(F.col("table"), F.col("bucket")).write.mode(
-                "overwrite"
-            ).partitionBy("table", "bucket").parquet(data_dir)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
-        alive = {
-            (r["table"], r["bucket"])
-            for r in survivors.select("table", "bucket").distinct().collect()
-        }
-        for t, b in touched:
-            if (t, b) not in alive:
-                self.plane.remove_tree(
-                    os.path.join(data_dir, f"table={t}", f"bucket={b}")
-                )
-        self.spark.catalog.refreshByPath(data_dir)
-        _scan_cache.invalidate(self.spark, self.path)
         return self
 
     def compact(self, max_files_per_partition: int = 8) -> int:
@@ -526,22 +469,10 @@ class LshIndex:
         rewritten (0 = zero IO). Search results are unchanged (asserted
         in tests); run it from the ingest sink (incremental.py's
         compact_every) or whenever the stream is idle."""
-        import os as _os
-
-        from vector_search_ai_assistant_mongodbvcore_spark.sources.maintenance import (
-            compact_partitioned_dir,
+        return maintenance.compact_partitioned_dir(
+            self.spark, self.data_dir, ["table", "bucket"], max_files_per_partition,
+            plane=self.plane, schema=self.meta().get("schema"),
         )
-
-        n = compact_partitioned_dir(
-            self.spark,
-            _os.path.join(self.path, "data"),
-            ["table", "bucket"],
-            max_files_per_partition,
-            plane=self.plane,
-        )
-        if n:
-            _scan_cache.invalidate(self.spark, self.path)
-        return n
 
     def search(
         self,
@@ -559,11 +490,9 @@ class LshIndex:
         source is semi-joined on that tiny broadcast id set and rescored
         exactly. At warehouse scale keep the source bucketed/sorted by id
         so the semi join prunes instead of scanning."""
-        import os
-
         m = self.meta()
         q_codes = _query_codes(query, m["bits"], m["tables"], m["seed"])
-        scan = _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "data"))
+        scan = self.data(m)
         cond = F.lit(False)
         for t, c in enumerate(q_codes):
             cond = cond | ((F.col("table") == t) & (F.col("bucket") == c))
@@ -629,8 +558,6 @@ class LshIndex:
         or a sequence of (id, vector) pairs.  `exact_source` reranks each
         query's k*expand int8 shortlist at full precision in ONE join,
         as in IvfIndex.search_many."""
-        import os
-
         from vector_search_ai_assistant_mongodbvcore_spark.operators.batch_serving import (
             collect_query_batch,
             finish_scores,
@@ -657,7 +584,7 @@ class LshIndex:
             f"query_id {qid_type}, table int, bucket int, _qvec array<double>",
         )
         hit_parts = {(t, c) for _, t, c, _ in route_rows}
-        scan = _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "data"))
+        scan = self.data(m)
         cond = F.lit(False)
         for t, c in sorted(hit_parts):
             cond = cond | ((F.col("table") == t) & (F.col("bucket") == c))

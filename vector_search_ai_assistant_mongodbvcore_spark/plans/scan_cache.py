@@ -13,12 +13,11 @@ DataFrames are immutable lazy plans, so a cached handle never caches
 Invalidation: a cached handle pins the file listing made at read time, so
 any WRITE under an index path must drop that path's entries —
 `invalidate(spark, path)` drops every cached scan whose path starts with
-the given prefix. Index mutators (build / add_documents /
-remove_documents / compact / terms rotation) call it right where they
-already call `catalog.refreshByPath`. Keys are resolved absolute paths,
-so dir-name reuse after a remove/rebuild is covered by the mutator's
-invalidate call, not by mtime sniffing (object stores have no reliable
-dir mtimes).
+the given prefix. The index directories' writers (sources/maintenance.py:
+build, add, remove, compact) call it beside `catalog.refreshByPath`. Keys
+are resolved absolute paths, so dir-name reuse after a remove/rebuild is
+covered by the mutator's invalidate call, not by mtime sniffing (object
+stores have no reliable dir mtimes).
 """
 
 from __future__ import annotations

@@ -18,6 +18,26 @@ makes each batch O(touched buckets)).
 
 Change record convention: the source rows carry an `_op` column
 ("upsert" | "delete"); everything else is the document.
+
+Staging: each foreachBatch body first collects the batch's (op, id)
+pairs once (`_stage`). That one collect says whether there is anything
+to upsert or delete and supplies the id lists; the frames are re-read
+from the batch only for the upsert documents (the embed) and the
+table-side delete.
+
+Delete wins: a key both upserted and deleted in one batch ends absent.
+apply_changes merges, then deletes. The index bodies run ONE removal
+over the upsert ids and the delete ids together (an upsert replaces the
+id's rows), then add only the upserts whose id the batch does not also
+delete.
+
+Crash window: nothing spans the table and the index. The catalog
+(apply_changes) and each index (apply_index_changes /
+apply_keyword_index_changes) commit separately, and within an index the
+removal commits before the add. A crash between them leaves the
+upserted ids absent from the index (not stale) until the batch is
+replayed; replaying a batch is idempotent, so the streaming checkpoint
+repairs it.
 """
 
 from __future__ import annotations
@@ -36,6 +56,34 @@ from vector_search_ai_assistant_mongodbvcore_spark.sources.managed_table import 
 )
 
 
+def _stage(batch_df: DataFrame, id_col: str, op_col: str):
+    """(upsert ids, delete ids) of a change batch, each deduplicated in
+    batch order, from one collect of (op, id)."""
+    ups: dict = {}
+    dels: dict = {}
+    for op, key in batch_df.select(op_col, id_col).collect():
+        if op == "upsert":
+            ups[key] = None
+        elif op == "delete":
+            dels[key] = None
+    return list(ups), list(dels)
+
+
+def _remove_staged(index, batch_df: DataFrame, id_col: str, op_col: str, id_kw: dict):
+    """The index bodies' shared step: ONE remove_documents(ids, **id_kw)
+    over the batch's upsert and delete ids, then the upsert documents
+    left to add (those whose id the batch does not also delete), or None."""
+    ups, dels = _stage(batch_df, id_col, op_col)
+    if ups or dels:
+        index.remove_documents(list(dict.fromkeys(ups + dels)), **id_kw)
+    if not set(ups) - set(dels):
+        return None
+    upserts = batch_df.filter(F.col(op_col) == "upsert")
+    if dels:
+        upserts = upserts.filter(~F.col(id_col).isin(dels))
+    return upserts.drop(op_col)
+
+
 def apply_changes(
     table: ManagedTable,
     batch_df: DataFrame,
@@ -44,17 +92,18 @@ def apply_changes(
     vector_col: str = "vector",
     op_col: str = "_op",
 ) -> None:
-    """foreachBatch body: embed + MERGE upserts, anti-join deletes.
-    Idempotent per batch (keyed merge), so streaming retries are safe."""
+    """foreachBatch body: embed + MERGE upserts, then anti-join deletes
+    (delete wins). Idempotent per batch (keyed merge), so streaming
+    retries are safe."""
     embedder = embedder or HashNgramEmbedder()
-    upserts = batch_df.filter(F.col(op_col) == "upsert").drop(op_col)
-    deletes = batch_df.filter(F.col(op_col) == "delete").drop(op_col)
-    if upserts.isEmpty() is False:
+    ups, dels = _stage(batch_df, keys[0], op_col)  # only emptiness is read
+    if ups:
+        upserts = batch_df.filter(F.col(op_col) == "upsert").drop(op_col)
         doc_text = serialize_document(upserts, exclude=(vector_col, op_col))
         embedded = upserts.withColumn(vector_col, embedder.udf()(doc_text))
         table.merge(embedded, keys)
-    if deletes.isEmpty() is False:
-        table.delete_by_keys(deletes, keys)
+    if dels:
+        table.delete_by_keys(batch_df.filter(F.col(op_col) == "delete").drop(op_col), keys)
 
 
 def start_change_stream(
@@ -107,8 +156,9 @@ def apply_index_changes(
     """foreachBatch body maintaining a SERVING INDEX (LshIndex) instead of
     a table: upserts re-embed the document text and replace the id's index
     rows (remove-then-add — exact upsert semantics, no duplicate
-    candidates); deletes remove. This closes the reference's near-real-time
-    loop at the index layer: a change record is searchable from the
+    candidates); deletes remove (the module docstring has staging and
+    delete-wins). This closes the reference's near-real-time loop at the
+    index layer: a change record is searchable from the
     partition-pruned index at the next micro-batch commit, mirroring how
     the reference's upsert is immediately visible to $search
     (AddRemoveData.cs + MongoDbService.UpsertProductAsync).
@@ -130,22 +180,14 @@ def apply_index_changes(
     stored_id = m.get("id_col", id_col)
     takes_id = "id_col" in inspect.signature(index.remove_documents).parameters
     id_kw = {"id_col": stored_id} if takes_id else {}
-    upserts = batch_df.filter(F.col(op_col) == "upsert").drop(op_col)
-    deletes = batch_df.filter(F.col(op_col) == "delete").drop(op_col)
-    if upserts.isEmpty() is False:
-        doc_text = serialize_document(
-            upserts, exclude=(vector_col, op_col, *text_exclude)
-        )
+    upserts = _remove_staged(index, batch_df, id_col, op_col, id_kw)
+    if upserts is not None:
+        doc_text = serialize_document(upserts, exclude=(vector_col, *text_exclude))
         up_rows = upserts.select(
             F.col(id_col).alias(stored_id),
             embedder.udf()(doc_text).cast("array<float>").alias(vector_col),
         )
-        ids = [r[stored_id] for r in up_rows.select(stored_id).distinct().collect()]
-        index.remove_documents(ids, **id_kw)
         index.add_documents(up_rows, on_duplicate="trust", **id_kw)
-    if deletes.isEmpty() is False:
-        ids = [r[id_col] for r in deletes.select(id_col).distinct().collect()]
-        index.remove_documents(ids, **id_kw)
 
 
 def start_index_change_stream(
@@ -202,26 +244,16 @@ def apply_keyword_index_changes(
     """foreachBatch body maintaining a Bm25Index: upserts re-serialize the
     document text and replace the id's postings (remove-then-add keeps
     df/dl/N exact — the add can 'trust' because the remove just cleared
-    those ids); deletes remove. The keyword twin of apply_index_changes,
-    so a change stream can keep BOTH retrieval legs of hybrid serving
-    fresh from the same records."""
-    m = index.meta()
-    stored_id = m["id_col"]
-    upserts = batch_df.filter(F.col(op_col) == "upsert").drop(op_col)
-    deletes = batch_df.filter(F.col(op_col) == "delete").drop(op_col)
-    if upserts.isEmpty() is False:
-        exclude = (op_col,) if text_cols is None else ()
+    those ids); deletes remove in the same one removal. The keyword twin
+    of apply_index_changes, so a change stream can keep BOTH retrieval
+    legs of hybrid serving fresh from the same records."""
+    stored_id = index.meta()["id_col"]
+    upserts = _remove_staged(index, batch_df, id_col, op_col, {})
+    if upserts is not None:
         text = (
-            serialize_document(upserts, exclude=exclude)
+            serialize_document(upserts, exclude=())
             if text_cols is None
             else F.concat_ws(" ", *[F.col(c) for c in text_cols])
         )
-        rows = upserts.select(
-            F.col(id_col).alias(stored_id), text.alias("text")
-        )
-        ids = [r[stored_id] for r in rows.select(stored_id).distinct().collect()]
-        index.remove_documents(ids)
+        rows = upserts.select(F.col(id_col).alias(stored_id), text.alias("text"))
         index.add_documents(rows, text_col="text", id_col=stored_id, on_duplicate="trust")
-    if deletes.isEmpty() is False:
-        ids = [r[id_col] for r in deletes.select(id_col).distinct().collect()]
-        index.remove_documents(ids)
